@@ -64,10 +64,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {name: fn for name, (fn, _) in REGISTRY.items()}
+    """Every registry query with an oracle, driver window first (the
+    oracle-less sketch arms are bench-only)."""
+    return {name: q.fn for name, q in REGISTRY.items() if q.sql is not None}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL mirror for each oracle-checkable query."""
-    return {name: sql for name, (_, sql) in REGISTRY.items() if sql is not None}
+    """DuckDB-runnable ANSI SQL mirror for each ``queries()`` entry."""
+    return {name: q.sql for name, q in REGISTRY.items() if q.sql is not None}

@@ -1,6 +1,6 @@
-"""Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"""Benchmark harness — runs the registry rows flagged ``bench=True`` at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
+and prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Execution is forced with the no-op sink (df.write.format("noop")) so timing
@@ -17,240 +17,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from qcfractal_spark.queries import BENCH_ONLY, REGISTRY
+from qcfractal_spark.queries import REGISTRY
 from qcfractal_spark.session import build_session
-
-
-def bench_fn(name: str):
-    """Resolve a bench name to its query fn.
-
-    r16 (VERDICT r15 item 1): the three sketch-only arms
-    (a19_approx_distinct / a22_approx_quantiles / a24_heavy_hitters) moved
-    out of REGISTRY into BENCH_ONLY — their sketch values have no replayable
-    SQL oracle, so leaving them in ``queries()`` made the driver's
-    correctness window fail them with ``no_oracle`` whenever it sampled
-    them.  The benched names and plans are unchanged; their correctness
-    invariants stay pinned by the hash-green ``*_gate`` REGISTRY arms."""
-    if name in REGISTRY:
-        return REGISTRY[name][0]
-    return BENCH_ONLY[name]
-
-# Headline set: one per operator family, weighted toward the shuffle-heavy
-# and scan-heavy shapes that dominate at scale.
-BENCH_QUERIES = [
-    "h1_pricing_summary",   # full lineitem scan + multi-agg
-    "h3_top_revenue",       # 3-way join + agg + top-k
-    "p2_p3_filter_page",    # filter + keyset page (TakeOrdered)
-    "a6_access_summary",    # group-by + exact percentiles
-    "a8_status_gate",       # collect_list gates
-    "a9_argmin",            # window argmin per group
-    "a10_map_agg",          # map aggregation
-    "o2_priority_topk",     # per-group top-k
-    "w1_window_lag",        # analytic windows
-    "t3_hourly_rollup",     # tumbling-window rollup
-    "j8_closure",           # iterative graph closure
-    "j10_count_join",       # outer join + coalesce counts
-    "a14_pivot",            # matrix pivot
-    "dd_exact",             # exact dedup
-    "dd_minhash_lsh",       # MinHash+LSH candidates
-    "dd_simhash",           # SimHash signatures
-    "tx_text_stats",        # text analysis pack
-    "sim_topk",             # brute-force cosine top-k
-    "sim_lsh_topk",         # LSH-bucketed ANN
-    "sim_ivf_topk",         # IVF-bucketed ANN (index built in-query)
-    "sim_cosine_pairs",     # exact all-pairs baseline (array-native BNLJ)
-    "st_sessionize",        # session-window rollup
-    "a15_properties_df",    # multi-key pivot matrix
-    "f12_hour_percentiles", # hour buckets + exact continuous percentiles
-    "dd_cluster",           # LSH pairs → connected-components labeling
-    "j13_asof",             # as-of join (union + window carry-forward)
-    "j14_interval",         # bucketized interval join + per-left agg
-    "h6_forecast_revenue",  # single-scan filter-sum (pushdown showcase)
-    "dd_simhash_scaled",    # corpus-scaled banded Hamming pair join (r14)
-    "dd_contamination",     # 13-gram benchmark leak scan
-    "a17_group_centroid",   # group-wise embedding centroids
-    "tx_tfidf",             # TF-IDF top terms (explode + broadcast df + window)
-    "tx_unigram_lm",        # unigram-LM quality scoring (decimal-exact nll)
-    "tx_pii",               # PII scan + redaction (pure codegen regex)
-    "pk_pack",              # concat-and-chunk sequence packing
-    "tx_dsir",              # DSIR hashed-ngram importance weights
-    "tx_quality_clf",       # hashing-trick linear classifier (scan-speed)
-    "sim_pq_topk",          # product-quantization ADC top-k
-    "sim_ivfpq_topk",       # composed IVF-prune + PQ compressed scoring
-    "sim_ivf_batch_topk",   # batched multi-query ANN (one-plan serving)
-    "pk_domain_cap",        # per-domain token-budget caps (window cumsum)
-    "dd_common_ngrams",     # corpus-wide boilerplate n-gram stats
-    "dd_span_dedup",        # C4 span dedup (one fingerprint shuffle)
-    "dd_semdedup",          # SemDeDup cluster-local semantic dedup
-    "tx_bm25",              # BM25 ranked retrieval (inverted-probe shape)
-    "a18_cube_counts",      # CUBE grouping sets in one pass
-    "t8_funnel",            # ordered funnel (chained filtered min-aggs)
-    "t9_cohort_retention",  # weekly cohort retention triangle
-    "a20_salted_agg",       # two-phase salted hot-key aggregation
-    "j15_salted_join",      # salted fact-to-dim join
-    "j16_adaptive_salted",  # hot-key-only salting (measured skew)
-    "a21_histogram",        # fixed-width histogram + per-type share window
-    "a19_approx_distinct",  # HLL sketch cardinalities (sketch-only arm, r15)
-    "a22_approx_quantiles", # GK sketch quantile profile (sketch-only arm, r15)
-    "j5_one_hop",           # direct-children broadcast-semi edge join
-    "j6_membership",        # dataset-membership fact-to-record join
-    "dd_jaccard_capped",    # rare-shingle candidates (df-capped pair join)
-    "pipe_prepare",         # end-to-end prep: filter -> near-dup CC -> canon
-    "dd_winnow_capped",     # winnowing fingerprints, df-capped pair join (r14)
-    "dd_substring",         # CDC arbitrary-offset duplicate substrings
-    "v1_variant_rollup",    # VARIANT typed-property extraction + rollup
-    "u7_epoch_shuffle",     # sharded deterministic epoch shuffle
-    "u8_group_sample_k",    # exact-k per-group sample (WindowGroupLimit)
-    "dd_source_overlap",    # cross-source duplicate overlap matrix
-    "dd_minhash_estimate",  # signature-agreement Jaccard triage
-    "pk_length_buckets",    # length-bucket padding-waste report
-    "tx_doc_freq",          # document-frequency vocabulary head
-    "tx_gopher_rules",      # Gopher A1.1 quality verdicts (scan-side, r14)
-    "tx_c4_clean",          # C4 line-cleaning rewrite (scan-side, r14)
-    "dd_cluster_rep",       # quality-aware cluster representatives
-    "u9_leak_split",        # leakage-safe cluster-keyed split
-    "sim_outliers",         # per-label centroid-distance outliers
-    "h4_order_priority",    # TPC-H Q4 shape: EXISTS semi-join histogram
-    "u10_weighted_sample",  # A-Res weighted sampling (TakeOrdered race)
-    "s9_snapshot_diff",     # content-addressed snapshot diff (hash-only join)
-    "pk_sliding_windows",   # overlapping window layout (sequence+explode)
-    "t11_scd2",             # SCD2 interval build (per-entity lead window)
-    "a23_corr",             # decimal-exact correlation matrix (one scan)
-    "tx_source_kl",         # per-source KL drift (counts-derived rollups)
-    "a24_heavy_hitters",    # Misra-Gries sketch (Arrow mapInPandas; sketch-only arm, r15)
-    "sim_multiprobe_topk",  # Hamming-1 multi-probe LSH (recall knob)
-    "sim_filtered_topk",    # predicate+vector search (pushdown + topk)
-    "dd_cap_duplicates",    # duplicate capping over persisted labels
-    "u11_curriculum",       # per-source quality quartiles (ntile window)
-    "t12_islands",          # gaps-and-islands consecutive-day streaks
-    "pk_bin_pack",          # bucketed whole-doc bin packing (rank window)
-    "pk_bfd_pack",          # exact best-fit-decreasing (applyInPandas)
-    "dd_url_dedup",         # canonical-URL exact dedup (codegen regex chain)
-    "tx_domain_stats",      # per-registrable-domain corpus profile
-    "tx_phrase_hits",       # exact phrase audit (posting-list joins)
-    "a25_diversity",        # source-mix entropy/HHI report (1-row fold)
-    "u12_interleave",       # round-robin mixture schedule (rank windows)
-    "sim_hard_negatives",   # closest-non-duplicate mining (band + topk)
-    "t13_thread_assembly",  # per-session SFT thread materialization
-    "tx_pmi_bigrams",       # PMI collocation mining (phrase detection)
-    "tx_boilerplate_ratio", # per-doc duplicated-span share (df join-back)
-    "sim_index_stats",      # IVF list-health report (pruned footer scan)
-    "tx_html_extract",      # HTML main-content extraction (array codegen)
-    "tx_bigram_lm",         # interpolated bigram LM perplexity scoring
-    "tx_kn_lm",             # Kneser-Ney bigram LM (continuation backoff)
-    "tx_kn_mod",            # modified KN (count-of-count discounts)
-    "tx_bpe_merges",        # BPE merge-pair vocabulary induction (10 rounds)
-    "tx_bpe_encode",        # corpus encode + compression report (learned BPE)
-    "pipe_export",          # training-shard export verify (warm artifact)
-    "pk_site_cap",          # per-registrable-domain token cap (PSL-keyed)
-    "u13_coreset",          # greedy k-center coreset (8 argmax steps)
-    "tx_phrase_idx",        # phrase audit via persisted inverted index
-    "tx_quality_sweep",     # quality-threshold retention sweep (1 scan)
-    "tx_unigram_tok",       # unigram-LM tokenizer (3 hard-EM Viterbi rounds)
-    "tx_unigram_encode",    # pieces-per-word report under the learned vocab
-    "sim_hybrid_rrf",       # RRF hybrid retrieval (BM25 arm + cosine arm)
-    "u14_doremi",           # DoReMi domain-mixture reweighting (5 EG rounds)
-    "pipe_funnel",          # stage-retention funnel over the prep pipeline
-    "o7_serial_claim",      # serial-group claim eligibility (anti-join + topk)
-    "j2_subspec_join",      # 2-level spec chain via join-elision builder
-    "o8_waiting_reason",    # waiting-reason diagnostic (broadcast manager walk)
-    "j17_spec_chain3",      # 3-level spec chain via the N-level elision builder
-    "o9_service_replay",    # T5 service replay (1 bucket scan + queue cycles)
-    "sim_ivf_recall_eval",  # IVF probe-budget recall sweep (persisted index)
-    "o10_manager_reap",     # heartbeat reap report (groupBy + broadcast dim)
-    "tx_pr_curve",          # classifier PR curve (bucket agg + curve window)
-    "sim_pq_distortion",    # PQ quantization-health report (decimal-exact MSE)
-    "j18_project_list",     # project inventory (pre-agg counts + dim joins)
-    "o11_status_replay",    # status transition-matrix replay (CASE algebra)
-    "u15_temperature_mix",  # temperature-scaled domain mixture (sqrt powers)
-    "o12_waiting_details",  # per-manager detail strings (broadcast fan-out)
-    "s12_contributed_values",  # dataset-keyed contributed-values arrays
-    # dd_lsh_recall_eval is gate-only: it deliberately runs the QUADRATIC
-    # exact-truth join on the sample (the evaluation's cost model is the
-    # sample size knob, not the corpus); dd_jaccard/dd_minhash_lsh bench
-    # the two underlying pipelines.
-    # st_stream_urldedup / st_stream_export are gate-only like the other
-    # streaming arms (each call times a scratch landing write +
-    # availableNow stream + sink IO, not a distributed query plan).
-    # s10_compact is gate-only: the query deliberately times a 64-file
-    # scratch write + compaction rewrite + read-back (maintenance IO),
-    # not a distributed query plan.
-    # s11_schema_evolution is gate-only for the same reason: it times a
-    # scratch table build + 3 evolution commits + an insert rewrite
-    # (migration IO), not a query plan.
-    # tx_phrase_idx_incr is gate-only like dd_incremental: each call can
-    # time a scratch index build + append ahead of the probe; tx_phrase_idx
-    # benches the warm partition-pruned probe physics on the same layout.
-    # s6_delete_survivors / s7_retention_survivors / dd_incremental /
-    # dd_substring_incremental / st_session_custom — and the round-7
-    # streaming gates st_stream_span / st_stream_substring /
-    # st_stream_incremental / st_rollup_stream / st_ann_serve — are
-    # gate-only: each
-    # times a scratch write (mutation/index/stream-sink IO) ahead of the
-    # query plan; dd_minhash_lsh benches the banding/probe physics and
-    # dd_substring the CDC chunking physics.  dd_contamination_neardup is
-    # gate-only too: its signature+banding compute is exactly the
-    # dd_minhash_lsh kernel over a split corpus.
-    # dd_containment is gate-only: on this ~2k-shingle template corpus the
-    # exact shingle join is quadratic by construction (see q_dd_containment
-    # docstring); dd_winnow_capped and dd_jaccard_capped are the benched
-    # substring-dup scale paths — their UNCAPPED arms (dd_winnow,
-    # dd_jaccard) are gate-only after the sf10 decade measured the
-    # uncapped pair joins' output growing superlinearly (exponent 1.37 /
-    # quadratic) on this duplicate-rich fixture (r13 VERDICT item 1).
-    # dd_prefix_filter is gate-only for the same reason: it returns ALL
-    # >=0.8-Jaccard pairs EXACTLY, and on this template corpus that truth
-    # is itself quadratic in near-dup cluster size (32k pairs from 500
-    # docs) — prefix filtering prunes candidates vs naive all-pairs, it
-    # cannot compress the answer.  dd_minhash_lsh benches the candidate
-    # physics at scale.
-    # dd_lev_verify is gate-only too: the exact edit-distance DP over LSH
-    # candidates is the deliberately-expensive verify pass (~19s at sf0.1
-    # on this template corpus's ~3KB docs) — run rarely by design.
-    # dd_incremental_labels is gate-only like dd_incremental: each call
-    # times a corpus re-cluster + index write (the scratch-artifact build)
-    # ahead of the probe plan it exists to demonstrate.
-    # g1_pagerank is gate-only: 10 inherently-serial damped iterations
-    # (~24s at sf0.1 = ~2.4s/round of join+sum+materialize); j8_closure
-    # benches the per-round join/checkpoint physics of the same driver
-    # loop family.
-]
 
 
 def force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
-
-
-# Queries whose SEMANTICS changed since the newest recorded baseline — the
-# like-for-like regression rule compares by name, so an intentional gate
-# change reads as a regression.  Each entry names the round and the reason;
-# entries are dropped when the next driver record resets the baseline.
-INTENTIONAL_CHANGES = {
-    # r9: registrable domains are now PSL-true (map-literal lookups ×3
-    # labels) and the synthetic TLD mix widened 4→8 cases to exercise
-    # wildcard/ccTLD rules — a richer query, new ~0.7 s baseline (the old
-    # 0.17 s query had a 2-suffix regex and half the CASE branches).
-    # r10: the PSL PRIVATE section joined the default rule set (+30 map
-    # entries) and the TLD mix now routes 2 of 8 cases to
-    # .github.io/.blogspot.com private-suffix hosts — the queries got
-    # richer again (dd_url_dedup ~0.43 → ~0.51 s).
-    "dd_url_dedup": "r9 PSL-true domains + widened TLD mix; r10 private section",
-    "tx_domain_stats": "r9 PSL-true domains + widened TLD mix; r10 private section",
-    # r13: rows-only per-doc dump → invariant-oracle summary that runs BOTH
-    # packing arms (BFD + the bucketed-FFD comparison baseline) plus the
-    # per-group invariant fold — roughly the two arms' former costs added
-    # (0.65 + 0.7 → ~1.45 s at sf0.1), a richer query by design (r12
-    # VERDICT item 2).
-    "pk_bfd_pack": "r13 invariant oracle: BFD + FFD comparison arm in one query",
-    # r15 (VERDICT r14 item 1): the three sketch queries split back into
-    # benched sketch-ONLY production arms (these names) + gate-only
-    # invariant-oracle arms (a19_distinct_gate / a22_quantiles_gate /
-    # a24_heavy_hitters_gate, hash-green, never benched) — the
-    # dd_winnow/dd_winnow_capped precedent in reverse.  The benched arms
-    # only got FASTER (the exact-replay stage moved to the gates), so no
-    # regression entry is needed; this note records the semantics change
-    # for the next like-for-like baseline diff.
-}
 
 
 def is_regressed(now: float, baseline: float) -> bool:
@@ -275,21 +47,11 @@ def find_regressions(times: dict, base_queries: dict, rerun=None) -> dict:
             times[q] = min(times[q], rerun(q))
         except Exception:  # noqa: BLE001 — keep the 2-run time
             pass
-    out = {}
-    for q, t in times.items():
-        if not is_regressed(t, base_queries.get(q, 0.0)):
-            continue
-        if q in INTENTIONAL_CHANGES:
-            # visible, not silent: the record carries the reason instead
-            # of a flag, and the entry dies with the next baseline
-            out[q] = {
-                "now": t,
-                "baseline": base_queries[q],
-                "intentional": INTENTIONAL_CHANGES[q],
-            }
-        else:
-            out[q] = {"now": t, "baseline": base_queries[q]}
-    return out
+    return {
+        q: {"now": t, "baseline": base_queries[q]}
+        for q, t in times.items()
+        if is_regressed(t, base_queries.get(q, 0.0))
+    }
 
 
 def main() -> None:
@@ -301,18 +63,19 @@ def main() -> None:
     # the driver's full-suite contract is unchanged when the var is unset.
     only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     bench_queries = (
-        [q.strip() for q in only.split(",") if q.strip()] if only else BENCH_QUERIES
+        [q.strip() for q in only.split(",") if q.strip()]
+        if only
+        else [name for name, q in REGISTRY.items() if q.bench]
     )
     # Validate subset names up front (r13 ADVICE): the REGISTRY lookup
     # used to run outside the per-query try block, so one typo'd name
     # raised KeyError and zeroed the whole suite — the exact failure the
     # per-query isolation loop exists to prevent.
-    unknown = [q for q in bench_queries if q not in REGISTRY and q not in BENCH_ONLY]
+    unknown = [q for q in bench_queries if q not in REGISTRY]
     if unknown:
         raise SystemExit(
             f"SPARK_GRAFT_BENCH_QUERIES names not in the registry: {unknown}; "
-            f"valid names are the keys of __spark_entry__.queries() "
-            f"plus the BENCH_ONLY sketch arms"
+            f"valid names are the keys of qcfractal_spark.queries.REGISTRY"
         )
     # Runs per query (default 2, best-of): the sf10 spot decade uses 1 —
     # at multi-minute per-query durations the first-run JIT/footer costs
@@ -426,7 +189,7 @@ def main() -> None:
             pass
 
     for name in bench_queries:
-        fn = bench_fn(name)
+        fn = REGISTRY[name].fn
         best = float("inf")
         try:
             for _ in range(n_runs):
@@ -467,26 +230,17 @@ def main() -> None:
     regressions: dict[str, dict] = {}
     if base_name:
         def rerun(q: str) -> float:
-            fn = bench_fn(q)
             t0 = time.time()
-            force(fn(spark, sf_dir))
+            force(REGISTRY[q].fn(spark, sf_dir))
             return round(time.time() - t0, 3)
 
         regressions = find_regressions(times, base["queries"], rerun)
-        real = [q for q, r in regressions.items() if "intentional" not in r]
-        if real:
+        if regressions:
             print(
-                f"WARNING: {len(real)} queries >2x slower than "
-                f"{base_name}: {sorted(real)}",
+                f"WARNING: {len(regressions)} queries >2x slower than "
+                f"{base_name}: {sorted(regressions)}",
                 file=sys.stderr,
             )
-        for q, r in regressions.items():
-            if "intentional" in r:
-                print(
-                    f"note: {q} exceeds the {base_name} baseline by design "
-                    f"({r['intentional']})",
-                    file=sys.stderr,
-                )
 
     total = round(sum(times.values()), 3)
     out = {

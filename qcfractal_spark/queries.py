@@ -19,7 +19,7 @@ Float discipline (so value-hashes match bit-for-bit):
 from __future__ import annotations
 
 from datetime import datetime
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1682,9 +1682,6 @@ def q_dd_minhash_lsh(spark, sf_dir):
     return dd.minhash_lsh_candidates(sigs)
 
 
-
-
-
 def q_sim_topk(spark, sf_dir):
     """Brute-force cosine top-10 against the vec_id=0 query vector."""
     emb = _t(spark, sf_dir, "embeddings", fan=True)
@@ -1759,80 +1756,6 @@ def q_mm_features(spark, sf_dir):
         "decode_ok",
     )
 
-
-# --------------------------------------------------------------------------
-# registry
-# --------------------------------------------------------------------------
-
-# name -> (spark_fn, oracle_sql | None)
-REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    "s1_scan_project": (q_s1_scan_project, SQL_S1),
-    "p2_p3_filter_page": (q_p2_p3_filter_page, SQL_P2_P3),
-    "s2_bulk_get": (q_s2_bulk_get, SQL_S2),
-    "p4_tuple_in": (q_p4_tuple_in, SQL_P4),
-    "p5_json_extract": (q_p5_json_extract, SQL_P5),
-    "p7_array_overlap": (q_p7_array_overlap, SQL_P7),
-    "p8_int_or_name": (q_p8_int_or_name, SQL_P8),
-    "j1_dim_join": (q_j1_dim_join, SQL_J1),
-    "j2_subspec_join": (q_j2_subspec_join, SQL_J2),
-    "j17_spec_chain3": (q_j17_spec_chain3, SQL_J17),
-    "o7_serial_claim": (q_o7_serial_claim, SQL_O7),
-    "o8_waiting_reason": (q_o8_waiting_reason, SQL_O8),
-    "o9_service_replay": (q_o9_service_replay, SQL_O9),
-    "o10_manager_reap": (q_o10_manager_reap, SQL_O10),
-    "j18_project_list": (q_j18_project_list, SQL_J18),
-    "o11_status_replay": (q_o11_status_replay, SQL_O11),
-    "o12_waiting_details": (q_o12_waiting_details, SQL_O12),
-    "j4_semi_join": (q_j4_semi_join, SQL_J4),
-    "j9_anti_join": (q_j9_anti_join, SQL_J9),
-    "j10_count_join": (q_j10_count_join, SQL_J10),
-    "j8_closure": (q_j8_closure, SQL_J8),
-    "a2_status_counts": (q_a2_status_counts, SQL_A2),
-    "a5_two_col_counts": (q_a5_two_col_counts, SQL_A5),
-    "a6_access_summary": (q_a6_access_summary, SQL_A6),
-    "a7_json_rollup": (q_a7_json_rollup, SQL_A7),
-    "a8_status_gate": (q_a8_status_gate, SQL_A8),
-    "a9_argmin": (q_a9_argmin, SQL_A9),
-    "a10_map_agg": (q_a10_map_agg, SQL_A10),
-    "a12_weighted_sum": (q_a12_weighted_sum, SQL_A12),
-    "a14_pivot": (q_a14_pivot, SQL_A14),
-    "a16_dedup_batch": (q_a16_dedup_batch, SQL_A16),
-    "o2_priority_topk": (q_o2_priority_topk, SQL_O2),
-    "w1_window_lag": (q_w1_window_lag, SQL_W1),
-    "t3_hourly_rollup": (q_t3_hourly_rollup, SQL_T3),
-    "s4_upsert_classify": (q_s4_upsert_classify, SQL_S4),
-    "ds_missing_cells": (q_ds_missing_cells, SQL_DS_MISSING),
-    "u3_distinct": (q_u3_distinct, SQL_U3),
-    "h1_pricing_summary": (q_h1_pricing_summary, SQL_H1),
-    "h3_top_revenue": (q_h3_top_revenue, SQL_H3),
-    "tx_text_stats": (q_tx_text_stats, SQL_TX_STATS),
-    "dd_exact": (q_dd_exact, SQL_DD_EXACT),
-    "dd_jaccard": (q_dd_jaccard, SQL_DD_JACCARD),
-    "dd_simhash": (q_dd_simhash, SQL_DD_SIMHASH),
-    "dd_minhash_lsh": (q_dd_minhash_lsh, None),
-    "sim_topk": (q_sim_topk, SQL_SIM_TOPK),
-    "sim_lsh_topk": (q_sim_lsh_topk, None),
-    "mm_features": (q_mm_features, None),  # oracle attached below, after SQL_MM_FEATURES
-}
-
-# Bench-only arms (r16, VERDICT r15 item 1): query plans that the bench
-# times but that have NO replayable SQL oracle by construction (sketch
-# values are engine-specific).  They must NOT live in REGISTRY: every
-# ``__spark_entry__.queries()`` entry is driver-sampled against DuckDB, and
-# an oracle-less entry fails with ``no_oracle`` whenever the window lands on
-# it (CORRECTNESS_r15: a19/a22/a24).  Each bench-only arm has a hash-green
-# REGISTRY companion (``*_gate``) that pins its correctness invariant on the
-# same scan.  bench.py resolves names against REGISTRY first, then here, so
-# the benched names and plans are unchanged.
-BENCH_ONLY: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-
-def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: fn for name, (fn, _) in REGISTRY.items()}
-
-
-def oracle_sqls() -> dict[str, str]:
-    return {name: sql for name, (_, sql) in REGISTRY.items() if sql is not None}
 
 # --------------------------------------------------------------------------
 # coverage widening: unions, sampling, scalar pack, UDF surface, exact ANN
@@ -2127,9 +2050,6 @@ FROM counts
 """
 
 
-REGISTRY["dd_lsh_recall_eval"] = (q_dd_lsh_recall_eval, _lsh_recall_oracle_sql())
-
-
 def q_dd_contamination_neardup(spark, sf_dir):
     """DD+ (beyond-reference): NEAR-DUP benchmark decontamination — the
     MinHash-band arm beside dd_contamination's exact 13-gram scan
@@ -2157,8 +2077,6 @@ SQL_DD_CONTAM_ND = (
     + ")\nSELECT id_a AS doc_id, COUNT(DISTINCT id_b) AS n_bench_neardups\n"
     + "FROM pairs GROUP BY 1"
 )
-
-REGISTRY["dd_contamination_neardup"] = (q_dd_contamination_neardup, SQL_DD_CONTAM_ND)
 
 
 def _lsh_topk_oracle_sql() -> str:
@@ -2649,8 +2567,6 @@ FROM s a JOIN s b ON a.id < b.id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 """
 
-REGISTRY["dd_simhash_scaled"] = (q_dd_simhash_scaled, SQL_DD_SIMHASH_SCALED)
-
 
 def q_a17_group_centroid(spark, sf_dir):
     """A17 (beyond-reference): group-wise embedding centroids — per-group
@@ -2711,32 +2627,6 @@ WHERE l_shipdate >= DATE '1994-01-01' AND l_shipdate < DATE '1995-01-01'
 """
 
 
-REGISTRY.update(
-    {
-        "h6_forecast_revenue": (q_h6_forecast_revenue, SQL_H6),
-        "a17_group_centroid": (q_a17_group_centroid, SQL_A17),
-        "dd_simhash_pairs": (q_dd_simhash_pairs, SQL_DD_SIMHASH_PAIRS),
-        "dd_contamination": (q_dd_contamination, SQL_DD_CONTAM),
-        "tx_repetition": (q_tx_repetition, SQL_TX_REP),
-        "u5_stratified_sample": (q_u5_stratified_sample, SQL_U5),
-        "a4_union_counts": (q_a4_union_counts, SQL_A4),
-        "a11_sample_keys": (q_a11_sample_keys, SQL_A11),
-        "f9_content_hash": (q_f9_content_hash, SQL_F9),
-        "j12_element_at": (q_j12_element_at, SQL_J12),
-        "d1_value_call": (q_d1_value_call, SQL_D1),
-        "sim_cosine_pairs": (q_sim_cosine_pairs, SQL_SIM_PAIRS),
-        "dd_minhash_lsh": (q_dd_minhash_lsh, SQL_DD_MINHASH),
-        "sim_lsh_topk": (q_sim_lsh_topk, SQL_SIM_LSH),
-        "sim_ivf_topk": (q_sim_ivf_topk, SQL_SIM_IVF),
-        "sim_knn_join": (q_sim_knn_join, SQL_SIM_KNN),
-        "mm_features": (q_mm_features, SQL_MM_FEATURES),
-        "dd_cluster": (q_dd_cluster, SQL_DD_CLUSTER),
-        "j13_asof": (q_j13_asof, SQL_J13),
-        "j14_interval": (q_j14_interval, SQL_J14),
-    }
-)
-
-
 def q_f12_hour_percentiles(spark, sf_dir):
     """F1(hour)/F12: hour bucketing + exact continuous percentiles (the
     percentile_cont companion of a6's percentile_disc; Spark's exact
@@ -2756,8 +2646,6 @@ SELECT strftime(ts, '%Y-%m-%d %H') AS bucket,
        ROUND(quantile_cont(value, 0.9), 6) AS value_p90
 FROM events GROUP BY 1
 """
-
-REGISTRY["f12_hour_percentiles"] = (q_f12_hour_percentiles, SQL_F12)
 
 
 _A15_SPECS = ["click", "error", "purchase", "signup", "view"]
@@ -2830,8 +2718,6 @@ SELECT entry,
                 THEN CAST(json_extract_string(props, 'k') AS DOUBLE) END) AS view_k
 FROM uniq GROUP BY entry
 """
-
-REGISTRY["a15_properties_df"] = (q_a15_properties_df, SQL_A15)
 
 
 def q_s12_contributed_values(spark, sf_dir):
@@ -2927,8 +2813,6 @@ SELECT name,
        to_json(list_transform(ents, x -> x.v)) AS values_json
 FROM rolled
 """
-
-REGISTRY["s12_contributed_values"] = (q_s12_contributed_values, SQL_S12)
 
 
 def q_s13_status_mutations(spark, sf_dir):
@@ -3177,8 +3061,6 @@ SELECT rid AS record_id, st AS status, mgr AS manager_name,
 FROM b7
 """
 
-REGISTRY["s13_status_mutations"] = (q_s13_status_mutations, SQL_S13)
-
 
 def q_s18_bucketed_mutations(spark, sf_dir):
     """S18 (r15, VERDICT r14 item 6): the BUCKETED arm of the s13 status
@@ -3196,9 +3078,6 @@ def q_s18_bucketed_mutations(spark, sf_dir):
     tests/test_bucketed_mutations.py and the scale_mutations assertion;
     this gate pins the VALUES.  Gate-only (scratch IO), like s13."""
     return _s13_script(spark, sf_dir, "s18", n_buckets=8)
-
-
-REGISTRY["s18_bucketed_mutations"] = (q_s18_bucketed_mutations, SQL_S13)
 
 
 def q_s14_dataset_clone(spark, sf_dir):
@@ -3386,8 +3265,6 @@ FROM src_items WHERE ck < 40
 UNION ALL
 SELECT 'item', 3, entry_name, specification_name, record_id FROM src_items
 """
-
-REGISTRY["s14_dataset_clone"] = (q_s14_dataset_clone, SQL_S14)
 
 
 def q_s16_project_links(spark, sf_dir):
@@ -3601,8 +3478,6 @@ UNION ALL
 SELECT 'gate', NULL, 3, 'already_exists_caught', NULL
 """
 
-REGISTRY["s16_project_links"] = (q_s16_project_links, SQL_S16)
-
 
 def q_s17_molecule_modify(spark, sf_dir):
     """S17 (r15, VERDICT r14 item 3): molecule modify as a MutableTable op
@@ -3739,8 +3614,6 @@ SELECT 'ident', 13, 'pubchem_cid', '702'
 UNION ALL
 SELECT 'gate', 1, NULL, NULL
 """
-
-REGISTRY["s17_molecule_modify"] = (q_s17_molecule_modify, SQL_S17)
 
 
 def q_o13_job_lifecycle(spark, sf_dir):
@@ -3883,8 +3756,6 @@ respawn AS (
 SELECT * FROM survivors UNION ALL SELECT * FROM respawn
 """
 
-REGISTRY["o13_job_lifecycle"] = (q_o13_job_lifecycle, SQL_O13)
-
 
 def q_s15_attachments(spark, sf_dir):
     """S15 (r14, VERDICT r13 "What's missing" item 4): external-file /
@@ -3954,8 +3825,6 @@ FROM customer
 WHERE c_custkey < 500 AND c_custkey % 7 <> 0
 """
 
-REGISTRY["s15_attachments"] = (q_s15_attachments, SQL_S15)
-
 
 def q_tx_gopher_rules(spark, sf_dir):
     """TX+ (beyond-reference, r14): the Gopher A1.1 document-quality rule
@@ -4020,8 +3889,6 @@ SELECT *,
         AND ellipsis_lines_ok AND alpha_words_ok AND stopwords_ok) AS keep
 FROM r
 """
-
-REGISTRY["tx_gopher_rules"] = (q_tx_gopher_rules, SQL_TX_GOPHER)
 
 
 def q_tx_c4_clean(spark, sf_dir):
@@ -4116,8 +3983,6 @@ SELECT doc_id, cleaned_text,
 FROM c
 """
 
-REGISTRY["tx_c4_clean"] = (q_tx_c4_clean, SQL_TX_C4)
-
 
 def q_st_sessionize(spark, sf_dir):
     """Session-window rollup per user (gap 30 min) — the engine's
@@ -4163,8 +4028,6 @@ SELECT user_id,
        CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS sum_value
 FROM sess GROUP BY user_id, sid
 """
-
-REGISTRY["st_sessionize"] = (q_st_sessionize, SQL_ST_SESSION)
 
 
 def q_st_session_custom(spark, sf_dir):
@@ -4243,8 +4106,6 @@ SELECT user_id,
 FROM sess GROUP BY user_id, sid
 """
 
-REGISTRY["st_session_custom"] = (q_st_session_custom, SQL_ST_SESSION_CUSTOM)
-
 
 def q_t2_enrichment(spark, sf_dir):
     """T2: incremental high-watermark enrichment
@@ -4273,8 +4134,6 @@ SELECT e.event_id, e.user_id, l.first_seen
 FROM events e LEFT JOIN lookup l ON e.user_id = l.user_id
 WHERE e.ts > TIMESTAMP '2024-01-25 00:00:00'
 """
-
-REGISTRY["t2_enrichment"] = (q_t2_enrichment, SQL_T2)
 
 
 # --------------------------------------------------------------------------
@@ -4384,8 +4243,6 @@ SELECT p_partkey, formula_raw, formula_hill FROM (
 
 SQL_MOL_IDENTIFIERS = _sql_mol_identifiers()
 
-REGISTRY["mol_identifiers"] = (q_mol_identifiers, SQL_MOL_IDENTIFIERS)
-
 
 # --------------------------------------------------------------------------
 # A13: many-body per-level energy rollup
@@ -4430,8 +4287,6 @@ FROM (
 ) GROUP BY mc_level
 """
 
-REGISTRY["a13_manybody_levels"] = (q_a13_manybody_levels, SQL_A13)
-
 
 # --------------------------------------------------------------------------
 # DD+: winnowing fingerprints and embedding-cosine near-dup
@@ -4471,8 +4326,6 @@ FROM fp a JOIN fp b ON a.fp = b.fp AND a.id < b.id
 GROUP BY 1, 2
 HAVING COUNT(*) >= 2
 """
-
-REGISTRY["dd_winnow"] = (q_dd_winnow, SQL_DD_WINNOW)
 
 
 def q_dd_winnow_capped(spark, sf_dir):
@@ -4519,8 +4372,6 @@ FROM rare a JOIN rare b ON a.fp = b.fp AND a.id < b.id
 GROUP BY 1, 2
 HAVING COUNT(*) >= 2
 """
-
-REGISTRY["dd_winnow_capped"] = (q_dd_winnow_capped, SQL_DD_WINNOW_CAPPED)
 
 
 def q_dd_substring(spark, sf_dir):
@@ -4582,8 +4433,6 @@ SELECT k.id AS doc_id, k.chunk_start, k.chunk_len, k.chunk_fp, d.n_docs
 FROM kept k JOIN dup d USING (chunk_fp)
 """
 
-REGISTRY["dd_substring"] = (q_dd_substring, SQL_DD_SUBSTRING)
-
 
 def q_dd_substring_incremental(spark, sf_dir):
     """DD+ (beyond-reference): the incremental arm of CDC substring dedup
@@ -4615,8 +4464,6 @@ WHERE b.id % 10 = 0 AND EXISTS (
   WHERE a.chunk_fp = b.chunk_fp
     AND (a.id % 10 <> 0 OR a.id < b.id))
 """
-
-REGISTRY["dd_substring_incremental"] = (q_dd_substring_incremental, SQL_DD_SUBSTRING_INCR)
 
 
 def q_dd_embed(spark, sf_dir):
@@ -4657,8 +4504,6 @@ WHERE ROUND(list_dot_product(a.v, b2.v)
 
 
 SQL_DD_EMBED = _embed_neardup_oracle_sql()
-
-REGISTRY["dd_embed"] = (q_dd_embed, SQL_DD_EMBED)
 
 
 # --------------------------------------------------------------------------
@@ -4731,8 +4576,6 @@ SELECT doc_id, term, tf, df, tfidf, CAST(rnk AS BIGINT) AS rnk
 FROM ranked WHERE rnk <= 3
 """
 
-REGISTRY["tx_tfidf"] = (q_tx_tfidf, SQL_TX_TFIDF)
-
 
 def q_tx_unigram_lm(spark, sf_dir):
     """Unigram language-model scoring (the CCNet-style perplexity proxy for
@@ -4792,8 +4635,6 @@ SELECT tf.doc_id,
 FROM tf JOIN cf USING (term) CROSS JOIN tot
 GROUP BY tf.doc_id
 """
-
-REGISTRY["tx_unigram_lm"] = (q_tx_unigram_lm, SQL_TX_UNIGRAM)
 
 
 def q_u14_doremi(spark, sf_dir):
@@ -4910,8 +4751,6 @@ def _doremi_oracle_sql() -> str:
 
 SQL_U14_DOREMI = _doremi_oracle_sql()
 
-REGISTRY["u14_doremi"] = (q_u14_doremi, SQL_U14_DOREMI)
-
 
 def q_u15_temperature_mix(spark, sf_dir):
     """U+ (beyond-reference): temperature-scaled domain mixture — the
@@ -4998,8 +4837,6 @@ SELECT te.source, CAST(te.tau AS DOUBLE) AS tau, te.n_tokens,
 FROM terms te JOIN tots tt ON tt.tau = te.tau, nat n
 """
 
-REGISTRY["u15_temperature_mix"] = (q_u15_temperature_mix, SQL_U15)
-
 
 # Deterministic PII augmentation: the synthetic corpus contains no PII, so
 # both engines append the same derived contact block before scanning — the
@@ -5056,8 +4893,6 @@ SELECT doc_id,
 FROM aug
 """
 
-REGISTRY["tx_pii"] = (q_tx_pii, SQL_TX_PII)
-
 
 def q_pk_pack(spark, sf_dir):
     """Concat-and-chunk sequence packing (functions/packing.py): per source
@@ -5100,8 +4935,6 @@ SELECT source, doc_id, n_tokens,
 FROM cum
 """
 
-REGISTRY["pk_pack"] = (q_pk_pack, SQL_PK_PACK)
-
 
 def q_dd_common_ngrams(spark, sf_dir):
     """Boilerplate detection: the 20 most document-frequent 8-grams (per-doc
@@ -5133,8 +4966,6 @@ SELECT shingle, CAST(COUNT(*) AS BIGINT) AS df
 FROM grams GROUP BY shingle
 ORDER BY df DESC, shingle ASC LIMIT 20
 """
-
-REGISTRY["dd_common_ngrams"] = (q_dd_common_ngrams, SQL_DD_COMMON)
 
 
 def q_u6_mixture_sample(spark, sf_dir):
@@ -5232,8 +5063,6 @@ SELECT r.source, r.n_docs, r.n_tokens,
 FROM rated r LEFT JOIN sampled s ON r.source = s.source
 """
 
-REGISTRY["u6_mixture_sample"] = (q_u6_mixture_sample, SQL_U6_MIXTURE)
-
 
 def q_pk_domain_cap(spark, sf_dir):
     """Per-domain token-budget capping: within each source (doc_id order),
@@ -5272,8 +5101,6 @@ cum AS (
 )
 SELECT * FROM cum WHERE cum_tokens <= 100000
 """
-
-REGISTRY["pk_domain_cap"] = (q_pk_domain_cap, SQL_PK_DOMAIN_CAP)
 
 
 def q_sim_pq_topk(spark, sf_dir):
@@ -5377,8 +5204,6 @@ def _pq_oracle_sql(m: int = 2, ksub: int = 8, dim: int = 64, k: int = 10) -> str
 
 SQL_SIM_PQ = _pq_oracle_sql()
 
-REGISTRY["sim_pq_topk"] = (q_sim_pq_topk, SQL_SIM_PQ)
-
 
 def q_sim_pq_distortion(spark, sf_dir):
     """SIM+ (beyond-reference): PQ quantization-health report — per
@@ -5426,8 +5251,6 @@ GROUP BY subspace, code
 
 
 SQL_SIM_PQ_DISTORTION = _pq_distortion_oracle_sql()
-
-REGISTRY["sim_pq_distortion"] = (q_sim_pq_distortion, SQL_SIM_PQ_DISTORTION)
 
 
 def q_sim_ivfpq_topk(spark, sf_dir):
@@ -5480,8 +5303,6 @@ def _ivfpq_oracle_sql(n_centroids: int = 16, n_iter: int = 2, n_probe: int = 4,
 
 
 SQL_SIM_IVFPQ = _ivfpq_oracle_sql()
-
-REGISTRY["sim_ivfpq_topk"] = (q_sim_ivfpq_topk, SQL_SIM_IVFPQ)
 
 
 def q_sim_ivf_batch_topk(spark, sf_dir):
@@ -5592,8 +5413,6 @@ SELECT query_id, vec_id, score FROM (
 
 SQL_SIM_IVF_BATCH = _ivf_batch_oracle_sql()
 
-REGISTRY["sim_hard_negatives"] = (q_sim_hard_negatives, _hard_negatives_oracle_sql())
-
 
 def q_sim_index_stats(spark, sf_dir):
     """SIM+ (beyond-reference): IVF index health report — per inverted
@@ -5637,11 +5456,6 @@ SELECT cid, n_vecs,
          AS imbalance
 FROM per CROSS JOIN tot
 """
-
-
-REGISTRY["sim_index_stats"] = (q_sim_index_stats, _index_stats_oracle_sql())
-
-REGISTRY["sim_ivf_batch_topk"] = (q_sim_ivf_batch_topk, SQL_SIM_IVF_BATCH)
 
 
 # DuckDB mirror of functions.text.ngram_features over a token-list column
@@ -5748,8 +5562,6 @@ FROM c JOIN lr USING (b)
 GROUP BY c.doc_id
 """
 
-REGISTRY["tx_dsir"] = (q_tx_dsir, SQL_TX_DSIR)
-
 
 def q_tx_quality_clf(spark, sf_dir):
     """Hashing-trick linear quality classifier (the fastText-shaped filter
@@ -5809,8 +5621,6 @@ SELECT doc_id, n_feats,
 FROM s
 """
 
-REGISTRY["tx_quality_clf"] = (q_tx_quality_clf, SQL_TX_QCLF)
-
 
 def q_dd_containment(spark, sf_dir):
     """Directed 5-gram containment pairs ≥ 0.5 (functions/dedup.py:
@@ -5849,8 +5659,6 @@ JOIN sizes sa ON sa.doc_id = id_a
 WHERE ROUND(common * 1.0 / sa.n_sh, 6) >= 0.5
 """
 
-REGISTRY["dd_containment"] = (q_dd_containment, SQL_DD_CONTAIN)
-
 
 def q_dd_span_dedup(spark, sf_dir):
     """DD+ (beyond-reference): C4-style duplicated-span stats — global
@@ -5884,8 +5692,6 @@ SELECT doc_id, COUNT(*) AS n_spans,
        ROUND(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 6) AS dup_frac
 FROM r GROUP BY doc_id
 """
-
-REGISTRY["dd_span_dedup"] = (q_dd_span_dedup, SQL_DD_SPAN)
 
 
 def q_dd_semdedup(spark, sf_dir):
@@ -5969,8 +5775,6 @@ FROM afin e LEFT JOIN d ON d.vec_id = e.vec_id
 
 SQL_DD_SEMDEDUP = _semdedup_oracle_sql()
 
-REGISTRY["dd_semdedup"] = (q_dd_semdedup, SQL_DD_SEMDEDUP)
-
 
 _BM25_TERMS = ["spark", "table", "hash"]
 
@@ -6048,8 +5852,6 @@ FROM term GROUP BY doc_id
 ORDER BY bm25 DESC, doc_id ASC LIMIT 20
 """
 
-REGISTRY["tx_bm25"] = (q_tx_bm25, SQL_TX_BM25)
-
 
 def q_sim_hybrid_rrf(spark, sf_dir):
     """SIM+ (beyond-reference): HYBRID retrieval via reciprocal-rank
@@ -6124,8 +5926,6 @@ SELECT rank, id, rrf, rank_a, rank_b FROM (
 ) WHERE rank <= 15 ORDER BY rank
 """
 
-REGISTRY["sim_hybrid_rrf"] = (q_sim_hybrid_rrf, SQL_SIM_HYBRID_RRF)
-
 
 def q_a18_cube_counts(spark, sf_dir):
     """A18 (beyond-reference): CUBE rollup over (lang, source) — all four
@@ -6152,8 +5952,6 @@ SELECT lang, source,
 FROM documents GROUP BY CUBE(lang, source)
 """
 
-REGISTRY["a18_cube_counts"] = (q_a18_cube_counts, SQL_A18)
-
 
 def q_a19_approx_distinct(spark, sf_dir):
     """A19 (beyond-reference): HyperLogLog++ approximate distinct users per
@@ -6175,9 +5973,6 @@ def q_a19_approx_distinct(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.approx_count_distinct("user_id", rsd=0.01).alias("approx_users"),
     )
-
-
-BENCH_ONLY["a19_approx_distinct"] = q_a19_approx_distinct
 
 
 def q_a19_distinct_gate(spark, sf_dir):
@@ -6224,8 +6019,6 @@ SELECT event_type,
 FROM events GROUP BY event_type
 """
 
-REGISTRY["a19_distinct_gate"] = (q_a19_distinct_gate, SQL_A19)
-
 
 def q_a22_approx_quantiles(spark, sf_dir):
     """A22 (beyond-reference): sketch-based quantile profile per event type
@@ -6252,9 +6045,6 @@ def q_a22_approx_quantiles(spark, sf_dir):
         qs.getItem(1).alias("p95_approx"),
         qs.getItem(2).alias("p99_approx"),
     )
-
-
-BENCH_ONLY["a22_approx_quantiles"] = q_a22_approx_quantiles
 
 
 def q_a22_quantiles_gate(spark, sf_dir):
@@ -6316,8 +6106,6 @@ SELECT event_type,
 FROM events GROUP BY event_type
 """
 
-REGISTRY["a22_quantiles_gate"] = (q_a22_quantiles_gate, SQL_A22)
-
 
 def q_mm_phash_dedup(spark, sf_dir):
     """Multimodal dedup: perceptual-hash (dHash-style gradient bits over
@@ -6354,8 +6142,6 @@ hashes AS (
 SELECT phash, MIN(media_id) AS keep_id, COUNT(*) AS dup_count
 FROM hashes GROUP BY phash
 """
-
-REGISTRY["mm_phash_dedup"] = (q_mm_phash_dedup, SQL_MM_PHASH)
 
 
 def q_t10_incremental_rollup(spark, sf_dir):
@@ -6416,8 +6202,6 @@ SELECT event_type, COUNT(*) AS n, COUNT(value) AS n_values,
 FROM events WHERE event_id % 4 <> 0
 GROUP BY event_type
 """
-
-REGISTRY["t10_incremental_rollup"] = (q_t10_incremental_rollup, SQL_T10)
 
 
 def q_pipe_prepare(spark, sf_dir):
@@ -6587,8 +6371,6 @@ lab AS (SELECT src AS id, MIN(dst) AS mn FROM reach GROUP BY src)"""
 
 SQL_PIPE = _pipe_oracle_sql()
 
-REGISTRY["pipe_prepare"] = (q_pipe_prepare, SQL_PIPE)
-
 
 def q_pipe_funnel(spark, sf_dir, stages=None):
     """PIPE+ (beyond-reference observability): the stage-RETENTION
@@ -6677,8 +6459,6 @@ FROM stages ORDER BY stage
 
 
 SQL_PIPE_FUNNEL = _pipe_funnel_oracle_sql()
-
-REGISTRY["pipe_funnel"] = (q_pipe_funnel, SQL_PIPE_FUNNEL)
 
 
 def _train_shards_dir(spark, sf_dir: str) -> str:
@@ -6812,8 +6592,6 @@ GROUP BY shard
 
 SQL_PIPE_EXPORT = _pipe_export_oracle_sql()
 
-REGISTRY["pipe_export"] = (q_pipe_export, SQL_PIPE_EXPORT)
-
 
 def q_t8_funnel(spark, sf_dir):
     """T8 (beyond-reference): ordered funnel analysis — per user, the
@@ -6890,8 +6668,6 @@ FROM v LEFT JOIN c ON c.user_id = v.user_id
        LEFT JOIN p ON p.user_id = v.user_id
 """
 
-REGISTRY["t8_funnel"] = (q_t8_funnel, SQL_T8)
-
 
 def q_t9_cohort_retention(spark, sf_dir):
     """T9 (beyond-reference): weekly cohort retention — users grouped by
@@ -6941,8 +6717,6 @@ FROM a JOIN f USING (user_id)
 GROUP BY 1, 2
 """
 
-REGISTRY["t9_cohort_retention"] = (q_t9_cohort_retention, SQL_T9)
-
 
 def q_a20_salted_agg(spark, sf_dir):
     """A20 (beyond-reference): hot-key aggregation via explicit two-phase
@@ -6981,8 +6755,6 @@ SELECT event_type, COUNT(value) AS n, MIN(value) AS v_min, MAX(value) AS v_max,
 FROM events GROUP BY event_type
 """
 
-REGISTRY["a20_salted_agg"] = (q_a20_salted_agg, SQL_A20)
-
 
 def q_j15_salted_join(spark, sf_dir):
     """J15 (beyond-reference): skewed fact-to-dim join via deterministic
@@ -7012,8 +6784,6 @@ SELECT c.c_nationkey,
 FROM events e JOIN customer c ON c.c_custkey = e.user_id
 GROUP BY c.c_nationkey
 """
-
-REGISTRY["j15_salted_join"] = (q_j15_salted_join, SQL_J15)
 
 
 def q_j16_adaptive_salted(spark, sf_dir):
@@ -7046,8 +6816,6 @@ FROM events e JOIN customer c ON c.c_custkey = e.user_id
 GROUP BY c.c_nationkey, e.event_type
 """
 
-REGISTRY["j16_adaptive_salted"] = (q_j16_adaptive_salted, SQL_J16)
-
 
 def q_a21_histogram(spark, sf_dir):
     """A21 (beyond-reference): fixed-width value histogram per event type —
@@ -7077,8 +6845,6 @@ SELECT event_type, bin, n,
        ROUND(n * 1.0 / SUM(n) OVER (PARTITION BY event_type), 6) AS share
 FROM b
 """
-
-REGISTRY["a21_histogram"] = (q_a21_histogram, SQL_A21)
 
 
 def q_dd_lev_verify(spark, sf_dir):
@@ -7132,8 +6898,6 @@ JOIN documents a ON a.doc_id = c.id_a
 JOIN documents b ON b.doc_id = c.id_b
 """
 
-REGISTRY["dd_lev_verify"] = (q_dd_lev_verify, SQL_DD_LEV)
-
 
 def q_dd_jaccard_capped(spark, sf_dir):
     """DD (bounded-bench arm): rare-shingle candidate pairs — the 5-gram
@@ -7184,8 +6948,6 @@ JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
 """
 
-REGISTRY["dd_jaccard_capped"] = (q_dd_jaccard_capped, SQL_DD_JACCARD_CAPPED)
-
 
 def q_dd_incremental(spark, sf_dir):
     """DD (beyond-reference): incremental dedup of an ingest batch against
@@ -7210,8 +6972,6 @@ def q_dd_incremental(spark, sf_dir):
 SQL_DD_INCREMENTAL = _minhash_oracle_sql(
     pair_pred="b.id % 10 = 0 AND a.id <> b.id AND (a.id % 10 <> 0 OR a.id < b.id)"
 )
-
-REGISTRY["dd_incremental"] = (q_dd_incremental, SQL_DD_INCREMENTAL)
 
 
 def q_j5_one_hop(spark, sf_dir):
@@ -7252,8 +7012,6 @@ SELECT parent_id, child_id FROM edges
 WHERE parent_id IN (SELECT id FROM seeds)
 """
 
-REGISTRY["j5_one_hop"] = (q_j5_one_hop, SQL_J5)
-
 
 def q_j6_membership(spark, sf_dir):
     """J6: dataset-membership join — all records belonging to one dataset,
@@ -7290,8 +7048,6 @@ SELECT l.l_orderkey AS record_id,
 FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
 WHERE l.l_suppkey % 20 = 7
 """
-
-REGISTRY["j6_membership"] = (q_j6_membership, SQL_J6)
 
 
 def _scratch_dir(sf_dir: str, tag: str) -> str:
@@ -7411,8 +7167,6 @@ WHERE NOT (s_suppkey % 7 = 0
                                  WHERE l_suppkey % 3 = 0))
 """
 
-REGISTRY["s6_delete_survivors"] = (q_s6_delete_survivors, SQL_S6)
-
 
 def q_s8_snapshot_roundtrip(spark, sf_dir):
     """S8 under the hash gate: snapshot-export a table subset and read the
@@ -7443,8 +7197,6 @@ SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate
 FROM orders
 """
 
-REGISTRY["s8_snapshot_roundtrip"] = (q_s8_snapshot_roundtrip, SQL_S8)
-
 
 def q_s10_compact(spark, sf_dir):
     """S+ (beyond-reference maintenance): small-file compaction under the
@@ -7472,8 +7224,6 @@ def q_s10_compact(spark, sf_dir):
 SQL_S10 = """
 SELECT doc_id, source, n_chars FROM documents
 """
-
-REGISTRY["s10_compact"] = (q_s10_compact, SQL_S10)
 
 
 def q_s11_schema_evolution(spark, sf_dir):
@@ -7543,8 +7293,6 @@ SELECT s_suppkey + 1000000, 'new_' || s_name,
 FROM supplier WHERE s_suppkey % 4 = 0
 """
 
-REGISTRY["s11_schema_evolution"] = (q_s11_schema_evolution, SQL_S11)
-
 
 def q_s3_insert_dedup_table(spark, sf_dir):
     """S3 under the hash gate: query-first bulk insert on a scratch
@@ -7581,8 +7329,6 @@ SELECT s_suppkey + 1000000, 'copy_' || s_name, s_nationkey, s_acctbal
 FROM supplier WHERE s_suppkey % 5 = 0
 """
 
-REGISTRY["s3_insert_dedup_table"] = (q_s3_insert_dedup_table, SQL_S3)
-
 
 def q_s7_retention_survivors(spark, sf_dir):
     """S7/T6 under the hash gate: retention sweep on a scratch MutableTable
@@ -7613,8 +7359,6 @@ SQL_S7 = """
 SELECT event_id, ts, user_id, event_type, ROUND(value, 6) AS value
 FROM events WHERE ts >= TIMESTAMP '2024-01-20 00:00:00'
 """
-
-REGISTRY["s7_retention_survivors"] = (q_s7_retention_survivors, SQL_S7)
 
 
 def _stream_gate_run(spark, land_df, land_schema, build_stream, base,
@@ -7723,9 +7467,6 @@ GROUP BY shard
 """
 
 
-REGISTRY["st_stream_export"] = (q_st_stream_export, _stream_export_sql())
-
-
 def q_st_stream_span(spark, sf_dir):
     """T1+DD: the streaming C4 span-dedup arm
     (streaming/ingest.py:stream_span_dedup) END-TO-END under the driver
@@ -7776,8 +7517,6 @@ s AS (
 )
 SELECT h AS fingerprint, CAST(1 AS BIGINT) AS n_out FROM s GROUP BY h
 """
-
-REGISTRY["st_stream_span"] = (q_st_stream_span, SQL_ST_STREAM_SPAN)
 
 
 def q_st_stream_urldedup(spark, sf_dir):
@@ -7832,9 +7571,6 @@ FROM s GROUP BY 1, 2
 """
 
 
-REGISTRY["st_stream_urldedup"] = (q_st_stream_urldedup, _stream_urldedup_sql())
-
-
 def q_st_stream_substring(spark, sf_dir):
     """T1+DD+: the streaming CDC substring-dedup arm
     (streaming/ingest.py:stream_substring_dedup) under the driver hash
@@ -7876,8 +7612,6 @@ SELECT chunk_fp, MIN(chunk_len) AS chunk_len, CAST(1 AS BIGINT) AS n_out
 FROM kept GROUP BY chunk_fp
 """
 
-REGISTRY["st_stream_substring"] = (q_st_stream_substring, SQL_ST_STREAM_SUBSTRING)
-
 
 def q_st_stream_incremental(spark, sf_dir):
     """T1+DD: the streaming incremental-LSH arm
@@ -7913,8 +7647,6 @@ def q_st_stream_incremental(spark, sf_dir):
 SQL_ST_STREAM_INCR = _minhash_oracle_sql(
     pair_pred="a.id % 10 <> 0 AND b.id % 10 = 0"
 )
-
-REGISTRY["st_stream_incremental"] = (q_st_stream_incremental, SQL_ST_STREAM_INCR)
 
 
 def q_st_rollup_stream(spark, sf_dir):
@@ -7962,8 +7694,6 @@ SELECT event_type, COUNT(*) AS n, COUNT(value) AS n_values,
 FROM events GROUP BY event_type
 """
 
-REGISTRY["st_rollup_stream"] = (q_st_rollup_stream, SQL_ST_ROLLUP)
-
 
 def q_v1_variant_rollup(spark, sf_dir):
     """P5/F4 via Spark 4 VARIANT (SURVEY §7 hard-part 5, VERDICT r6 item
@@ -8004,8 +7734,6 @@ WHERE json_extract_string(props, '$.k') IS NOT NULL
 GROUP BY event_type
 """
 
-REGISTRY["v1_variant_rollup"] = (q_v1_variant_rollup, SQL_V1)
-
 
 def q_u7_epoch_shuffle(spark, sf_dir):
     """U+ (beyond-reference): deterministic sharded epoch shuffle
@@ -8034,8 +7762,6 @@ SELECT doc_id, CAST(shard AS BIGINT) AS shard,
 FROM k
 """
 
-REGISTRY["u7_epoch_shuffle"] = (q_u7_epoch_shuffle, SQL_U7)
-
 
 def q_u8_group_sample_k(spark, sf_dir):
     """U+ (beyond-reference): deterministic exact-k per-group sampling
@@ -8061,8 +7787,6 @@ WITH r AS (
 )
 SELECT doc_id, source, CAST(rk AS INT) AS sample_rank FROM r WHERE rk <= 50
 """
-
-REGISTRY["u8_group_sample_k"] = (q_u8_group_sample_k, SQL_U8)
 
 
 def q_dd_source_overlap(spark, sf_dir):
@@ -8097,8 +7821,6 @@ FROM sizes sa
 JOIN sizes sb ON sa.source < sb.source
 LEFT JOIN pairs p ON p.source_a = sa.source AND p.source_b = sb.source
 """
-
-REGISTRY["dd_source_overlap"] = (q_dd_source_overlap, SQL_DD_SOURCE_OVERLAP)
 
 
 def q_dd_minhash_estimate(spark, sf_dir):
@@ -8135,8 +7857,6 @@ JOIN sig y ON y.id = c.id_b"""
 # WITH chain by turning the closing "bands AS (...)\n" into a comma'd CTE.
 SQL_DD_MINHASH_EST = SQL_DD_MINHASH_EST.replace(")\n\ncand AS (", "),\ncand AS (", 1)
 
-REGISTRY["dd_minhash_estimate"] = (q_dd_minhash_estimate, SQL_DD_MINHASH_EST)
-
 
 def q_st_ann_serve(spark, sf_dir):
     """T1+SIM: streaming ANN serving under the driver hash gate
@@ -8168,9 +7888,6 @@ def q_st_ann_serve(spark, sf_dir):
     q = stream_ann_serve(stream, index_path, sink, ckpt, k=10, n_probe=4)
     q.awaitTermination()
     return spark.read.schema("query_id long, vec_id long, score double").parquet(sink)
-
-
-REGISTRY["st_ann_serve"] = (q_st_ann_serve, SQL_SIM_IVF_BATCH)
 
 
 def q_pk_length_buckets(spark, sf_dir):
@@ -8210,8 +7927,6 @@ SELECT source, bucket, (bucket + 1) * 64 AS bucket_cap, n_docs,
          AS fill_efficiency
 FROM g
 """
-
-REGISTRY["pk_length_buckets"] = (q_pk_length_buckets, SQL_PK_BUCKETS)
 
 
 def q_pk_bin_pack(spark, sf_dir):
@@ -8283,8 +7998,6 @@ SELECT source, shard, bucket,
 FROM k
 GROUP BY 1, 2, 3, 4
 """
-
-REGISTRY["pk_bin_pack"] = (q_pk_bin_pack, SQL_PK_BIN_PACK)
 
 
 def q_pk_bfd_pack(spark, sf_dir):
@@ -8467,11 +8180,6 @@ SELECT ds.source, ds.shard, ds.n_docs, ds.sum_tokens, ds.n_oversize,
 FROM docstats ds JOIN ffd f USING (source, shard)
 """
 
-REGISTRY["pk_bfd_pack"] = (q_pk_bfd_pack, SQL_PK_BFD_PACK)
-
-
-
-
 
 def q_tx_doc_freq(spark, sf_dir):
     """TX+ (beyond-reference): corpus document-frequency head
@@ -8492,8 +8200,6 @@ FROM (
 )
 GROUP BY 1 ORDER BY doc_freq DESC, token ASC LIMIT 100
 """
-
-REGISTRY["tx_doc_freq"] = (q_tx_doc_freq, SQL_TX_DOC_FREQ)
 
 
 # Quality replay (doc_id, quality) — the SQL twin of tx.quality_score,
@@ -8519,8 +8225,6 @@ quality AS (
   FROM qbase
 )
 """
-
-
 
 
 def q_dd_url_dedup(spark, sf_dir):
@@ -8578,9 +8282,6 @@ SELECT canonical_url, domain,
        COUNT(*) AS n_copies
 FROM s GROUP BY 1, 2
 """
-
-
-REGISTRY["dd_url_dedup"] = (q_dd_url_dedup, _url_dedup_sql())
 
 
 def q_pk_site_cap(spark, sf_dir):
@@ -8648,9 +8349,6 @@ SELECT * FROM cum WHERE cum_tokens <= 300
 """
 
 
-REGISTRY["pk_site_cap"] = (q_pk_site_cap, _site_cap_sql())
-
-
 def q_tx_domain_stats(spark, sf_dir):
     """TX+ (beyond-reference): per-registrable-domain corpus profile — doc
     and distinct-page counts, token volume, source spread, and the
@@ -8715,9 +8413,6 @@ FROM dm GROUP BY 1
 """
 
 
-REGISTRY["tx_domain_stats"] = (q_tx_domain_stats, _domain_stats_sql())
-
-
 def q_tx_phrase_hits(spark, sf_dir):
     """TX+ (beyond-reference): exact phrase-occurrence audit — every
     (doc, position) where the token trigram 'big order scan' appears, the
@@ -8764,8 +8459,6 @@ p AS (
 SELECT doc_id, COUNT(*) AS n_hits, CAST(MIN(pos) AS INT) AS first_pos
 FROM p GROUP BY doc_id
 """
-
-REGISTRY["tx_phrase_hits"] = (q_tx_phrase_hits, SQL_TX_PHRASE)
 
 
 def _text_index_dir(spark, sf_dir: str) -> str:
@@ -8833,8 +8526,6 @@ SELECT doc_id, COUNT(*) AS n_hits, CAST(MIN(pos) AS INT) AS first_pos
 FROM p GROUP BY doc_id
 """
 
-REGISTRY["tx_phrase_idx"] = (q_tx_phrase_idx, SQL_TX_PHRASE_IDX)
-
 
 def q_tx_phrase_idx_incr(spark, sf_dir):
     """TX+ (beyond-reference): the INCREMENTAL arm of the persisted text
@@ -8879,9 +8570,6 @@ def q_tx_phrase_idx_incr(spark, sf_dir):
         with open(marker_path, "w") as fh:
             fh.write(marker)
     return phrase_hits_indexed(spark, path, ["group", "slow", "spark"])
-
-
-REGISTRY["tx_phrase_idx_incr"] = (q_tx_phrase_idx_incr, SQL_TX_PHRASE_IDX)
 
 
 def q_a25_diversity(spark, sf_dir):
@@ -8938,8 +8626,6 @@ SELECT COUNT(*) AS n_sources,
        MAX(share) AS top_share
 FROM sh
 """
-
-REGISTRY["a25_diversity"] = (q_a25_diversity, SQL_A25)
 
 
 def q_u12_interleave(spark, sf_dir):
@@ -9003,8 +8689,6 @@ SELECT r.doc_id, r.source, r.epoch_rank, s.source_idx,
        CAST(r.epoch_rank AS BIGINT) * 64 + s.source_idx AS interleave_key
 FROM ranked r JOIN srcs s ON s.source = r.source
 """
-
-REGISTRY["u12_interleave"] = (q_u12_interleave, SQL_U12)
 
 
 def _cluster_labeled(spark, sf_dir):
@@ -9109,8 +8793,6 @@ WHERE r.rk = 1
 
 SQL_DD_CLUSTER_REP = _cluster_rep_oracle_sql()
 
-REGISTRY["dd_cluster_rep"] = (q_dd_cluster_rep, SQL_DD_CLUSTER_REP)
-
 
 def q_u9_leak_split(spark, sf_dir):
     """U+ (beyond-reference): leakage-safe train/valid/test split
@@ -9143,8 +8825,6 @@ FROM (
 
 
 SQL_U9_LEAK_SPLIT = _leak_split_oracle_sql()
-
-REGISTRY["u9_leak_split"] = (q_u9_leak_split, SQL_U9_LEAK_SPLIT)
 
 
 def q_u13_coreset(spark, sf_dir):
@@ -9206,8 +8886,6 @@ def _coreset_oracle_sql(k: int = 8, dim: int = 64) -> str:
 
 SQL_U13_CORESET = _coreset_oracle_sql(8)
 
-REGISTRY["u13_coreset"] = (q_u13_coreset, SQL_U13_CORESET)
-
 
 def q_sim_outliers(spark, sf_dir):
     """SIM+ (beyond-reference): per-label embedding outliers
@@ -9257,8 +8935,6 @@ FROM (
 WHERE rk <= 20
 """
 
-REGISTRY["sim_outliers"] = (q_sim_outliers, SQL_SIM_OUTLIERS)
-
 
 def q_h4_order_priority(spark, sf_dir):
     """H4: TPC-H Q4 shape — the EXISTS-semi-join + priority histogram
@@ -9293,8 +8969,6 @@ WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
 GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
 
-REGISTRY["h4_order_priority"] = (q_h4_order_priority, SQL_H4)
-
 
 def q_u10_weighted_sample(spark, sf_dir):
     """U+ (beyond-reference): quality-proportional sampling without
@@ -9327,8 +9001,6 @@ drawn AS (
 SELECT doc_id, weight, sample_key
 FROM drawn ORDER BY sample_key ASC, doc_id ASC LIMIT 100
 """
-
-REGISTRY["u10_weighted_sample"] = (q_u10_weighted_sample, SQL_U10)
 
 
 def q_s9_snapshot_diff(spark, sf_dir):
@@ -9377,8 +9049,6 @@ SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS o_orderkey,
 FROM o FULL OUTER JOIN n ON o.o_orderkey = n.o_orderkey
 """
 
-REGISTRY["s9_snapshot_diff"] = (q_s9_snapshot_diff, SQL_S9_DIFF)
-
 
 def q_pk_sliding_windows(spark, sf_dir):
     """PK+ (beyond-reference): overlapping sliding-window layout for long
@@ -9411,8 +9081,6 @@ SELECT doc_id, win_idx, win_idx * 64 AS win_start,
        least(128, n - win_idx * 64) AS win_len
 FROM k
 """
-
-REGISTRY["pk_sliding_windows"] = (q_pk_sliding_windows, SQL_PK_WINDOWS)
 
 
 def q_dd_prefix_filter(spark, sf_dir):
@@ -9464,8 +9132,6 @@ JOIN sizes sb ON sb.id = c.id_b
 WHERE ROUND(c.common / CAST(sa.n + sb.n - c.common AS DOUBLE), 6) >= 0.8
 """
 
-REGISTRY["dd_prefix_filter"] = (q_dd_prefix_filter, SQL_DD_PREFIX)
-
 
 def q_t11_scd2(spark, sf_dir):
     """T+ (beyond-reference): SCD-type-2 interval build — turn an append
@@ -9498,8 +9164,6 @@ SELECT user_id, event_id, event_type, ts AS valid_from,
                        ORDER BY ts ASC, event_id ASC) IS NULL) AS is_current
 FROM events
 """
-
-REGISTRY["t11_scd2"] = (q_t11_scd2, SQL_T11)
 
 
 def q_a23_corr(spark, sf_dir):
@@ -9587,8 +9251,6 @@ def _corr_oracle_sql() -> str:
 
 SQL_A23 = _corr_oracle_sql()
 
-REGISTRY["a23_corr"] = (q_a23_corr, SQL_A23)
-
 
 def q_g1_pagerank(spark, sf_dir):
     """G+ (beyond-reference): fixed-iteration PageRank over the record
@@ -9635,8 +9297,6 @@ def _pagerank_oracle_sql(iterations: int = 10) -> str:
 
 SQL_G1_PAGERANK = _pagerank_oracle_sql(10)
 
-REGISTRY["g1_pagerank"] = (q_g1_pagerank, SQL_G1_PAGERANK)
-
 
 def q_tx_source_kl(spark, sf_dir):
     """TX+ (beyond-reference): per-source distribution drift
@@ -9670,8 +9330,6 @@ CROSS JOIN nn
 GROUP BY 1
 """
 
-REGISTRY["tx_source_kl"] = (q_tx_source_kl, SQL_TX_SOURCE_KL)
-
 
 def q_a24_heavy_hitters(spark, sf_dir):
     """A+ (beyond-reference): Misra–Gries heavy hitters over the token
@@ -9691,9 +9349,6 @@ def q_a24_heavy_hitters(spark, sf_dir):
     not benched)."""
     docs = _t(spark, sf_dir, "documents")
     return tx.heavy_hitters_mg(docs, text_col="text", k=50)
-
-
-BENCH_ONLY["a24_heavy_hitters"] = q_a24_heavy_hitters
 
 
 def q_a24_heavy_hitters_gate(spark, sf_dir):
@@ -9755,8 +9410,6 @@ FROM ex, tot
 WHERE exact_count * 51 > n_total
 """
 
-REGISTRY["a24_heavy_hitters_gate"] = (q_a24_heavy_hitters_gate, SQL_A24)
-
 
 def q_sim_multiprobe_topk(spark, sf_dir):
     """SIM+ (beyond-reference): multi-probe hyperplane LSH (Lv et al.
@@ -9798,8 +9451,6 @@ ORDER BY score DESC, vec_id ASC LIMIT 10
 
 SQL_SIM_MULTIPROBE = _lsh_multiprobe_oracle_sql()
 
-REGISTRY["sim_multiprobe_topk"] = (q_sim_multiprobe_topk, SQL_SIM_MULTIPROBE)
-
 
 def q_sim_filtered_topk(spark, sf_dir):
     """SIM+ (beyond-reference): filtered vector search
@@ -9826,8 +9477,6 @@ scored AS (
 )
 SELECT vec_id, score FROM scored ORDER BY score DESC, vec_id ASC LIMIT 10
 """
-
-REGISTRY["sim_filtered_topk"] = (q_sim_filtered_topk, SQL_SIM_FILTERED)
 
 
 def q_sim_ivf_recall_eval(spark, sf_dir):
@@ -9916,8 +9565,6 @@ ORDER BY n_probe
 
 SQL_SIM_IVF_RECALL = _ivf_recall_oracle_sql()
 
-REGISTRY["sim_ivf_recall_eval"] = (q_sim_ivf_recall_eval, SQL_SIM_IVF_RECALL)
-
 
 def q_dd_cap_duplicates(spark, sf_dir):
     """DD+ (beyond-reference): soft dedup by duplicate capping — keep at
@@ -9953,8 +9600,6 @@ SELECT id, cluster_id, CAST(rk AS INT) AS keep_rank FROM r WHERE rk <= 2
 
 
 SQL_DD_CAP = _cap_duplicates_oracle_sql()
-
-REGISTRY["dd_cap_duplicates"] = (q_dd_cap_duplicates, SQL_DD_CAP)
 
 
 def q_dd_incremental_labels(spark, sf_dir):
@@ -10075,8 +9720,6 @@ FROM batch_comp bc LEFT JOIN comp_corpus cc ON cc.bcomp = bc.bcomp
 
 SQL_DD_INCR_LABELS = _incremental_labels_oracle_sql()
 
-REGISTRY["dd_incremental_labels"] = (q_dd_incremental_labels, SQL_DD_INCR_LABELS)
-
 
 def q_u11_curriculum(spark, sf_dir):
     """U+ (beyond-reference): curriculum phase assignment — per-source
@@ -10107,8 +9750,6 @@ SELECT d.doc_id, d.source, q.quality,
 FROM documents d JOIN quality q ON q.doc_id = d.doc_id
 WHERE d.text IS NOT NULL
 """
-
-REGISTRY["u11_curriculum"] = (q_u11_curriculum, SQL_U11)
 
 
 def q_t12_islands(spark, sf_dir):
@@ -10151,8 +9792,6 @@ SELECT user_id, MIN(day) AS streak_start, MAX(day) AS streak_end,
        COUNT(*) AS streak_days
 FROM keyed GROUP BY user_id, island
 """
-
-REGISTRY["t12_islands"] = (q_t12_islands, SQL_T12)
 
 
 def q_t13_thread_assembly(spark, sf_dir):
@@ -10245,8 +9884,6 @@ SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
 FROM r GROUP BY 1, 2
 """
 
-REGISTRY["t13_thread_assembly"] = (q_t13_thread_assembly, SQL_T13)
-
 
 def q_tx_pmi_bigrams(spark, sf_dir):
     """TX+ (beyond-reference): collocation mining — the top-20 adjacent
@@ -10326,8 +9963,6 @@ SELECT a, b, n_pair, n_a, n_b, pmi FROM p
 ORDER BY pmi DESC, a ASC, b ASC LIMIT 20
 """
 
-REGISTRY["tx_pmi_bigrams"] = (q_tx_pmi_bigrams, SQL_TX_PMI)
-
 
 def q_tx_boilerplate_ratio(spark, sf_dir):
     """TX+ (beyond-reference): per-document boilerplate ratio — the share
@@ -10397,8 +10032,6 @@ SELECT doc_id, n_spans, n_dup_spans,
        ROUND(n_dup_spans * 1.0 / n_spans, 6) AS boilerplate_ratio
 FROM agg
 """
-
-REGISTRY["tx_boilerplate_ratio"] = (q_tx_boilerplate_ratio, SQL_TX_BOILERPLATE)
 
 
 # Deterministic HTML stand-in for the markup-less documents table (the
@@ -10500,9 +10133,6 @@ FROM e
 """
 
 
-REGISTRY["tx_html_extract"] = (q_tx_html_extract, _html_extract_sql())
-
-
 def q_tx_bigram_lm(spark, sf_dir):
     """TX+ (beyond-reference): interpolated-backoff bigram LM perplexity
     (functions/text.py:bigram_lm_scores, VERDICT r8 item 5) — the CCNet
@@ -10543,8 +10173,6 @@ JOIN cf cfb ON cfb.t = btf.b
 CROSS JOIN tot
 GROUP BY 1
 """
-
-REGISTRY["tx_bigram_lm"] = (q_tx_bigram_lm, SQL_TX_BIGRAM_LM)
 
 
 def q_tx_kn_lm(spark, sf_dir):
@@ -10589,8 +10217,6 @@ JOIN nb ON nb.b = btf.b
 CROSS JOIN nt
 GROUP BY 1
 """
-
-REGISTRY["tx_kn_lm"] = (q_tx_kn_lm, SQL_TX_KN_LM)
 
 
 def q_tx_kn_mod(spark, sf_dir):
@@ -10649,8 +10275,6 @@ GROUP BY 1
 
 
 SQL_TX_KN_MOD = _kn_mod_oracle_sql()
-
-REGISTRY["tx_kn_mod"] = (q_tx_kn_mod, SQL_TX_KN_MOD)
 
 
 def q_tx_bpe_merges(spark, sf_dir):
@@ -10711,8 +10335,6 @@ def _bpe_oracle_sql(n_merges: int = 10) -> str:
 
 SQL_TX_BPE_MERGES = _bpe_oracle_sql(10)
 
-REGISTRY["tx_bpe_merges"] = (q_tx_bpe_merges, SQL_TX_BPE_MERGES)
-
 
 def q_tx_bpe_encode(spark, sf_dir):
     """TX+ (beyond-reference): corpus encode under the learned BPE table
@@ -10741,8 +10363,6 @@ GROUP BY 1
 
 
 SQL_TX_BPE_ENCODE = _bpe_encode_oracle_sql(10)
-
-REGISTRY["tx_bpe_encode"] = (q_tx_bpe_encode, SQL_TX_BPE_ENCODE)
 
 
 def q_tx_unigram_tok(spark, sf_dir):
@@ -10890,8 +10510,6 @@ WHERE rank <= {p["top_n"]} ORDER BY rank"""
 
 SQL_TX_UNIGRAM_TOK = _unigram_oracle_sql()
 
-REGISTRY["tx_unigram_tok"] = (q_tx_unigram_tok, SQL_TX_UNIGRAM_TOK)
-
 
 def q_tx_unigram_encode(spark, sf_dir):
     """TX+ (beyond-reference): corpus encode under the learned unigram
@@ -10907,8 +10525,6 @@ def q_tx_unigram_encode(spark, sf_dir):
 
 
 SQL_TX_UNIGRAM_ENCODE = _unigram_oracle_sql(encode_report=True)
-
-REGISTRY["tx_unigram_encode"] = (q_tx_unigram_encode, SQL_TX_UNIGRAM_ENCODE)
 
 
 def q_tx_quality_sweep(spark, sf_dir):
@@ -10983,8 +10599,6 @@ SELECT CAST(b AS DOUBLE) / 1000 AS threshold,
 FROM cum CROSS JOIN tot
 """
 
-REGISTRY["tx_quality_sweep"] = (q_tx_quality_sweep, SQL_TX_QUALITY_SWEEP)
-
 
 def q_tx_pr_curve(spark, sf_dir):
     """TX+ (beyond-reference): classifier calibration curve — precision/
@@ -11044,501 +10658,38 @@ SELECT CAST(c.b AS DOUBLE) / 10000 AS threshold, c.tp, c.fp,
 FROM cum c, tot t
 """
 
-REGISTRY["tx_pr_curve"] = (q_tx_pr_curve, SQL_TX_PR_CURVE)
-
 
 # --------------------------------------------------------------------------
-# Registry ordering: the driver's correctness gate records the FIRST 50
-# entries only, so the window below is curated to hold every flagship
-# operator and every §2 row whose only hard evidence is its driver row.
-# Entries past the window still run the identical in-repo exact gate
-# (tests/test_queries_oracle.py) — they are near-duplicate shapes whose §2
-# coverage is carried by an in-window sibling:
-#   a2_status_counts  ⊂ a5_two_col_counts     dd_simhash ⊂ dd_simhash_pairs
-#   a4/a11/u3/j12/f9  trivial sub-shapes       h1/h3/h6   TPC-H extras
-#   sim_cosine_pairs  verification-only baseline (guarded collect)
-#   ds_missing_cells  A3 matrix via a5          f12 F12 scalars via a6/a7
-#   (both r1-driver-green; stepped out for the round-2 first-class
-#   operators dd_winnow / dd_embed)
-# Round-2 rotation (all four r1-driver-green, code unchanged since, shape
-# carried by an in-window sibling) — stepped out for the new first-class
-# pipeline operators tx_tfidf / tx_unigram_lm / tx_pii / pk_pack:
-#   p4_tuple_in   semi-join-on-values ⊂ j4_semi_join family
-#   j10_count_join left-join+coalesce counts ⊂ a15_properties_df join-agg
-#   a12_weighted_sum same groupBy-decimal-sum shape as a13_manybody_levels
-#   a16_dedup_batch  groupBy count+min ⊂ dd_exact
-#   u5_stratified_sample hash-filter sampling ⊂ u6_mixture_sample
-#   sim_lsh_topk  LSH-bucket probe ⊂ dd_embed + sim_knn_join (both in-window)
-#   (dd_common_ngrams shingle-count ⊂ dd_contamination; pk_domain_cap
-#   window-cumsum ⊂ pk_pack — both born outside the window)
-# Second round-2 rotation (all three r1-driver-green, code unchanged since,
-# shape carried in-window) — stepped out for tx_dsir / tx_quality_clf /
-# dd_containment:
-#   p5_json_extract   JSON-path filter ⊂ a7_json_rollup
-#   p7_array_overlap  array containment gates ⊂ a8_status_gate
-#   p8_int_or_name    mixed-key filter join ⊂ j4_semi_join family
-# Round-4 rotation — step IN the only three queries never driver-verified in
-# any round (f12_hour_percentiles, dd_common_ngrams, pk_domain_cap; VERDICT
-# r3 item 3); step OUT three r3-driver-green near-duplicates whose shape an
-# in-window sibling carries:
-#   dd_winnow       window-minima shingle-bucket join ⊂ dd_jaccard /
-#                   dd_contamination (same bucket-local shingle-join family)
-#   dd_containment  bucket-local shingle containment ⊂ dd_jaccard
-#   a10_map_agg     map_from_entries groupBy ⊂ a8_status_gate collect family
-# Round-4 additions — step IN the two new first-class pipeline operators
-# (dd_span_dedup: C4 span dedup; dd_semdedup: SemDeDup cluster-local
-# semantic dedup) so their first round has driver rows; step OUT two
-# r3-driver-green shapes an in-window sibling carries:
-#   u6_mixture_sample hash-u sampling ⊂ tx_dsir/u5 hash-filter family
-#   sim_knn_join      hyperplane-bucket join ⊂ dd_embed (same plan family)
-# …and step IN tx_bm25 (BM25 ranked retrieval) + a18_cube_counts (CUBE
-# grouping sets — the one-pass generalization of a5's matrix); step OUT:
-#   tx_repetition     scan-ratio family ⊂ tx_text_stats (driver-green r2+r3)
-#   a5_two_col_counts two-col count matrix ⊂ a18_cube_counts itself
-#                     (driver-green r1+r2+r3)
-# Round-5 rotation (VERDICT r4 items 1-3) — step IN every registry query
-# that has never had a driver CORRECTNESS row: the round-4 additions
-# (t8_funnel, t9_cohort_retention, a20_salted_agg, j15_salted_join,
-# a21_histogram, dd_lev_verify, a19_approx_distinct rows-only) plus the
-# round-5 newcomers (j5_one_hop, j6_membership direct-edge/dataset joins;
-# s6_delete_survivors, s7_retention_survivors mutation-under-hash-gate).
-# Step OUT eleven multiply-driver-green rows whose shape an in-window
-# sibling carries:
-#   s1_scan_project   scan+project ⊂ p2_p3_filter_page (green r1-r4)
-#   j1_dim_join       broadcast dim join ⊂ j13_asof/j14_interval/j6 (r1-r4)
-#   j4_semi_join      semi join ⊂ j9_anti_join + j5_one_hop semi (r1-r4)
-#   a13_manybody_levels conditional sums ⊂ a7_json_rollup (r2-r4)
-#   a17_group_centroid  vector mean agg ⊂ dd_semdedup centroids (r1-r4)
-#   tx_tfidf          ⊂ tx_bm25 (superset ranking formula) (r2-r4)
-#   tx_unigram_lm     ⊂ tx_dsir (LM log-ratio weights) (r2-r4)
-#   dd_jaccard        shingle-bucket ⊂ dd_minhash_lsh/dd_contamination (r1-r4)
-#   w1_window_lag     lag window ⊂ pk_pack/pk_domain_cap cumsum (r1-r4)
-#   tx_text_stats     ⊂ tx_quality_clf (superset feature set) (r1-r4)
-#   dd_exact          hash-groupBy first-wins ⊂ dd_span_dedup/a9 (r1-r4)
-# …and step IN the five queries born this round (pipe_prepare end-to-end
-# pipeline, dd_incremental index-probe dedup, j16_adaptive_salted,
-# dd_jaccard_capped, a22_approx_quantiles rows-only) so their first round
-# has driver rows; step OUT five more multiply-green sibling-covered rows:
-#   a14_pivot         entry×spec pivot ⊂ a15_properties_df (r1-r4)
-#   t3_hourly_rollup  time-bucket rollup ⊂ f12_hour_percentiles +
-#                     t2_enrichment (r1-r4)
-#   a6_access_summary group+percentile_disc ⊂ f12 (same operator,
-#                     f12 adds continuous) (r1-r4)
-#   s4_upsert_classify classify join ⊂ s6_delete_survivors mutation gate +
-#                     j9 anti-join shape (r1-r4)
-#   dd_contamination  broadcast-shingle scan ⊂ dd_minhash_lsh family +
-#                     dd_common_ngrams (r1-r4)
-# Final round-5 rotation — the four late-registered queries step IN as well
-# (s3_insert_dedup_table, s8_snapshot_roundtrip, t10_incremental_rollup,
-# mm_phash_dedup — every oracle-bearing query in the repo now has a driver
-# row in some round once these stamp); four more multiply-green
-# sibling-covered rows step OUT:
-#   o2_priority_topk  per-group top-k ⊂ a9_argmin window family + the
-#                     standing WindowGroupLimit plan-audit gate (r1-r4)
-#   tx_pii            codegen regex scan ⊂ tx_quality_clf scan family (r2-r4)
-#   dd_embed          LSH-bucket cosine pairs ⊂ dd_semdedup (r2-r4)
-#   sim_topk          brute-force baseline ⊂ sim_ivf/sim_pq which verify
-#                     against it in tests (r1-r4)
-# Round-6 rotation (VERDICT r5 item 1) — staleness-ordered, computed from
-# the recorded CORRECTNESS_r0N.json artifacts: step IN every query whose
-# most recent driver-green row predates the round-4 timestamp contract and
-# the round-5 hardening passes — the 21 r01-latest + 7 r03-latest the
-# verdict lists — plus the full 20-query r04-latest cohort and the two
-# round-6 newcomers (dd_substring CDC substring dedup, st_session_custom
-# applyInPandasWithState arm).  That is exactly 50; the 48 r05-stamped
-# queries step OUT (every one freshly green last round), and the two
-# rows-only sketches (a19/a22) rest on their r05 rows + error-bound pytest
-# gates.  After this round every registry query's latest driver stamp is
-# r05+, closing the "cumulatively green" vs "currently green" gap.
-# Late round-6 additions: dd_substring_incremental (the CDC index-probe arm)
-# and sim_ivfpq_topk (the composed FAISS-shape ANN), both born this round,
-# step IN so their first round has driver rows; stepping OUT:
-#   dd_embed   r04-green; its LSH-bucket-local + exact-verify plan family is
-#              carried in-window by sim_knn_join and by the freshly-
-#              r05-stamped dd_semdedup
-#   sim_topk   r04-green brute baseline; sim_ivf/sim_pq verify against it
-#              in tests every run (the same rationale the r05 rotation used)
-#   tx_unigram_lm  r04-green; ⊂ tx_dsir (LM log-ratio family, r05-stamped) —
-#              the same rationale the r05 rotation already applied to it;
-#              steps out for sim_ivf_batch_topk (batched ANN, born round 6)
-#   tx_tfidf   r04-green; ⊂ tx_bm25 (superset ranking formula, r05-stamped)
-#              — the r05 rotation's own rationale; steps out for
-#              dd_contamination_neardup (near-dup decontamination, born r6)
+# registry
 # --------------------------------------------------------------------------
 
-# Round-7 rotation (VERDICT r6 item 2 + the round's additions), computed
-# from tools/stale_stamps.py over the recorded artifacts.  Step IN:
-#   - the four r04-latest stamps (dd_embed, sim_topk, tx_tfidf,
-#     tx_unigram_lm) — the only pre-r05 residue;
-#   - the queries whose implementation changed AFTER their latest stamp:
-#     dd_semdedup + sim_ivf_topk (rewired onto the persisted IVF index in
-#     r6, stamped r05 under the old plan), dd_substring (r7: collect_set
-#     window → map-combinable doc-frequency agg; stamp must re-hash the
-#     new plan), mm_features + mm_phash_dedup (r7: NULL-content guards +
-#     decode_fn hook threaded through the kernels);
-#   - the five round-7 newcomers, never driver-stamped: the streaming-arm
-#     gates st_stream_span / st_stream_substring / st_stream_incremental /
-#     st_rollup_stream and the VARIANT-properties gate v1_variant_rollup;
-#   - 36 of the remaining r05-stamped cohort (all equally stale).
-# Step OUT (all 50 r06-stamped queries — freshly green last round — plus):
-#   a19/a22            rows-only sketches by design; error-bound pytest
-#                      gates carry them (same rationale as r06)
-#   j15_salted_join    uniform salting ⊂ j16_adaptive_salted (in-window,
-#                      same join+rollup oracle family)
-#   a18_cube_counts    grouping sets ⊂ a5_two_col_counts (r06-fresh) +
-#                      a21_histogram (in-window)
-#   dd_simhash_pairs   banded Hamming pairs ⊂ dd_simhash (r06-fresh) +
-#                      the band-bucket pair family in dd_winnow (r06)
-#   dd_span_dedup      fixed-grid span family ⊂ st_stream_span (in-window,
-#                      same fingerprint projection) + dd_substring
-#   st_sessionize      built-in session_window arm ⊂ st_session_custom
-#                      (r06-fresh, same lag+cumsum oracle algebra)
-#   s8_snapshot_roundtrip  export/import ⊂ the in-window mutation family
-#                      (s3/s6/s7) + s4 (r06-fresh)
-#   mol_identifiers    scalar map/array filters ⊂ f9_content_hash +
-#                      j12_element_at (both r06-fresh)
-#   f12_hour_percentiles  continuous-percentile twin of a6_access_summary
-#                      (r06-fresh percentile_disc family)
-# ---- Round-8 rotation (VERDICT r7 item 4), now rotated out; ledger kept:
-# Step IN:
-    # (a) the two r07 REDs — re-stamp with the CAST-fixed oracles;
-    # (b) the r05-stamped cohort, 32 of 36 (the staleness target:
-    #     after r8 no HASH stamp predates r06).  Two displacements, each
-    #     shape-covered: st_sessionize -> t13_thread_assembly (same
-    #     boundary algebra, see (c)); a22_approx_quantiles -> the
-    #     tx_pmi_bigrams newcomer — a22 is rows-only BY DESIGN (the
-    #     driver record adds only a row count; its real gate is the
-    #     GK-sketch error-bound pytest, the r6/r7 rotations' own
-    #     rationale for resting it), and a19 stays in so the sketch
-    #     family still refreshes a record this round; dd_span_dedup ->
-    #     tx_boilerplate_ratio, whose oracle re-hashes the IDENTICAL
-    #     shared span-fingerprint projection plus the df rollup (and the
-    #     streaming arm st_stream_span carries the same projection with
-    #     an r07 stamp); sim_pq_topk -> sim_index_stats, the new consumer
-    #     of the SAME persisted quantizer (sim_pq's ADC scoring is the
-    #     r06-stamped sim_ivfpq_topk's composed superset — the r7
-    #     rotation's own rationale);
-    # (c) the round-8 newcomers, never driver-stamped;
-    # (d) pipe_prepare — its implementation changed this round (URL-dedup
-    #     stage 0), so the stamp must re-hash the new plan;
-    # (No r06 refreshes remain: dd_exact's fingerprint-groupBy family is
-    # carried by the in-window dd_url_dedup exact-dedup shape + a16
-    # pytest gates; h1's full-scan multi-agg family by a18_cube_counts
-    # (in-window r05 cohort, the grouping-sets superset of the same
-    # lineitem scan+agg).
-    # Step OUT: the 50 r07-stamped queries (all freshly green or, for the
-    # two reds, re-entered under (a)); every one of their plan families
-    # is either re-entering under (b)/(c) or pinned by standing pytest
-    # gates (streaming arms: parity tests; sketches: error-bound tests).
-    # --- (a) r07 reds, oracle-CAST fix (2) ---
-#     "pk_length_buckets", "v1_variant_rollup",
-    # --- (b) r05-stamped cohort (32 of 36; displacements documented
-    # above) ---
-#     "a15_properties_df", "a18_cube_counts", "a19_approx_distinct",
-#     "a20_salted_agg", "a21_histogram",
-#     "a7_json_rollup", "a8_status_gate", "a9_argmin", "d1_value_call",
-#     "dd_common_ngrams", "dd_incremental", "dd_jaccard_capped",
-#     "dd_lev_verify", "dd_simhash_pairs",
-#     "f12_hour_percentiles", "j13_asof", "j15_salted_join", "j5_one_hop",
-#     "j6_membership", "j9_anti_join", "mol_identifiers", "pk_domain_cap",
-#     "s2_bulk_get", "s3_insert_dedup_table", "s8_snapshot_roundtrip",
-#     "t10_incremental_rollup",
-#     "t2_enrichment", "t8_funnel", "t9_cohort_retention", "tx_bm25",
-#     "tx_dsir", "tx_quality_clf",
-    # --- (c) round-8 newcomers (15, never driver-stamped; the last four
-    # displaced one r05 query each, rationale in the header above —
-    # t13_thread_assembly's oracle re-hashes st_sessionize's 30-min-gap
-    # lag+cumsum boundary algebra, and the built-in session_window arm
-    # stays pinned by st_session_custom's r06 stamp + parity pytests) ---
-#     "pk_bin_pack", "pk_bfd_pack", "dd_url_dedup", "tx_domain_stats",
-#     "tx_phrase_hits", "a25_diversity", "u12_interleave", "s10_compact",
-#     "st_stream_urldedup", "dd_lsh_recall_eval", "sim_hard_negatives",
-#     "t13_thread_assembly", "tx_pmi_bigrams", "tx_boilerplate_ratio",
-#     "sim_index_stats",
-    # --- (d) code changed after latest stamp (1) ---
-#     "pipe_prepare",
-# ]  (end r8 roster ledger)
 
-# ---- Round-9 rotation, now rotated out; ledger kept (counts corrected
-# per ADVICE r9: (c) had FOUR newcomers incl. tx_quality_sweep, and (d)
-# carried 34 — not 35 — of the 49 r06 stamps):
-    # (a) the full r05-stamped residue (4) — the rotation's oldest stamps,
-    #     closing the r8 window's acknowledged leftover;
-    # (b) every query whose implementation or oracle changed after its
-    #     r8 stamp (8): t13_thread_assembly (64-turn session cap +
-    #     overflow flag), tx_phrase_hits (first_pos INT width fix),
-    #     tx_pmi_bigrams (empty-token slice guard), dd_url_dedup +
-    #     tx_domain_stats + st_stream_urldedup (PSL-true registrable
-    #     domains + the widened synthetic-URL TLD mix), pipe_prepare
-    #     (stage-0 canonical keys change with the TLD mix), s10_compact
-    #     (compact_small_files rewritten onto the Hadoop FS API);
-    # (c) the round-9 newcomers, never driver-stamped (4):
-    #     tx_html_extract (main-content extraction), tx_bigram_lm
-    #     (interpolated bigram LM), tx_phrase_idx (persisted inverted-
-    #     index phrase probe), tx_quality_sweep (threshold retention
-    #     sweep);
-    # (d) 34 of the 49 r06-stamped queries — the next-oldest cohort.
-    # Step OUT: the 47 r07 + 42 remaining r08 stamps (all freshly green
-    # within two rounds) and 15 r06 queries whose shapes are carried by
-    # in-window or r08-fresh siblings:
-    #   p4_tuple_in      composite-key IN via join ⊂ p8_int_or_name
-    #                    (in-window OR-filter family) + s2_bulk_get's
-    #                    pushed In(...) audit gate (r08);
-    #   a13_manybody_levels  per-level decimal-weighted sums ⊂
-    #                    a12_weighted_sum (in-window, the same
-    #                    decimal-weighted aggregate family);
-    #   a2_status_counts ⊂ a5_two_col_counts (in-window);
-    #   a4_union_counts  ⊂ a5 + the union family in j8_closure (r07);
-    #   u3_distinct      trivial DISTINCT ⊂ j9_anti_join (r08);
-    #   j12_element_at   array-tail scalar ⊂ a9_argmin (r08);
-    #   f9_content_hash  canonicalization hash ⊂ mol_identifiers (r08);
-    #   dd_simhash       signatures ⊂ dd_simhash_pairs (r08);
-    #   dd_contamination_neardup ⊂ dd_contamination (in-window) +
-    #                    the dd_minhash_lsh kernel (r07);
-    #   sim_cosine_pairs verification-only baseline (guarded collect;
-    #                    sim_knn_join in-window carries the pair shape);
-    #   sim_ivfpq_topk   ⊂ sim_ivf_batch_topk (in-window) + sim_pq_topk
-    #                    (stepping IN under (a));
-    #   st_session_custom ⊂ st_sessionize (stepping IN under (a), same
-    #                    lag+cumsum oracle algebra) + parity pytests;
-    #   tx_repetition    ⊂ tx_text_stats (in-window superset);
-    #   u5_stratified_sample ⊂ u6_mixture_sample (in-window superset);
-    #   h6_forecast_revenue single-scan filter-sum ⊂ h1_pricing_summary
-    #                    (in-window same-scan multi-agg superset).
-    # After r9 stamps: no stamp older than r06, and the r06 residue is 15
-    # (structural floor: 150 queries / 50-per-round window = 3 rounds).
-    # --- (a) r05 residue (4) ---
-#    "dd_span_dedup", "sim_pq_topk", "st_sessionize", "a22_approx_quantiles",
-    # --- (b) changed after their r8 stamp (8) ---
-#    "t13_thread_assembly", "tx_phrase_hits", "tx_pmi_bigrams",
-#    "dd_url_dedup", "tx_domain_stats", "st_stream_urldedup",
-#    "pipe_prepare", "s10_compact",
-    # --- (c) round-9 newcomers (4) ---
-#    "tx_html_extract", "tx_bigram_lm", "tx_phrase_idx", "tx_quality_sweep",
-    # --- (d) r06 cohort, 34 of 49 (displacements documented above) ---
-#    "a10_map_agg", "a11_sample_keys", "a12_weighted_sum",
-#    "a14_pivot", "a16_dedup_batch",
-#    "a17_group_centroid", "a5_two_col_counts", "a6_access_summary",
-#    "dd_containment", "dd_contamination", "dd_exact", "dd_jaccard",
-#    "dd_substring_incremental", "dd_winnow", "ds_missing_cells",
-#    "h1_pricing_summary", "h3_top_revenue", "j10_count_join",
-#    "j1_dim_join", "j4_semi_join", "o2_priority_topk",
-#    "p5_json_extract", "p7_array_overlap", "p8_int_or_name",
-#    "s1_scan_project", "s4_upsert_classify", "sim_ivf_batch_topk",
-#    "sim_knn_join", "sim_lsh_topk", "t3_hourly_rollup", "tx_pii",
-#    "tx_text_stats", "u6_mixture_sample", "w1_window_lag",
-#]  (end r9 roster ledger)
+class Query(NamedTuple):
+    """One registry row.  ``sql`` is the DuckDB oracle the driver hashes the
+    Spark result against; ``None`` marks a sketch arm (sketch values are
+    engine-specific, so no SQL replays them), which is benched and smoked
+    but never offered to the driver.  ``bench=True`` puts the query in
+    bench.py's timed suite."""
 
-# ---- Round-10 rotation, now rotated out; ledger kept:
-    # ---- Round-10 rotation (VERDICT r9 item 1), computed from
-    # tools/stale_stamps.py over the recorded artifacts.  Step IN:
-    # (a) every query whose implementation or oracle changed after its
-    #     r9 stamp (5): tx_html_extract (explicit whitespace class — the
-    #     Java-\\s/RE2-\\s U+000B parity fix changes the keep verdict),
-    #     dd_url_dedup + tx_domain_stats + st_stream_urldedup +
-    #     pipe_prepare (PSL private-section rules + the .github.io/
-    #     .blogspot.com synthetic-TLD mix change their domains/keys);
-    # (b) the round-10 newcomers, never driver-stamped (8): tx_kn_lm
-    #     (Kneser-Ney bigram LM), tx_bpe_merges (BPE vocabulary
-    #     induction), tx_bpe_encode (corpus encode/compression report
-    #     under the learned table), pipe_export (materialized
-    #     training-shard flagship), pk_site_cap (per-registrable-domain
-    #     token cap — the op that NEEDS the r10 private PSL section),
-    #     tx_kn_mod (modified Kneser-Ney, count-of-count discounts),
-    #     u13_coreset (greedy k-center diverse-subset selection),
-    #     st_stream_export (streaming ingest arm of the shard export —
-    #     shard-partitioned writeStream sink);
-    # (c) the FULL r06 leftover cohort (15) — the stale_stamps policy
-    #     violation VERDICT r9 item 1 mandates closing; nothing older
-    #     than r07 remains stamped after this round;
-    # (d) the 22 alphabetically-first r07-stamped hash-green queries —
-    #     the next-oldest cohort (the 24th-27th alphabetical slots yield
-    #     to newcomers: sim_filtered_topk and sim_ivf_topk to
-    #     tx_bpe_encode/pk_site_cap — their persisted-index/ANN family is
-    #     carried by sim_ivf_batch_topk (r09), sim_index_stats (r08) and
-    #     the in-window sim_ivfpq_topk/sim_cosine_pairs —
-    #     s9_snapshot_diff to tx_kn_mod (content-hash diff family carried
-    #     by s8_snapshot_roundtrip (r08) + the in-window s6 mutation
-    #     family), s7_retention_survivors to u13_coreset (TTL family
-    #     carried by in-window s6 + the partition-drop pytests), and
-    #     pk_sliding_windows to st_stream_export (window-layout family
-    #     carried by in-window pk_pack + the r08 pk_bin/bfd stamps);
-    #     all five join the r11 reserved core).
-    # Step OUT: the 42 remaining r09 stamps and 43 r08 stamps (all
-    # freshly green within two rounds), plus the 24 remaining r07
-    # hash-green + a24_heavy_hitters (rows-only r07): these 25 are the
-    # RESERVED CORE of the r11 roster (they fit: 25 + r11 newcomers/
-    # changes + r08 fill ≤ 50), recorded here so the next rotation is
-    # already decided: pk_sliding_windows, s7_retention_survivors,
-    # s9_snapshot_diff, sim_filtered_topk, sim_ivf_topk,
-    # sim_multiprobe_topk, sim_outliers, sim_topk,
-    # st_ann_serve, st_rollup_stream, st_stream_incremental,
-    # st_stream_span, st_stream_substring, t11_scd2, t12_islands,
-    # tx_doc_freq, tx_source_kl, tx_tfidf, tx_unigram_lm,
-    # u10_weighted_sample, u11_curriculum, u7_epoch_shuffle,
-    # u8_group_sample_k, u9_leak_split, a24_heavy_hitters.
-    # After r10 stamps: registry = 162; the staleness floor is
-    # ceil(162 / (50 - ~5 newcomer/changed slots per round)) = 4 rounds —
-    # tools/stale_stamps.py computes the policy from the registry size.
-    # --- (a) changed after their r9 stamp (5) ---
-#    "tx_html_extract", "dd_url_dedup", "tx_domain_stats",
-#    "st_stream_urldedup", "pipe_prepare",
-    # --- (b) round-10 newcomers (8) ---
-#    "tx_kn_lm", "tx_kn_mod", "tx_bpe_merges", "tx_bpe_encode",
-#    "pipe_export", "pk_site_cap", "u13_coreset", "st_stream_export",
-    # --- (c) r06 leftovers, all 15 (VERDICT r9 item 1) ---
-#    "a13_manybody_levels", "a2_status_counts", "a4_union_counts",
-#    "dd_contamination_neardup", "dd_simhash", "f9_content_hash",
-#    "h6_forecast_revenue", "j12_element_at", "p4_tuple_in",
-#    "sim_cosine_pairs", "sim_ivfpq_topk", "st_session_custom",
-#    "tx_repetition", "u3_distinct", "u5_stratified_sample",
-    # --- (d) r07 cohort, alphabetically-first 22 of 46 hash-green ---
-#    "a23_corr", "dd_cap_duplicates", "dd_cluster", "dd_cluster_rep",
-#    "dd_embed", "dd_incremental_labels", "dd_minhash_estimate",
-#    "dd_minhash_lsh", "dd_prefix_filter", "dd_semdedup",
-#    "dd_source_overlap", "dd_substring", "g1_pagerank",
-#    "h4_order_priority", "j14_interval", "j16_adaptive_salted",
-#    "j8_closure", "mm_features", "mm_phash_dedup", "p2_p3_filter_page",
-#    "pk_pack", "s6_delete_survivors",
-# ]  (end r10 roster ledger)
+    fn: Callable[[SparkSession, str], DataFrame]
+    sql: str | None
+    bench: bool = False
 
-# ---- Round-11 rotation, now rotated out; ledger kept:
-    # ---- Round-11 rotation (the r10 ledger's pre-recorded plan).
-    # Step IN:
-    # (a) the 25-entry RESERVED CORE recorded in the r10 ledger above —
-    #     the r07 hash-green leftovers + a24_heavy_hitters (rows-only by
-    #     design) + the five r10 displacements; nothing older than r08
-    #     remains stamped after this round;
-    # (b) the round-11 newcomers, never driver-stamped (4):
-    #     s11_schema_evolution (MutableTable migration lifecycle under
-    #     the hash gate), j2_subspec_join (2-level spec chain via the
-    #     join-elision builder, VERDICT r10 item 4), tx_unigram_tok
-    #     (SentencePiece-style unigram-LM tokenizer, VERDICT r10 item 6),
-    #     tx_unigram_encode (pieces-per-word report under the learned
-    #     vocabulary — the tx_bpe_encode sibling), sim_hybrid_rrf
-    #     (reciprocal-rank fusion of the BM25 and cosine arms — the
-    #     hybrid-retrieval combiner).  The two extra newcomers displace
-    #     the last two alphabetical r08 fill slots, dd_simhash_pairs
-    #     (banded-Hamming family carried by the r10-stamped dd_simhash +
-    #     the winnowing pair family) and dd_lsh_recall_eval (the LSH
-    #     evaluation harness — its candidate pipelines are the
-    #     r10-stamped dd_minhash_lsh and dd_jaccard, plus its own
-    #     recall-bound pytests), and u14_doremi (DoReMi domain-mixture
-    #     reweighting) displaces dd_lev_verify (the deliberately-
-    #     expensive edit-distance verify pass — gated by its own DP
-    #     pytests; the LSH candidate physics it verifies are the
-    #     r10-stamped dd_minhash_lsh), and pipe_funnel (the stage-
-    #     retention funnel report) displaces dd_jaccard_capped (its
-    #     df-capped pair family is carried by the r10-stamped
-    #     dd_jaccard/dd_winnow stamps + the cap pytests), and
-    #     tx_phrase_idx_incr (incremental text-index append) displaces
-    #     dd_incremental (the incremental-probe family is carried by the
-    #     r10-stamped dd_substring_incremental + dd_incremental_labels),
-    #     and o7_serial_claim (the internal-jobs serial-group claim
-    #     eligibility, reference parity) displaces dd_common_ngrams (its
-    #     corpus n-gram rollup family is carried by the r10-stamped
-    #     dd_winnow/dd_jaccard gram pipelines + tx_doc_freq in-window);
-    #     all six join the r12 core;
-    # (c) every query whose implementation or oracle changed after its
-    #     latest stamp (6): tx_kn_mod (discounts clamped to [0,k], r10
-    #     ADVICE), u13_coreset (mind==0 early-stop in both arms, r10
-    #     ADVICE), pipe_export (tmp-then-rename export swap + PSL-aware
-    #     staleness marker), s6_delete_survivors + s3_insert_dedup_table
-    #     + t10_incremental_rollup (the MutableTable optimistic-CAS
-    #     commit protocol rewrote their mutation path — s7/st_rollup_
-    #     stream, the other MutableTable consumers, re-stamp under (a));
-    # (d) the 16 alphabetically-first r08-stamped hash-green queries —
-    #     the next-oldest cohort (a8_status_gate among them, closing
-    #     VERDICT r10 item 5's re-stamp requirement).
-    # Step OUT: the 41 remaining r10 stamps and 38 r09 stamps (all
-    # freshly green within two rounds), plus the 24 remaining r08
-    # queries: these are the RESERVED CORE of the r12 roster (they fit:
-    # 24 + r12 newcomers/changes + r09 fill ≤ 50): f12_hour_percentiles,
-    # j13_asof, j15_salted_join, j5_one_hop, j6_membership, j9_anti_join,
-    # mol_identifiers, pk_bfd_pack, pk_bin_pack, pk_domain_cap,
-    # pk_length_buckets, s2_bulk_get, s8_snapshot_roundtrip,
-    # sim_hard_negatives, sim_index_stats, t2_enrichment, t8_funnel,
-    # t9_cohort_retention, tx_bm25, tx_boilerplate_ratio, tx_dsir,
-    # tx_quality_clf, u12_interleave, v1_variant_rollup,
-    # dd_simhash_pairs, dd_lsh_recall_eval, dd_lev_verify,
-    # dd_jaccard_capped, dd_incremental and dd_common_ngrams (displaced
-    # by the r11 newcomers beyond the verdict list).
-    # After r11 stamps: registry = 171; staleness floor stays
-    # ceil(171/45) = 4 rounds (tools/stale_stamps.py computes it).
-    # --- (a) the r11 reserved core (25) ---
-#    "pk_sliding_windows", "s7_retention_survivors", "s9_snapshot_diff",
-#    "sim_filtered_topk", "sim_ivf_topk", "sim_multiprobe_topk",
-#    "sim_outliers", "sim_topk", "st_ann_serve", "st_rollup_stream",
-#    "st_stream_incremental", "st_stream_span", "st_stream_substring",
-#    "t11_scd2", "t12_islands", "tx_doc_freq", "tx_source_kl", "tx_tfidf",
-#    "tx_unigram_lm", "u10_weighted_sample", "u11_curriculum",
-#    "u7_epoch_shuffle", "u8_group_sample_k", "u9_leak_split",
-#    "a24_heavy_hitters",
-    # --- (b) round-11 newcomers (9) ---
-#    "s11_schema_evolution", "j2_subspec_join", "tx_unigram_tok",
-#    "tx_unigram_encode", "sim_hybrid_rrf", "u14_doremi", "pipe_funnel",
-#    "tx_phrase_idx_incr", "o7_serial_claim",
-    # --- (c) changed after their latest stamp (6) ---
-#    "tx_kn_mod", "u13_coreset", "pipe_export", "s6_delete_survivors",
-#    "s3_insert_dedup_table", "t10_incremental_rollup",
-    # --- (d) r08 cohort, alphabetically-first 10 of 40 ---
-#    "a15_properties_df", "a18_cube_counts", "a19_approx_distinct",
-#    "a20_salted_agg", "a21_histogram", "a25_diversity", "a7_json_rollup",
-#    "a8_status_gate", "a9_argmin", "d1_value_call",
-# ]  (end r11 roster ledger)
 
+# The driver's correctness gate records only the first 50 ``queries()``
+# entries, so these names lead the registry.  Rotate them with the output of
+# tools/stale_stamps.py.
 _DRIVER_WINDOW = [
-    # ---- Round-16 rotation, computed from tools/stale_stamps.py.
-    # Step IN:
-    # (a) the full 7-query r11-stamped cohort — the r15 ledger's
-    #     pre-recorded mandate ("all seven MUST head the r16 roster; their
-    #     r11 stamps hit the 5-round floor there"): sim_multiprobe_topk,
-    #     st_ann_serve, st_stream_incremental, st_stream_span,
-    #     st_stream_substring, tx_phrase_idx_incr, tx_unigram_encode;
-    # (b) 43 of the 46-query r12-stamped cohort — the next-oldest stamps
-    #     (their floor is r17; taking them now keeps the cycle at the
-    #     structural ceil(194/45)=5-round period).  Three displaced, each
-    #     with the same fresh family carrier the r11 rotation used:
-    #       dd_simhash_pairs   ⊂ dd_simhash (r15 stamp, same signature
-    #                          kernel) + dd_simhash_scaled (r14, the
-    #                          banded-Hamming pair arm);
-    #       dd_lsh_recall_eval ⊂ dd_minhash_lsh (r14, the candidate
-    #                          pipeline it evaluates) + its own
-    #                          recall-bound pytests;
-    #       dd_incremental     ⊂ dd_substring_incremental (r13, the same
-    #                          incremental-probe contract) +
-    #                          dd_incremental_labels (r14).
-    #     All three MUST head the r17 roster (their r12 stamps hit the
-    #     floor there).
-    # NOT in: the three r15-failed sketch arms (a19_approx_distinct /
-    # a22_approx_quantiles / a24_heavy_hitters) left REGISTRY entirely
-    # this round (VERDICT r15 item 1): their sketch values have no
-    # replayable SQL oracle BY CONSTRUCTION, so any queries() entry for
-    # them fails no_oracle whenever sampled.  They are BENCH_ONLY arms
-    # now (bench.py still times the same plans under the same names);
-    # their correctness invariants stay pinned by the hash-green
-    # a19_distinct_gate / a22_quantiles_gate / a24_heavy_hitters_gate
-    # REGISTRY companions (all r15-stamped green).
-    # r16 is an optimization round: no newcomers, and every plan-level
-    # change (fan-out revert, checkpoint consolidation) is MECHANICAL —
-    # identical output relation, re-verified hash-green in this round's
-    # full tools/check.py sf0.01 run (the r12 pipe_prepare precedent), so
-    # no changed-after-stamp slots are needed.
-    # Step OUT: the r13/r14/r15 cohorts (within the 5-round floor).
-    # 7 + 43 = 50, zero fill slots this round.
-    # --- (a) r11 cohort, all 7 ---
     "sim_multiprobe_topk", "st_ann_serve", "st_stream_incremental",
     "st_stream_span", "st_stream_substring", "tx_phrase_idx_incr",
-    "tx_unigram_encode",
-    # --- (b) r12 cohort, 43 of 46 ---
-    "dd_common_ngrams", "dd_jaccard_capped", "f12_hour_percentiles",
-    "j13_asof", "j15_salted_join", "j17_spec_chain3", "j18_project_list",
-    "j2_subspec_join", "j5_one_hop", "j6_membership", "j9_anti_join",
-    "mol_identifiers", "o10_manager_reap", "o11_status_replay",
-    "o9_service_replay", "pipe_export", "pipe_funnel", "pk_bin_pack",
-    "pk_domain_cap", "pk_length_buckets", "s11_schema_evolution",
-    "s2_bulk_get", "s3_insert_dedup_table", "s6_delete_survivors",
-    "s7_retention_survivors", "s8_snapshot_roundtrip",
+    "tx_unigram_encode", "dd_common_ngrams", "dd_jaccard_capped",
+    "f12_hour_percentiles", "j13_asof", "j15_salted_join", "j17_spec_chain3",
+    "j18_project_list", "j2_subspec_join", "j5_one_hop", "j6_membership",
+    "j9_anti_join", "mol_identifiers", "o10_manager_reap",
+    "o11_status_replay", "o9_service_replay", "pipe_export", "pipe_funnel",
+    "pk_bin_pack", "pk_domain_cap", "pk_length_buckets",
+    "s11_schema_evolution", "s2_bulk_get", "s3_insert_dedup_table",
+    "s6_delete_survivors", "s7_retention_survivors", "s8_snapshot_roundtrip",
     "sim_hard_negatives", "sim_index_stats", "sim_ivf_recall_eval",
     "sim_pq_distortion", "st_rollup_stream", "st_stream_export",
     "t10_incremental_rollup", "t2_enrichment", "t8_funnel",
@@ -11547,355 +10698,228 @@ _DRIVER_WINDOW = [
     "v1_variant_rollup",
 ]
 
-_R15_WINDOW_LEDGER = [
-    # ---- Round-15 rotation, now rotated out; ledger kept.
-    # Step IN:
-    # (a) the 9 r10-stamped queries the r14 ledger mandated to head this
-    #     roster (their stamps hit the 5-round floor now):
-    #     a2_status_counts, a4_union_counts, u3_distinct, j12_element_at,
-    #     f9_content_hash (displaced from the r14 (a) cohort), plus
-    #     a13_manybody_levels, u5_stratified_sample,
-    #     dd_contamination_neardup, dd_simhash (displaced by the r14
-    #     newcomers);
-    # (b) the round-15 newcomers, never driver-stamped (6):
-    #     s16_project_links (project record/dataset link/unlink/add/
-    #     import as MutableTable ops, VERDICT r14 item 2),
-    #     s17_molecule_modify (name/comment/identifier merge-vs-overwrite
-    #     with immutable hash+formula, item 3), s18_bucketed_mutations
-    #     (the n_buckets=8 partition-scoped-commit arm of the s13
-    #     script, same layered-CASE oracle verbatim — item 6's
-    #     correctness gate), and the three gate-only invariant arms
-    #     split out of the sketch queries (item 1):
-    #     a19_distinct_gate, a22_quantiles_gate, a24_heavy_hitters_gate
-    #     (each hash-green vs its r14 invariant oracle);
-    # (c) the three changed-after-stamp benched sketch arms (item 1):
-    #     a19_approx_distinct / a22_approx_quantiles / a24_heavy_hitters
-    #     are now sketch-ONLY (the production plan; the exact-replay
-    #     stage moved to the (b) gates) — rows/schema-gated with no SQL
-    #     oracle, so their r15 stamps will read no_oracle BY DESIGN (the
-    #     estimates are engine-specific; the hash gate lives in (b));
-    # (d) 32 of the 39-query r11-stamped cohort — the oldest remaining
-    #     stamps (the floor reaches r11 at r16).  Seven displaced, each
-    #     with a fresh in-window or recent-stamp family carrier:
-    #       st_stream_span        ⊂ dd_span_dedup (r13) +
-    #                             st_stream_urldedup (r14, streaming arm);
-    #       st_stream_substring   ⊂ dd_substring (r14, same CDC kernel) +
-    #                             st_stream_urldedup (r14);
-    #       st_stream_incremental ⊂ dd_incremental_labels (r14, same
-    #                             band-index probe);
-    #       tx_phrase_idx_incr    ⊂ tx_phrase_hits (r14) + tx_phrase_idx
-    #                             (r13, same posting algebra);
-    #       st_ann_serve          exercised EVERY round by the entry()
-    #                             smoke; probe family carried by the
-    #                             in-window sim_ivf_topk + sim_ivfpq_topk
-    #                             (r14);
-    #       tx_unigram_encode     ⊂ tx_unigram_tok (in-window under (d),
-    #                             the same learned-vocab encode);
-    #       sim_multiprobe_topk   ⊂ sim_lsh_topk (r13, the same
-    #                             hyperplane-LSH bucket probe — multi-
-    #                             probe adds the Hamming-1 ring) +
-    #                             in-window sim_filtered_topk.
-    #     All seven MUST head the r16 roster (their r11 stamps hit the
-    #     floor there) together with the remaining 32 r11 stamps'
-    #     natural expiry — i.e. the full r11 cohort re-enters at r16.
-    # Step OUT: the 50 r14 stamps (fresh) and the r12/r13 cohorts
-    # (within the floor).
-    # 9 + 6 + 3 + 32 = 50, zero fill slots this round.
-    # --- (a) r10-stamped, mandated by the r14 ledger (9) ---
-    "a2_status_counts", "a4_union_counts", "u3_distinct",
-    "j12_element_at", "f9_content_hash", "a13_manybody_levels",
-    "u5_stratified_sample", "dd_contamination_neardup", "dd_simhash",
-    # --- (b) round-15 newcomers (6) ---
-    "s16_project_links", "s17_molecule_modify", "s18_bucketed_mutations",
-    "a19_distinct_gate", "a22_quantiles_gate", "a24_heavy_hitters_gate",
-    # --- (c) changed-after-stamp sketch production arms (3) ---
-    "a19_approx_distinct", "a22_approx_quantiles", "a24_heavy_hitters",
-    # --- (d) r11 cohort, 32 of 39 ---
-    "a15_properties_df", "a18_cube_counts", "a20_salted_agg",
-    "a21_histogram", "a25_diversity", "a7_json_rollup", "a8_status_gate",
-    "a9_argmin", "d1_value_call", "o7_serial_claim", "pk_sliding_windows",
-    "s9_snapshot_diff", "sim_filtered_topk", "sim_hybrid_rrf",
-    "sim_ivf_topk", "sim_outliers", "sim_topk",
-    "t11_scd2", "t12_islands", "tx_doc_freq", "tx_kn_mod", "tx_source_kl",
-    "tx_tfidf", "tx_unigram_lm", "tx_unigram_tok", "u10_weighted_sample",
-    "u11_curriculum", "u13_coreset", "u14_doremi", "u7_epoch_shuffle",
-    "u8_group_sample_k", "u9_leak_split",
-]
 
-_R14_WINDOW_LEDGER = [
-    # ---- Round-14 rotation, now rotated out; ledger kept.
-    # Step IN:
-    # (a) 39 of the 44-query r10-stamped cohort — the oldest stamps in
-    #     the registry (the r13 ledger's pre-recorded r14 reserved core).
-    #     Five displaced by the slots below, each with a fresh in-window
-    #     or recent-stamp carrier (the same five the r9 ledger displaced
-    #     under identical reasoning, all re-verified green in this
-    #     round's full tools/check.py sf0.01 run):
-    #       a2_status_counts  ⊂ a5_two_col_counts (r13 stamp, same
-    #                         grouped-count family);
-    #       a4_union_counts   ⊂ a5 + the union family in j8_closure
-    #                         (in-window under (a));
-    #       u3_distinct       trivial DISTINCT ⊂ j9_anti_join (r12);
-    #       j12_element_at    array-tail scalar ⊂ a9_argmin (r11);
-    #       f9_content_hash   canonicalization hash ⊂ mol_identifiers
-    #                         (r12);
-    #     all five MUST head the r15 roster (their r10 stamps hit the
-    #     5-round floor there).
-    # (b) the round-14 newcomers, never driver-stamped (8):
-    #     dd_winnow_capped (the df-capped winnowing arm, now the benched
-    #     default — VERDICT r13 item 2), dd_simhash_scaled (corpus-scaled
-    #     band width over the 60-bit portable hash, item 3),
-    #     s13_status_mutations (record status mutations as MutableTable
-    #     ops with backup semantics, item 5), s14_dataset_clone (dataset
-    #     clone/copy_from as multi-table ops, item 6), o13_job_lifecycle
-    #     (internal-jobs progress/cancel lifecycle, missing-item 3 — it
-    #     takes the 40th (a) slot from a13_manybody_levels, whose
-    #     per-level decimal-weighted-sum family is carried by the
-    #     r13-stamped a12_weighted_sum, the same displacement the r9
-    #     ledger used), s15_attachments (external-file/dataset-attachment
-    #     metadata surface, missing-item 4 — it takes the 39th (a) slot
-    #     from u5_stratified_sample, whose per-stratum sample family is
-    #     carried by the r13-stamped u6_mixture_sample, again the r9
-    #     ledger's displacement), and tx_gopher_rules (the published
-    #     Gopher A1.1 rule set as one scan-side verdict — it takes the
-    #     38th (a) slot from dd_contamination_neardup, whose
-    #     signature+banding kernel is carried by the r14-in-window
-    #     dd_minhash_lsh and the r13-stamped dd_contamination, the r9
-    #     ledger's displacement), and tx_c4_clean (the C4 §2.2 line-
-    #     cleaning REWRITE beside the Gopher verdicts — it takes the
-    #     37th (a) slot from dd_simhash, whose signature family is
-    #     carried by the in-window dd_simhash_scaled newcomer plus the
-    #     r12-stamped dd_simhash_pairs, again the r9 ledger's
-    #     displacement); a13, u5, dd_contamination_neardup and
-    #     dd_simhash join the five r10 displacements heading the r15
-    #     roster;
-    # (c) the two displaced r09 stamps the r13 ledger mandated for r14:
-    #     tx_phrase_hits and dd_containment (the 5-round floor reaches
-    #     r09 at r15);
-    # (d) every query whose implementation or oracle changed after its
-    #     latest stamp (5): o8_waiting_reason + o12_waiting_details (the
-    #     NULL-required_programs missing-task short-circuit, r13 ADVICE —
-    #     fixture extended with the %89 programs-NULL stripe, both
-    #     oracles updated), and the three sketch conversions
-    #     a19_approx_distinct / a22_approx_quantiles / a24_heavy_hitters
-    #     (rows-only → invariant oracles, VERDICT r13 item 4 — each now
-    #     emits exact oracle-replayable columns + guarantee booleans).
-    #     tx_pr_curve also changed (localCheckpoint eager→lazy, r13
-    #     ADVICE) but the change is MECHANICAL — identical output
-    #     relation, r12 pipe_prepare precedent — re-verified hash-green
-    #     in this round's full tools/check.py run; its r13 stamp stands
-    #     and it re-enters with its cohort inside the 5-round floor.
-    # Step OUT: the 50 r13 stamps (fresh, except the (d) members
-    # re-entering) and the 41 r11 + 40 r12 stamps (within the floor);
-    # the r15 roster is headed by the five displaced r10s above plus the
-    # r11 cohort (which hits the floor at r16).
-    # 35 + 8 + 2 + 5 = 50, zero fill slots this round.
-    # --- (a) r10 cohort, 35 of 44 ---
-    "a23_corr", "dd_cap_duplicates", "dd_cluster",
-    "dd_cluster_rep", "dd_incremental_labels",
-    "dd_minhash_estimate", "dd_minhash_lsh", "dd_prefix_filter",
-    "dd_semdedup", "dd_source_overlap", "dd_substring",
-    "dd_url_dedup", "g1_pagerank", "h4_order_priority",
-    "h6_forecast_revenue", "j14_interval", "j16_adaptive_salted",
-    "j8_closure", "mm_features", "mm_phash_dedup", "p2_p3_filter_page",
-    "p4_tuple_in", "pipe_prepare", "pk_pack", "pk_site_cap",
-    "sim_cosine_pairs", "sim_ivfpq_topk", "st_session_custom",
-    "st_stream_urldedup", "tx_bpe_encode", "tx_bpe_merges",
-    "tx_domain_stats", "tx_html_extract", "tx_kn_lm", "tx_repetition",
-    # --- (b) round-14 newcomers (8) ---
-    "dd_winnow_capped", "dd_simhash_scaled", "s13_status_mutations",
-    "s14_dataset_clone", "o13_job_lifecycle", "s15_attachments",
-    "tx_gopher_rules", "tx_c4_clean",
-    # --- (c) displaced r09 stamps, mandated by the r13 ledger (2) ---
-    "tx_phrase_hits", "dd_containment",
-    # --- (d) changed after their latest stamp (5) ---
-    "o8_waiting_reason", "o12_waiting_details", "a19_approx_distinct",
-    "a22_approx_quantiles", "a24_heavy_hitters",
-]
+def build_registry(rows, head) -> dict[str, Query]:
+    """name -> Query from ``(name, Query)`` rows: the ``head`` names first,
+    the rest in row order.  A name declared twice raises (a dict literal
+    would silently keep the last one), and every head name must be a row
+    with an oracle."""
+    table: dict[str, Query] = {}
+    for name, query in rows:
+        if name in table:
+            raise ValueError(f"query {name!r} declared twice")
+        table[name] = query
+    bad = [n for n in head if n not in table or table[n].sql is None]
+    if bad or len(set(head)) != len(head):
+        raise ValueError(f"head names must be distinct rows with an oracle: {bad}")
+    return {**{n: table[n] for n in head}, **table}
 
-_R13_WINDOW_LEDGER = [
-    # ---- Round-13 rotation, now rotated out; ledger kept — the
-    # r12 ledger's pre-recorded plan landed EXACTLY:
-    # Step IN:
-    # (a) the r13 reserved core — the full 45-query r09-stamped cohort
-    #     the r12 ledger set aside (including the five r12 displacements
-    #     a10_map_agg, a11_sample_keys, a12_weighted_sum, a14_pivot,
-    #     a16_dedup_batch); after this round nothing older than r10
-    #     remains stamped;
-    # (b) the round-13 newcomers, never driver-stamped (2):
-    #     o12_waiting_details (the per-manager detail-string drill-down,
-    #     r12 VERDICT item 3) and s12_contributed_values (the
-    #     dataset-keyed contributed-values fetch, item 4);
-    # (c) every query whose implementation or oracle changed after its
-    #     latest stamp (5): pk_bfd_pack (rows-only → invariant oracle,
-    #     r12 VERDICT item 2 — the query now emits the SQL-checkable
-    #     invariant summary), o8_waiting_reason (waiting_reasons now
-    #     pre-aggregates managers into (programs, tags) classes, nit 2),
-    #     tx_pr_curve (pr_curve checkpoints its bucket grid, r12
-    #     ADVICE), and the two corpus-broadcast fixes from the sf10 spot
-    #     decade (dd_winnow's OOM class): dd_embed (r10 stamp;
-    #     embed_neardup_pairs now merge-hints its bucket self-join) and
-    #     dd_lev_verify (r12 stamp; text hydration is now two id-keyed
-    #     shuffle joins, nothing force-broadcast).  They displace the
-    #     core's tx_phrase_hits (exact-phrase family carried in-window
-    #     by tx_phrase_idx — the persisted-index arm probing the same
-    #     posting algebra) and dd_containment (gate-only template-corpus
-    #     query; the shingle-join family is carried in-window by
-    #     dd_jaccard); both displaced r09 stamps MUST take r14 slots —
-    #     the 5-round floor reaches r09 at r15.  dd_winnow and
-    #     sim_knn_join also changed (merge hint / broadcast_left) and
-    #     are already in (a).  The other r13 table.py/queue.py changes
-    #     touch NO registry plan: the hardlink fallback fires only on
-    #     link-less filesystems, the vacuum batch-recheck and transform
-    #     meta-merge live outside every registry query's path, and the
-    #     queue claim arms are pytest-gated (T4 has no oracle-shaped
-    #     query by design).  dd_jaccard_capped's sf10 fix is session
-    #     memory sizing only (no plan change) — its r12 stamp stands.
-    #     The merge-hint sweep also touched dd_minhash_lsh,
-    #     dd_minhash_estimate, dd_simhash_pairs and dd_lsh_recall_eval
-    #     (join STRATEGY only, identical output relation — the r12
-    #     pipe_prepare mechanical-change precedent): their stamps stand,
-    #     re-verified hash-green in this round's full tools/check.py
-    #     sf0.01 run, and all four (r10/r12 stamps) re-enter with their
-    #     cohorts inside the 5-round floor regardless.
-    # Step OUT: the 50 r12 stamps (all freshly green except the
-    # re-entering (c) members) and the 40 r10 + 41 r11 stamps (within
-    # the 5-round floor; they form the r14/r15 reserved cores, headed by
-    # the two displaced r09 queries above).
-    # 43 + 2 + 5 = 50, zero fill slots this round.
-    # --- (a) the r13 reserved core (43 of the 45-query r09 cohort;
-    #     tx_phrase_hits + dd_containment displaced, see (c)) ---
-    "a10_map_agg", "a11_sample_keys", "a12_weighted_sum", "a14_pivot",
-    "a16_dedup_batch", "a17_group_centroid", "a22_approx_quantiles",
-    "a5_two_col_counts", "a6_access_summary",
-    "dd_contamination", "dd_exact", "dd_jaccard", "dd_span_dedup",
-    "dd_substring_incremental", "dd_winnow", "ds_missing_cells",
-    "h1_pricing_summary", "h3_top_revenue", "j10_count_join",
-    "j1_dim_join", "j4_semi_join", "o2_priority_topk", "p5_json_extract",
-    "p7_array_overlap", "p8_int_or_name", "s10_compact",
-    "s1_scan_project", "s4_upsert_classify", "sim_ivf_batch_topk",
-    "sim_knn_join", "sim_lsh_topk", "sim_pq_topk", "st_sessionize",
-    "t13_thread_assembly", "t3_hourly_rollup", "tx_bigram_lm",
-    "tx_phrase_idx", "tx_pii", "tx_pmi_bigrams",
-    "tx_quality_sweep", "tx_text_stats", "u6_mixture_sample",
-    "w1_window_lag",
-    # --- (b) round-13 newcomers (2) ---
-    "o12_waiting_details", "s12_contributed_values",
-    # --- (c) changed after their latest stamp (5) ---
-    "pk_bfd_pack", "o8_waiting_reason", "tx_pr_curve",
-    "dd_embed", "dd_lev_verify",
-]
 
-_R12_WINDOW_LEDGER = [
-    # ---- Round-12 rotation (the r11 ledger's pre-recorded plan + that
-    # round's code changes), computed from tools/stale_stamps.py.
-    # Step IN:
-    # (a) the 30-entry RESERVED CORE recorded in the r11 ledger above —
-    #     the 24 r08-stamped leftovers plus the six r11 displacements
-    #     (dd_simhash_pairs, dd_lsh_recall_eval, dd_lev_verify,
-    #     dd_jaccard_capped, dd_incremental, dd_common_ngrams); nothing
-    #     older than r09 remains stamped after this round;
-    # (b) the round-12 newcomers, never driver-stamped (10):
-    #     o8_waiting_reason (the waiting-reason diagnostic, VERDICT r11
-    #     item 3), j17_spec_chain3 (3-level spec-chain elision, item 4),
-    #     o9_service_replay (the T5 ServiceLoop replay under the hash
-    #     gate, item 5), sim_ivf_recall_eval (the IVF probe-budget
-    #     recall sweep, item 6), o10_manager_reap (the heartbeat reap
-    #     report — T4's manager-death arm under the hash gate; it
-    #     displaces the 5th r09 fill slot a16_dedup_batch, whose keyed
-    #     dedup family is carried by the in-window s3_insert_dedup_table
-    #     + the r10-stamped dd_exact; a16 joins the r13 core), and
-    #     tx_pr_curve (the labeled classifier-calibration curve — it
-    #     displaces the 4th fill slot a14_pivot, whose pivot family is
-    #     carried by the in-window a15_properties_df stamp (r11) +
-    #     compile_values pytests; a14 joins the r13 core), and
-    #     sim_pq_distortion (the PQ quantization-health report — it
-    #     displaces the 3rd fill slot a12_weighted_sum, whose weighted-
-    #     sum family is carried by the in-window a7_json_rollup stamp
-    #     (r11) + the decimal-sum discipline pytests; a12 joins the r13
-    #     core), and j18_project_list (the project-inventory join,
-    #     reference project_socket.list parity — it displaces the 2nd
-    #     fill slot a11_sample_keys, whose DISTINCT-ON sample family is
-    #     carried by the in-window a9_argmin stamp (r11); a11 joins the
-    #     r13 core), and o11_status_replay (the reset/cancel/invalidate
-    #     transition-matrix replay — it displaces the 1st fill slot
-    #     a10_map_agg, whose r09 stamp stays green and within the
-    #     4-round staleness floor until r13, where the whole r09 cohort
-    #     re-enters as the reserved core), and u15_temperature_mix (the
-    #     temperature-scaled mixture baseline beside u14_doremi — with
-    #     the r09 fill exhausted it takes the (c) slot of pipe_prepare,
-    #     whose r12 change is the MECHANICAL extraction of its stages
-    #     into pipe_stage_relations: output identity is pinned by the
-    #     funnel reuse≡recompute pytest and re-verified hash-green in
-    #     this round's full tools/check.py sf0.01 run, so its r10 stamp
-    #     remains truthful; pipe_prepare re-enters with the r13 core);
-    # (c) every query whose implementation changed after its latest
-    #     stamp (11): the six MutableTable consumers — the S3-safe
-    #     manifest claim strategy + the r11-ADVICE ABA/version-parse/
-    #     add-default fixes rewrote the commit path under
-    #     s3_insert_dedup_table, s6_delete_survivors,
-    #     s7_retention_survivors, s11_schema_evolution, st_rollup_stream
-    #     and t10_incremental_rollup; the two export consumers —
-    #     export.py's crash-window recovery arm touched pipe_export and
-    #     st_stream_export; pipe_prepare + pipe_funnel (the shared
-    #     pipe_stage_relations builder refactor and the funnel's
-    #     stages= reuse arm, VERDICT r11 item 8); and j2_subspec_join
-    #     (spec_chain_join now delegates to the N-level generalization).
-    # (d) the 5 alphabetically-first r09-stamped hash-green queries —
-    #     the next-oldest cohort.
-    # Step OUT: the 41 remaining r11 stamps and 43 r10 stamps (all
-    # freshly green within two rounds), plus the 45 remaining r09
-    # queries: these are the RESERVED CORE of the r13 roster (45 + r13
-    # newcomers/changes + r10 fill ≤ 50): a10_map_agg (displaced by
-    # o11_status_replay), a11_sample_keys (displaced by
-    # j18_project_list), a12_weighted_sum (displaced
-    # by sim_pq_distortion), a14_pivot (displaced by
-    # tx_pr_curve), a16_dedup_batch (displaced
-    # by o10_manager_reap), a17_group_centroid,
-    # a22_approx_quantiles, a5_two_col_counts, a6_access_summary,
-    # dd_containment, dd_contamination, dd_exact, dd_jaccard,
-    # dd_span_dedup, dd_substring_incremental, dd_winnow,
-    # ds_missing_cells, h1_pricing_summary, h3_top_revenue,
-    # j10_count_join, j1_dim_join, j4_semi_join, o2_priority_topk,
-    # p5_json_extract, p7_array_overlap, p8_int_or_name, s10_compact,
-    # s1_scan_project, s4_upsert_classify, sim_ivf_batch_topk,
-    # sim_knn_join, sim_lsh_topk, sim_pq_topk, st_sessionize,
-    # t13_thread_assembly, t3_hourly_rollup, tx_bigram_lm,
-    # tx_phrase_hits, tx_phrase_idx, tx_pii, tx_pmi_bigrams,
-    # tx_quality_sweep, tx_text_stats, u6_mixture_sample, w1_window_lag.
-    # After r12 stamps: registry = 181; staleness floor stays
-    # ceil(181/45) = 4 rounds (tools/stale_stamps.py computes it).
-    # --- (a) the r12 reserved core (30) ---
-    "f12_hour_percentiles", "j13_asof", "j15_salted_join", "j5_one_hop",
-    "j6_membership", "j9_anti_join", "mol_identifiers", "pk_bfd_pack",
-    "pk_bin_pack", "pk_domain_cap", "pk_length_buckets", "s2_bulk_get",
-    "s8_snapshot_roundtrip", "sim_hard_negatives", "sim_index_stats",
-    "t2_enrichment", "t8_funnel", "t9_cohort_retention", "tx_bm25",
-    "tx_boilerplate_ratio", "tx_dsir", "tx_quality_clf", "u12_interleave",
-    "v1_variant_rollup", "dd_simhash_pairs", "dd_lsh_recall_eval",
-    "dd_lev_verify", "dd_jaccard_capped", "dd_incremental",
-    "dd_common_ngrams",
-    # --- (b) round-12 newcomers (10) ---
-    "o8_waiting_reason", "j17_spec_chain3", "o9_service_replay",
-    "sim_ivf_recall_eval", "o10_manager_reap", "tx_pr_curve",
-    "sim_pq_distortion", "j18_project_list", "o11_status_replay",
-    "u15_temperature_mix",
-    # --- (c) changed after their latest stamp (10; pipe_prepare
-    #     yields its slot to u15, see (b)) ---
-    "s3_insert_dedup_table", "s6_delete_survivors",
-    "s7_retention_survivors", "s11_schema_evolution", "st_rollup_stream",
-    "t10_incremental_rollup", "pipe_export", "st_stream_export",
-    "pipe_funnel", "j2_subspec_join",
-    # --- (d) r09 fill: exhausted — all 5 slots yield to the r12
-    #     newcomers beyond the verdict list (o11_status_replay /
-    #     j18_project_list / sim_pq_distortion / tx_pr_curve /
-    #     o10_manager_reap, see (b)); the full r09 cohort of 45 is the
-    #     r13 reserved core ---
-]
-
-assert len(_DRIVER_WINDOW) == 50, len(_DRIVER_WINDOW)
-assert set(_DRIVER_WINDOW) <= set(REGISTRY), set(_DRIVER_WINDOW) - set(REGISTRY)
-REGISTRY = {
-    **{n: REGISTRY[n] for n in _DRIVER_WINDOW},
-    **{n: v for n, v in REGISTRY.items() if n not in _DRIVER_WINDOW},
-}
+# One row per query.  Rows without ``bench=True`` are gate-only: each call
+# times scratch IO (a mutation, index, stream-sink or compaction write) ahead
+# of its plan, or pays a deliberately quadratic or serial cost (exact-truth
+# joins, edit-distance verify, PageRank rounds) whose scaled physics a benched
+# sibling carries.
+REGISTRY: dict[str, Query] = build_registry(
+    [
+        ("s1_scan_project", Query(q_s1_scan_project, SQL_S1)),
+        ("p2_p3_filter_page", Query(q_p2_p3_filter_page, SQL_P2_P3, bench=True)),
+        ("s2_bulk_get", Query(q_s2_bulk_get, SQL_S2)),
+        ("p4_tuple_in", Query(q_p4_tuple_in, SQL_P4)),
+        ("p5_json_extract", Query(q_p5_json_extract, SQL_P5)),
+        ("p7_array_overlap", Query(q_p7_array_overlap, SQL_P7)),
+        ("p8_int_or_name", Query(q_p8_int_or_name, SQL_P8)),
+        ("j1_dim_join", Query(q_j1_dim_join, SQL_J1)),
+        ("j2_subspec_join", Query(q_j2_subspec_join, SQL_J2, bench=True)),
+        ("j17_spec_chain3", Query(q_j17_spec_chain3, SQL_J17, bench=True)),
+        ("o7_serial_claim", Query(q_o7_serial_claim, SQL_O7, bench=True)),
+        ("o8_waiting_reason", Query(q_o8_waiting_reason, SQL_O8, bench=True)),
+        ("o9_service_replay", Query(q_o9_service_replay, SQL_O9, bench=True)),
+        ("o10_manager_reap", Query(q_o10_manager_reap, SQL_O10, bench=True)),
+        ("j18_project_list", Query(q_j18_project_list, SQL_J18, bench=True)),
+        ("o11_status_replay", Query(q_o11_status_replay, SQL_O11, bench=True)),
+        ("o12_waiting_details", Query(q_o12_waiting_details, SQL_O12, bench=True)),
+        ("j4_semi_join", Query(q_j4_semi_join, SQL_J4)),
+        ("j9_anti_join", Query(q_j9_anti_join, SQL_J9)),
+        ("j10_count_join", Query(q_j10_count_join, SQL_J10, bench=True)),
+        ("j8_closure", Query(q_j8_closure, SQL_J8, bench=True)),
+        ("a2_status_counts", Query(q_a2_status_counts, SQL_A2)),
+        ("a5_two_col_counts", Query(q_a5_two_col_counts, SQL_A5)),
+        ("a6_access_summary", Query(q_a6_access_summary, SQL_A6, bench=True)),
+        ("a7_json_rollup", Query(q_a7_json_rollup, SQL_A7)),
+        ("a8_status_gate", Query(q_a8_status_gate, SQL_A8, bench=True)),
+        ("a9_argmin", Query(q_a9_argmin, SQL_A9, bench=True)),
+        ("a10_map_agg", Query(q_a10_map_agg, SQL_A10, bench=True)),
+        ("a12_weighted_sum", Query(q_a12_weighted_sum, SQL_A12)),
+        ("a14_pivot", Query(q_a14_pivot, SQL_A14, bench=True)),
+        ("a16_dedup_batch", Query(q_a16_dedup_batch, SQL_A16)),
+        ("o2_priority_topk", Query(q_o2_priority_topk, SQL_O2, bench=True)),
+        ("w1_window_lag", Query(q_w1_window_lag, SQL_W1, bench=True)),
+        ("t3_hourly_rollup", Query(q_t3_hourly_rollup, SQL_T3, bench=True)),
+        ("s4_upsert_classify", Query(q_s4_upsert_classify, SQL_S4)),
+        ("ds_missing_cells", Query(q_ds_missing_cells, SQL_DS_MISSING)),
+        ("u3_distinct", Query(q_u3_distinct, SQL_U3)),
+        ("h1_pricing_summary", Query(q_h1_pricing_summary, SQL_H1, bench=True)),
+        ("h3_top_revenue", Query(q_h3_top_revenue, SQL_H3, bench=True)),
+        ("tx_text_stats", Query(q_tx_text_stats, SQL_TX_STATS, bench=True)),
+        ("dd_exact", Query(q_dd_exact, SQL_DD_EXACT, bench=True)),
+        ("dd_jaccard", Query(q_dd_jaccard, SQL_DD_JACCARD)),
+        ("dd_simhash", Query(q_dd_simhash, SQL_DD_SIMHASH, bench=True)),
+        ("dd_minhash_lsh", Query(q_dd_minhash_lsh, SQL_DD_MINHASH, bench=True)),
+        ("sim_topk", Query(q_sim_topk, SQL_SIM_TOPK, bench=True)),
+        ("sim_lsh_topk", Query(q_sim_lsh_topk, SQL_SIM_LSH, bench=True)),
+        ("mm_features", Query(q_mm_features, SQL_MM_FEATURES)),
+        ("dd_lsh_recall_eval", Query(q_dd_lsh_recall_eval, _lsh_recall_oracle_sql())),
+        ("dd_contamination_neardup", Query(q_dd_contamination_neardup, SQL_DD_CONTAM_ND)),
+        ("dd_simhash_scaled", Query(q_dd_simhash_scaled, SQL_DD_SIMHASH_SCALED, bench=True)),
+        ("h6_forecast_revenue", Query(q_h6_forecast_revenue, SQL_H6, bench=True)),
+        ("a17_group_centroid", Query(q_a17_group_centroid, SQL_A17, bench=True)),
+        ("dd_simhash_pairs", Query(q_dd_simhash_pairs, SQL_DD_SIMHASH_PAIRS)),
+        ("dd_contamination", Query(q_dd_contamination, SQL_DD_CONTAM, bench=True)),
+        ("tx_repetition", Query(q_tx_repetition, SQL_TX_REP)),
+        ("u5_stratified_sample", Query(q_u5_stratified_sample, SQL_U5)),
+        ("a4_union_counts", Query(q_a4_union_counts, SQL_A4)),
+        ("a11_sample_keys", Query(q_a11_sample_keys, SQL_A11)),
+        ("f9_content_hash", Query(q_f9_content_hash, SQL_F9)),
+        ("j12_element_at", Query(q_j12_element_at, SQL_J12)),
+        ("d1_value_call", Query(q_d1_value_call, SQL_D1)),
+        ("sim_cosine_pairs", Query(q_sim_cosine_pairs, SQL_SIM_PAIRS, bench=True)),
+        ("sim_ivf_topk", Query(q_sim_ivf_topk, SQL_SIM_IVF, bench=True)),
+        ("sim_knn_join", Query(q_sim_knn_join, SQL_SIM_KNN)),
+        ("dd_cluster", Query(q_dd_cluster, SQL_DD_CLUSTER, bench=True)),
+        ("j13_asof", Query(q_j13_asof, SQL_J13, bench=True)),
+        ("j14_interval", Query(q_j14_interval, SQL_J14, bench=True)),
+        ("f12_hour_percentiles", Query(q_f12_hour_percentiles, SQL_F12, bench=True)),
+        ("a15_properties_df", Query(q_a15_properties_df, SQL_A15, bench=True)),
+        ("s12_contributed_values", Query(q_s12_contributed_values, SQL_S12, bench=True)),
+        ("s13_status_mutations", Query(q_s13_status_mutations, SQL_S13)),
+        ("s18_bucketed_mutations", Query(q_s18_bucketed_mutations, SQL_S13)),
+        ("s14_dataset_clone", Query(q_s14_dataset_clone, SQL_S14)),
+        ("s16_project_links", Query(q_s16_project_links, SQL_S16)),
+        ("s17_molecule_modify", Query(q_s17_molecule_modify, SQL_S17)),
+        ("o13_job_lifecycle", Query(q_o13_job_lifecycle, SQL_O13)),
+        ("s15_attachments", Query(q_s15_attachments, SQL_S15)),
+        ("tx_gopher_rules", Query(q_tx_gopher_rules, SQL_TX_GOPHER, bench=True)),
+        ("tx_c4_clean", Query(q_tx_c4_clean, SQL_TX_C4, bench=True)),
+        ("st_sessionize", Query(q_st_sessionize, SQL_ST_SESSION, bench=True)),
+        ("st_session_custom", Query(q_st_session_custom, SQL_ST_SESSION_CUSTOM)),
+        ("t2_enrichment", Query(q_t2_enrichment, SQL_T2)),
+        ("mol_identifiers", Query(q_mol_identifiers, SQL_MOL_IDENTIFIERS)),
+        ("a13_manybody_levels", Query(q_a13_manybody_levels, SQL_A13)),
+        ("dd_winnow", Query(q_dd_winnow, SQL_DD_WINNOW)),
+        ("dd_winnow_capped", Query(q_dd_winnow_capped, SQL_DD_WINNOW_CAPPED, bench=True)),
+        ("dd_substring", Query(q_dd_substring, SQL_DD_SUBSTRING, bench=True)),
+        ("dd_substring_incremental", Query(q_dd_substring_incremental, SQL_DD_SUBSTRING_INCR)),
+        ("dd_embed", Query(q_dd_embed, SQL_DD_EMBED)),
+        ("tx_tfidf", Query(q_tx_tfidf, SQL_TX_TFIDF, bench=True)),
+        ("tx_unigram_lm", Query(q_tx_unigram_lm, SQL_TX_UNIGRAM, bench=True)),
+        ("u14_doremi", Query(q_u14_doremi, SQL_U14_DOREMI, bench=True)),
+        ("u15_temperature_mix", Query(q_u15_temperature_mix, SQL_U15, bench=True)),
+        ("tx_pii", Query(q_tx_pii, SQL_TX_PII, bench=True)),
+        ("pk_pack", Query(q_pk_pack, SQL_PK_PACK, bench=True)),
+        ("dd_common_ngrams", Query(q_dd_common_ngrams, SQL_DD_COMMON, bench=True)),
+        ("u6_mixture_sample", Query(q_u6_mixture_sample, SQL_U6_MIXTURE)),
+        ("pk_domain_cap", Query(q_pk_domain_cap, SQL_PK_DOMAIN_CAP, bench=True)),
+        ("sim_pq_topk", Query(q_sim_pq_topk, SQL_SIM_PQ, bench=True)),
+        ("sim_pq_distortion", Query(q_sim_pq_distortion, SQL_SIM_PQ_DISTORTION, bench=True)),
+        ("sim_ivfpq_topk", Query(q_sim_ivfpq_topk, SQL_SIM_IVFPQ, bench=True)),
+        ("sim_hard_negatives",
+         Query(q_sim_hard_negatives, _hard_negatives_oracle_sql(), bench=True)),
+        ("sim_index_stats", Query(q_sim_index_stats, _index_stats_oracle_sql(), bench=True)),
+        ("sim_ivf_batch_topk", Query(q_sim_ivf_batch_topk, SQL_SIM_IVF_BATCH, bench=True)),
+        ("tx_dsir", Query(q_tx_dsir, SQL_TX_DSIR, bench=True)),
+        ("tx_quality_clf", Query(q_tx_quality_clf, SQL_TX_QCLF, bench=True)),
+        ("dd_containment", Query(q_dd_containment, SQL_DD_CONTAIN)),
+        ("dd_span_dedup", Query(q_dd_span_dedup, SQL_DD_SPAN, bench=True)),
+        ("dd_semdedup", Query(q_dd_semdedup, SQL_DD_SEMDEDUP, bench=True)),
+        ("tx_bm25", Query(q_tx_bm25, SQL_TX_BM25, bench=True)),
+        ("sim_hybrid_rrf", Query(q_sim_hybrid_rrf, SQL_SIM_HYBRID_RRF, bench=True)),
+        ("a18_cube_counts", Query(q_a18_cube_counts, SQL_A18, bench=True)),
+        ("a19_approx_distinct", Query(q_a19_approx_distinct, None, bench=True)),
+        ("a19_distinct_gate", Query(q_a19_distinct_gate, SQL_A19)),
+        ("a22_approx_quantiles", Query(q_a22_approx_quantiles, None, bench=True)),
+        ("a22_quantiles_gate", Query(q_a22_quantiles_gate, SQL_A22)),
+        ("mm_phash_dedup", Query(q_mm_phash_dedup, SQL_MM_PHASH)),
+        ("t10_incremental_rollup", Query(q_t10_incremental_rollup, SQL_T10)),
+        ("pipe_prepare", Query(q_pipe_prepare, SQL_PIPE, bench=True)),
+        ("pipe_funnel", Query(q_pipe_funnel, SQL_PIPE_FUNNEL, bench=True)),
+        ("pipe_export", Query(q_pipe_export, SQL_PIPE_EXPORT, bench=True)),
+        ("t8_funnel", Query(q_t8_funnel, SQL_T8, bench=True)),
+        ("t9_cohort_retention", Query(q_t9_cohort_retention, SQL_T9, bench=True)),
+        ("a20_salted_agg", Query(q_a20_salted_agg, SQL_A20, bench=True)),
+        ("j15_salted_join", Query(q_j15_salted_join, SQL_J15, bench=True)),
+        ("j16_adaptive_salted", Query(q_j16_adaptive_salted, SQL_J16, bench=True)),
+        ("a21_histogram", Query(q_a21_histogram, SQL_A21, bench=True)),
+        ("dd_lev_verify", Query(q_dd_lev_verify, SQL_DD_LEV)),
+        ("dd_jaccard_capped", Query(q_dd_jaccard_capped, SQL_DD_JACCARD_CAPPED, bench=True)),
+        ("dd_incremental", Query(q_dd_incremental, SQL_DD_INCREMENTAL)),
+        ("j5_one_hop", Query(q_j5_one_hop, SQL_J5, bench=True)),
+        ("j6_membership", Query(q_j6_membership, SQL_J6, bench=True)),
+        ("s6_delete_survivors", Query(q_s6_delete_survivors, SQL_S6)),
+        ("s8_snapshot_roundtrip", Query(q_s8_snapshot_roundtrip, SQL_S8)),
+        ("s10_compact", Query(q_s10_compact, SQL_S10)),
+        ("s11_schema_evolution", Query(q_s11_schema_evolution, SQL_S11)),
+        ("s3_insert_dedup_table", Query(q_s3_insert_dedup_table, SQL_S3)),
+        ("s7_retention_survivors", Query(q_s7_retention_survivors, SQL_S7)),
+        ("st_stream_export", Query(q_st_stream_export, _stream_export_sql())),
+        ("st_stream_span", Query(q_st_stream_span, SQL_ST_STREAM_SPAN)),
+        ("st_stream_urldedup", Query(q_st_stream_urldedup, _stream_urldedup_sql())),
+        ("st_stream_substring", Query(q_st_stream_substring, SQL_ST_STREAM_SUBSTRING)),
+        ("st_stream_incremental", Query(q_st_stream_incremental, SQL_ST_STREAM_INCR)),
+        ("st_rollup_stream", Query(q_st_rollup_stream, SQL_ST_ROLLUP)),
+        ("v1_variant_rollup", Query(q_v1_variant_rollup, SQL_V1, bench=True)),
+        ("u7_epoch_shuffle", Query(q_u7_epoch_shuffle, SQL_U7, bench=True)),
+        ("u8_group_sample_k", Query(q_u8_group_sample_k, SQL_U8, bench=True)),
+        ("dd_source_overlap", Query(q_dd_source_overlap, SQL_DD_SOURCE_OVERLAP, bench=True)),
+        ("dd_minhash_estimate", Query(q_dd_minhash_estimate, SQL_DD_MINHASH_EST, bench=True)),
+        ("st_ann_serve", Query(q_st_ann_serve, SQL_SIM_IVF_BATCH)),
+        ("pk_length_buckets", Query(q_pk_length_buckets, SQL_PK_BUCKETS, bench=True)),
+        ("pk_bin_pack", Query(q_pk_bin_pack, SQL_PK_BIN_PACK, bench=True)),
+        ("pk_bfd_pack", Query(q_pk_bfd_pack, SQL_PK_BFD_PACK, bench=True)),
+        ("tx_doc_freq", Query(q_tx_doc_freq, SQL_TX_DOC_FREQ, bench=True)),
+        ("dd_url_dedup", Query(q_dd_url_dedup, _url_dedup_sql(), bench=True)),
+        ("pk_site_cap", Query(q_pk_site_cap, _site_cap_sql(), bench=True)),
+        ("tx_domain_stats", Query(q_tx_domain_stats, _domain_stats_sql(), bench=True)),
+        ("tx_phrase_hits", Query(q_tx_phrase_hits, SQL_TX_PHRASE, bench=True)),
+        ("tx_phrase_idx", Query(q_tx_phrase_idx, SQL_TX_PHRASE_IDX, bench=True)),
+        ("tx_phrase_idx_incr", Query(q_tx_phrase_idx_incr, SQL_TX_PHRASE_IDX)),
+        ("a25_diversity", Query(q_a25_diversity, SQL_A25, bench=True)),
+        ("u12_interleave", Query(q_u12_interleave, SQL_U12, bench=True)),
+        ("dd_cluster_rep", Query(q_dd_cluster_rep, SQL_DD_CLUSTER_REP, bench=True)),
+        ("u9_leak_split", Query(q_u9_leak_split, SQL_U9_LEAK_SPLIT, bench=True)),
+        ("u13_coreset", Query(q_u13_coreset, SQL_U13_CORESET, bench=True)),
+        ("sim_outliers", Query(q_sim_outliers, SQL_SIM_OUTLIERS, bench=True)),
+        ("h4_order_priority", Query(q_h4_order_priority, SQL_H4, bench=True)),
+        ("u10_weighted_sample", Query(q_u10_weighted_sample, SQL_U10, bench=True)),
+        ("s9_snapshot_diff", Query(q_s9_snapshot_diff, SQL_S9_DIFF, bench=True)),
+        ("pk_sliding_windows", Query(q_pk_sliding_windows, SQL_PK_WINDOWS, bench=True)),
+        ("dd_prefix_filter", Query(q_dd_prefix_filter, SQL_DD_PREFIX)),
+        ("t11_scd2", Query(q_t11_scd2, SQL_T11, bench=True)),
+        ("a23_corr", Query(q_a23_corr, SQL_A23, bench=True)),
+        ("g1_pagerank", Query(q_g1_pagerank, SQL_G1_PAGERANK)),
+        ("tx_source_kl", Query(q_tx_source_kl, SQL_TX_SOURCE_KL, bench=True)),
+        ("a24_heavy_hitters", Query(q_a24_heavy_hitters, None, bench=True)),
+        ("a24_heavy_hitters_gate", Query(q_a24_heavy_hitters_gate, SQL_A24)),
+        ("sim_multiprobe_topk", Query(q_sim_multiprobe_topk, SQL_SIM_MULTIPROBE, bench=True)),
+        ("sim_filtered_topk", Query(q_sim_filtered_topk, SQL_SIM_FILTERED, bench=True)),
+        ("sim_ivf_recall_eval", Query(q_sim_ivf_recall_eval, SQL_SIM_IVF_RECALL, bench=True)),
+        ("dd_cap_duplicates", Query(q_dd_cap_duplicates, SQL_DD_CAP, bench=True)),
+        ("dd_incremental_labels", Query(q_dd_incremental_labels, SQL_DD_INCR_LABELS)),
+        ("u11_curriculum", Query(q_u11_curriculum, SQL_U11, bench=True)),
+        ("t12_islands", Query(q_t12_islands, SQL_T12, bench=True)),
+        ("t13_thread_assembly", Query(q_t13_thread_assembly, SQL_T13, bench=True)),
+        ("tx_pmi_bigrams", Query(q_tx_pmi_bigrams, SQL_TX_PMI, bench=True)),
+        ("tx_boilerplate_ratio", Query(q_tx_boilerplate_ratio, SQL_TX_BOILERPLATE, bench=True)),
+        ("tx_html_extract", Query(q_tx_html_extract, _html_extract_sql(), bench=True)),
+        ("tx_bigram_lm", Query(q_tx_bigram_lm, SQL_TX_BIGRAM_LM, bench=True)),
+        ("tx_kn_lm", Query(q_tx_kn_lm, SQL_TX_KN_LM, bench=True)),
+        ("tx_kn_mod", Query(q_tx_kn_mod, SQL_TX_KN_MOD, bench=True)),
+        ("tx_bpe_merges", Query(q_tx_bpe_merges, SQL_TX_BPE_MERGES, bench=True)),
+        ("tx_bpe_encode", Query(q_tx_bpe_encode, SQL_TX_BPE_ENCODE, bench=True)),
+        ("tx_unigram_tok", Query(q_tx_unigram_tok, SQL_TX_UNIGRAM_TOK, bench=True)),
+        ("tx_unigram_encode", Query(q_tx_unigram_encode, SQL_TX_UNIGRAM_ENCODE, bench=True)),
+        ("tx_quality_sweep", Query(q_tx_quality_sweep, SQL_TX_QUALITY_SWEEP, bench=True)),
+        ("tx_pr_curve", Query(q_tx_pr_curve, SQL_TX_PR_CURVE, bench=True)),
+    ],
+    head=_DRIVER_WINDOW,
+)

@@ -90,7 +90,7 @@ def test_deterministic_and_k_exhaustion(spark):
 
 
 def test_registry_query_shape(spark):
-    fn, _ = REGISTRY["u13_coreset"]
+    fn = REGISTRY["u13_coreset"].fn
     out = fn(spark, SF_SMOKE).collect()
     assert len(out) == 8
     assert len(set(r["vec_id"] for r in out)) == 8  # centers are distinct

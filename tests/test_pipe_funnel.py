@@ -10,7 +10,7 @@ from conftest import SF_SMOKE
 
 
 def test_funnel_is_monotone_and_consistent(spark):
-    fn, _ = REGISTRY["pipe_funnel"]
+    fn = REGISTRY["pipe_funnel"].fn
     rows = sorted(fn(spark, SF_SMOKE).collect(), key=lambda r: r["stage"])
     assert [r["stage"] for r in rows] == [0, 1, 2, 3]
     counts = [r["n_docs"] for r in rows]
@@ -18,7 +18,7 @@ def test_funnel_is_monotone_and_consistent(spark):
     assert counts == sorted(counts, reverse=True)
     assert toks == sorted(toks, reverse=True)
     assert abs(rows[0]["retained_pct"] - 100.0) < 1e-9
-    prep_fn, _ = REGISTRY["pipe_prepare"]
+    prep_fn = REGISTRY["pipe_prepare"].fn
     assert rows[3]["n_docs"] == prep_fn(spark, SF_SMOKE).count()
 
 

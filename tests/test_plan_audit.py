@@ -28,7 +28,7 @@ def static_plan_spark(spark):
 
 @pytest.mark.parametrize("name", [n for n in REGISTRY if n not in SKIP])
 def test_plan_properties(static_plan_spark, name):
-    fn, _ = REGISTRY[name]
+    fn = REGISTRY[name].fn
     df = fn(static_plan_spark, SF)
     problems = audit_one(name, df)
     assert not problems, f"{name}: {problems}"

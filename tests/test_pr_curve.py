@@ -45,7 +45,7 @@ def test_pr_curve_invariants_on_corpus(spark):
     exactly that)."""
     from qcfractal_spark.queries import REGISTRY
 
-    fn, _ = REGISTRY["tx_pr_curve"]
+    fn = REGISTRY["tx_pr_curve"].fn
     rows = sorted(
         fn(spark, "/root/testdata/sf0.001").collect(),
         key=lambda r: -r["threshold"],

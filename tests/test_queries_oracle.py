@@ -12,7 +12,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from qcfractal_spark.queries import BENCH_ONLY, REGISTRY
+from __spark_entry__ import queries
+from qcfractal_spark.queries import REGISTRY
 
 from conftest import SF_SMOKE
 
@@ -33,9 +34,9 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
-@pytest.mark.parametrize("name", [n for n, (_, sql) in REGISTRY.items() if sql])
+@pytest.mark.parametrize("name", [n for n, q in REGISTRY.items() if q.sql])
 def test_oracle_parity(spark, duck, name):
-    fn, sql = REGISTRY[name]
+    fn, sql = REGISTRY[name].fn, REGISTRY[name].sql
     got = _normalize(fn(spark, SF_SMOKE).toPandas())
     exp = _normalize(duck.execute(sql).fetchdf())
     assert list(got.columns) == list(exp.columns)
@@ -55,15 +56,10 @@ def test_oracle_parity(spark, duck, name):
         assert same.all(), f"{name}.{c}: first diff at {list(got.index[~same])[:3]}"
 
 
-# r16: every REGISTRY entry now carries an oracle (VERDICT r15 item 1);
-# the rows-only arms live in BENCH_ONLY and stay smoked here.
-@pytest.mark.parametrize(
-    "name",
-    [n for n, (_, sql) in REGISTRY.items() if sql is None] + list(BENCH_ONLY),
-)
+# The oracle-less sketch arms stay out of queries() but are smoked here.
+@pytest.mark.parametrize("name", [n for n, q in REGISTRY.items() if q.sql is None])
 def test_rows_only_queries_run(spark, name):
-    fn = REGISTRY[name][0] if name in REGISTRY else BENCH_ONLY[name]
-    df = fn(spark, SF_SMOKE)
+    df = REGISTRY[name].fn(spark, SF_SMOKE)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
 
@@ -72,7 +68,7 @@ def test_registry_entries_all_oracle_backed():
     """The r15 regression class: a queries() entry with no oracle fails
     the driver with no_oracle whenever its window samples it.  Pin the
     invariant that caused it to zero."""
-    missing = [n for n, (_, sql) in REGISTRY.items() if sql is None]
+    missing = [n for n in queries() if REGISTRY[n].sql is None]
     assert not missing, f"REGISTRY entries without oracle SQL: {missing}"
 
 

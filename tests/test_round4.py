@@ -46,7 +46,7 @@ def test_approx_distinct_within_rsd_bound(spark):
     itself lives inside the gated query."""
     from qcfractal_spark.queries import REGISTRY
 
-    fn, _ = REGISTRY["a19_distinct_gate"]
+    fn = REGISTRY["a19_distinct_gate"].fn
     got = {r["event_type"]: r.asDict() for r in fn(spark, "/root/testdata/sf0.001").collect()}
     from qcfractal_spark.catalog import load_table
 
@@ -109,7 +109,7 @@ def test_bm25_ranks_denser_term_matches_higher(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     with tempfile.TemporaryDirectory() as d:
         df.write.parquet(os.path.join(d, "documents.parquet"))
-        fn, _ = REGISTRY["tx_bm25"]
+        fn = REGISTRY["tx_bm25"].fn
         out = fn(spark, d).collect()
     ids = [r["doc_id"] for r in out]
     assert ids[:3] == [0, 1, 2]  # score-descending by term density
@@ -265,7 +265,7 @@ def test_approx_quantiles_within_rank_error(spark):
     from qcfractal_spark.catalog import load_table
     from qcfractal_spark.queries import REGISTRY
 
-    fn, _ = REGISTRY["a22_quantiles_gate"]
+    fn = REGISTRY["a22_quantiles_gate"].fn
     sf = "/root/testdata/sf0.001"
     got = {r["event_type"]: r.asDict() for r in fn(spark, sf).collect()}
     events = load_table(spark, sf, "events")

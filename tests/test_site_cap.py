@@ -55,7 +55,7 @@ def test_registry_cap_bites_and_is_prefix_consistent(spark):
     """On the real table the cap must actually DROP documents, and the
     kept set per domain must be a doc_id-prefix (greedy in-order cap,
     never cherry-picking)."""
-    fn, _ = REGISTRY["pk_site_cap"]
+    fn = REGISTRY["pk_site_cap"].fn
     out = fn(spark, SF_SMOKE).collect()
     total = _t(spark, SF_SMOKE, "documents").where(
         F.col("text").isNotNull()

@@ -11,7 +11,7 @@ from conftest import SF_SMOKE
 
 
 def test_temperature_mix_semantics(spark):
-    fn, _ = REGISTRY["u15_temperature_mix"]
+    fn = REGISTRY["u15_temperature_mix"].fn
     rows = fn(spark, SF_SMOKE).collect()
     taus = sorted({r["tau"] for r in rows})
     assert taus == [0.25, 0.5, 0.75, 1.0]

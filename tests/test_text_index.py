@@ -111,7 +111,7 @@ def test_mode_flip_forces_rebuild(spark, monkeypatch):
 
 
 def test_registry_query_runs(spark):
-    fn, sql = REGISTRY["tx_phrase_idx"]
+    fn = REGISTRY["tx_phrase_idx"].fn
     out = _rows(fn(spark, SF_SMOKE))
     assert len(out) > 0 and all(n >= 1 for _, n, _ in out)
 
@@ -119,7 +119,7 @@ def test_registry_query_runs(spark):
 def test_quality_sweep_monotone(spark):
     """Cumulative semantics: kept counts/shares are non-increasing as the
     threshold rises, and the lowest threshold keeps everything."""
-    fn, _ = REGISTRY["tx_quality_sweep"]
+    fn = REGISTRY["tx_quality_sweep"].fn
     rows = sorted(
         ((r["threshold"], r["docs_kept"], r["tokens_kept"], r["doc_share"])
          for r in fn(spark, SF_SMOKE).collect())

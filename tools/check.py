@@ -22,7 +22,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from qcfractal_spark.catalog import TABLES
-from qcfractal_spark.queries import BENCH_ONLY, REGISTRY
+from qcfractal_spark.queries import REGISTRY
 from qcfractal_spark.session import build_session
 
 
@@ -118,16 +118,13 @@ def main() -> int:
     spark = build_session("qcfractal-spark-check", master="local[8]", shuffle_partitions=8)
     con = duck_connection(sf_dir)
     failures = 0
-    # r16: the sketch arms are bench-only (no oracle by construction) but
-    # stay value-smoked here as rows-only entries, like the old None-SQL path.
-    entries = dict(REGISTRY)
-    entries.update({name: (fn, None) for name, fn in BENCH_ONLY.items()})
-    for name, (fn, sql) in entries.items():
+    for name, q in REGISTRY.items():
         if only and name not in only:
             continue
+        sql = q.sql
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            sdf = q.fn(spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
             failures += 1

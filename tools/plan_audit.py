@@ -473,9 +473,8 @@ def main() -> int:
         if name in SKIP:
             print(f"SKIP  {name} (iterative; plan audited at operator level)")
             continue
-        fn, _ = REGISTRY[name]
         try:
-            df = fn(spark, sf_dir)
+            df = REGISTRY[name].fn(spark, sf_dir)
             problems = audit_one(name, df)
         except Exception as exc:  # noqa: BLE001
             problems = [f"error building plan: {exc}"]

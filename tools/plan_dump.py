@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from qcfractal_spark.queries import BENCH_ONLY, REGISTRY
+from qcfractal_spark.queries import REGISTRY
 from qcfractal_spark.session import build_session
 
 
@@ -32,9 +32,8 @@ def main() -> None:
     spark = build_session("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        fn = REGISTRY[name][0] if name in REGISTRY else BENCH_ONLY[name]
         try:
-            df = fn(spark, sf_dir)
+            df = REGISTRY[name].fn(spark, sf_dir)
             plan = spark._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )

@@ -21,21 +21,17 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from qcfractal_spark.queries import BENCH_ONLY, REGISTRY
+from qcfractal_spark.queries import REGISTRY
 from qcfractal_spark.session import build_session
 
 
 def run_preflight(spark, sf_dir: str, names=None) -> dict[str, str]:
-    """Force-execute every registry + bench-only query (or the ``names``
-    subset); return {name: error}."""
+    """Force-execute every registry query (or the ``names`` subset); return
+    {name: error}."""
     errors: dict[str, str] = {}
-    fns = {name: fn for name, (fn, _) in REGISTRY.items()}
-    fns.update(BENCH_ONLY)  # r16: sketch arms left REGISTRY but stay smoked
-    if names is not None:
-        fns = {n: fns[n] for n in names}
-    for name, fn in fns.items():
+    for name in REGISTRY if names is None else names:
         try:
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            REGISTRY[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         except Exception:  # noqa: BLE001 — capture everything, keep going
             errors[name] = traceback.format_exc(limit=5)
     return errors
@@ -47,7 +43,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     errors = run_preflight(spark, sf_dir)
-    n = len(REGISTRY) + len(BENCH_ONLY)
+    n = len(REGISTRY)
     if errors:
         for name, tb in errors.items():
             print(f"PREFLIGHT FAIL {name}\n{tb}", file=sys.stderr)

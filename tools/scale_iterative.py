@@ -110,7 +110,7 @@ def main() -> None:
     for name in REGISTRY_TARGETS:
         if only and name not in only:
             continue
-        fn, _ = REGISTRY[name]
+        fn = REGISTRY[name].fn
         t01 = best_of(2, lambda: force(fn(spark, SF01)))
         t1 = best_of(2, lambda: force(fn(spark, SF1)))
         rows.append((name, t01, t1))

@@ -1,10 +1,12 @@
-"""Driver-stamp staleness ledger — which registry queries most need a slot
-in the next 50-query driver window.
+"""Driver-stamp staleness ledger — which driver-facing queries
+(``__spark_entry__.queries()``) most need a slot in the next 50-query
+driver window.
 
 Reads every ``CORRECTNESS_r{N}.json`` artifact, records the most recent
-round in which each registry query had a driver row (green hash/rows match,
-or a rows-only record for the declared no-oracle sketches), and prints the
-registry ordered stalest-first together with the current window membership.
+round in which each query had a driver row (green hash/rows match, or a
+rows-only record for the declared no-oracle sketches), and prints the
+``queries()`` set ordered stalest-first together with the current window
+membership.
 The round-6 rotation was computed exactly this way by hand (VERDICT r5
 item 1); this tool makes the next one a one-command decision.
 
@@ -56,12 +58,13 @@ def stamps() -> dict[str, tuple[int, str]]:
 
 
 def main() -> None:
-    from qcfractal_spark.queries import REGISTRY
+    from __spark_entry__ import queries
 
+    driver_queries = queries()
     seen = stamps()
-    window = set(list(REGISTRY)[:50])
+    window = set(list(driver_queries)[:50])
     ranked = sorted(
-        REGISTRY,
+        driver_queries,
         key=lambda q: (seen.get(q, (0, ""))[0], q),
     )
     print(f"{'query':32s} {'latest stamp':>14s} {'in window':>10s}")
@@ -88,7 +91,7 @@ def main() -> None:
     # therefore derived from the registry size, never hand-set again.
     import math
 
-    allowed = max(3, math.ceil(len(REGISTRY) / 45))
+    allowed = max(3, math.ceil(len(driver_queries) / 45))
     latest = max((r for r, _ in seen.values()), default=0)
     floor = latest - (allowed - 1)  # a stamp from round latest-(allowed-1)
     # is "allowed rounds old" at the NEXT stamping round — anything older
@@ -97,7 +100,7 @@ def main() -> None:
         q for q in ranked
         if 0 < seen.get(q, (0, ""))[0] < floor and q not in window
     ]
-    print(f"policy: <={allowed} rounds stale (ceil({len(REGISTRY)}/45)) — "
+    print(f"policy: <={allowed} rounds stale (ceil({len(driver_queries)}/45)) — "
           f"stamps older than r{floor:02d} must be "
           f"in the current window; violations: {stale if stale else 'none'}")
 
