@@ -54,6 +54,29 @@ def find_regressions(times: dict, base_queries: dict, rerun=None) -> dict:
     }
 
 
+def pick_baseline(repo_dir: str, sf: float | None, cpus: int) -> tuple[str, dict] | None:
+    """The newest parseable ``BENCH_r<N>.json`` / ``BENCH_r<N>_c<M>.json``
+    in ``repo_dir`` whose ``sf`` and ``cpus`` (the ``local[N]`` width it ran
+    at) both match, as ``(file name, record)``; None when no record does.
+    A baseline from another core count measures the box, not the code.
+
+    Unreadable or query-less records (a crashed round's tail) are skipped,
+    never fatal: tools/bench_ratio.load_bench knows every recorded flavor
+    (raw line, tail-wrapped, front-truncated tail)."""
+    from tools.bench_ratio import load_bench
+
+    rounds = []
+    for f in os.listdir(repo_dir):
+        m = re.fullmatch(r"BENCH_r(\d+)(?:_c\d+)?\.json", f)
+        if m:
+            rounds.append((int(m.group(1)), f))
+    for _, name in sorted(rounds, reverse=True):
+        cand = load_bench(os.path.join(repo_dir, name))
+        if cand and cand.get("queries") and cand.get("sf") == sf and cand.get("cpus") == cpus:
+            return name, cand
+    return None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -204,31 +227,20 @@ def main() -> None:
             print(f"ERROR in {name}: {msg[:2000]}", file=sys.stderr)
 
     # Regression guard: compare per-query against the newest recorded
-    # BENCH_r{N}.json at the same sf and surface anything >2x slower —
-    # regressions must be visible in-repo, not only in the driver's record.
+    # baseline at the same sf and core count and surface anything >2x
+    # slower — regressions must be visible in the repo's own records.
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    baselines = sorted(
-        f for f in os.listdir(repo_dir) if re.fullmatch(r"BENCH_r\d+\.json", f)
-    )
-    # Newest PARSEABLE baseline: a crashed round's record has no queries
-    # (rc=1, tail is a traceback) and must not silently disable the guard.
-    # Any unreadable/corrupt baseline is skipped — the guard must never be
-    # the reason a finished benchmark run loses its results.
-    base = {}
-    base_name = None
-    # tools/bench_ratio.load_bench knows every recorded flavor (raw line,
-    # tail-wrapped, front-truncated tail) — reuse it so a partial record
-    # like r07's still serves as the newest baseline instead of being
-    # silently skipped.
-    from tools.bench_ratio import load_bench
-
-    for name in reversed(baselines):
-        cand = load_bench(os.path.join(repo_dir, name))
-        if cand and cand.get("queries") and cand.get("sf") == sf:
-            base, base_name = cand, name
-            break
+    cpus = spark.sparkContext.defaultParallelism
+    picked = pick_baseline(repo_dir, sf, cpus)
+    base_name, base = picked if picked else (None, {})
     regressions: dict[str, dict] = {}
-    if base_name:
+    if not base_name:
+        print(
+            f"NOTE: no BENCH_r*.json baseline at sf={sf} cpus={cpus}: "
+            "regression guard off",
+            file=sys.stderr,
+        )
+    else:
         def rerun(q: str) -> float:
             t0 = time.time()
             force(REGISTRY[q].fn(spark, sf_dir))
@@ -273,6 +285,7 @@ def main() -> None:
         # an improvement next to a complete round — mark it non-comparable.
         out["errors"] = errors
         out["total_complete"] = False
+    out["baseline"] = base_name
     if regressions:
         out["regressions_vs_" + base_name] = regressions
     # Compact separators: the driver records a bounded TAIL of our output,

@@ -1,10 +1,20 @@
 """Embedding similarity search over ``array<float>`` columns.
 
-Brute-force cosine top-k is the correctness baseline; LSH-bucketed (random
-hyperplane) search is the scale path — at 100 TB the brute-force inner
-product against one query is still a single scan (fine), but *batch* query
-workloads and kNN-join shapes need the bucketed variant so candidate
-generation is hash-local instead of all-pairs.
+One score-and-rank core, many candidate generators.  Every single-query
+arm — exact, filtered (:func:`filtered_brute_topk`), hyperplane LSH
+(:func:`lsh_topk`, :func:`lsh_multiprobe_topk`) and IVF (:func:`ivf_topk`,
+:func:`ivf_topk_indexed`) — only narrows the vector frame and hands it to
+:func:`brute_force_topk`, which scores the rounded cosine and ranks score
+desc / id asc.  Per-query and per-label top-k (batch IVF, hard negatives,
+kNN join, label outliers) rank through ``operators.topk.per_group_topk``,
+and the two batch IVF arms share one probe-rank frame (:func:`_probe_ranks`).
+
+The persisted IVF index layout — ``vectors/`` partitioned by ``_cid`` plus
+a ``centroids/`` table — is owned here: :func:`write_ivf_index` and
+:func:`append_to_ivf_index` write it, and :func:`read_ivf_vectors`,
+:func:`read_ivf_centroids` and :func:`ivf_index_written` are the only
+readers.  A caller that needs only the vectors never pays the centroid
+collect.
 
 All arithmetic is in double precision via built-in higher-order functions
 (``zip_with`` + ``aggregate``) — JVM-side, sequential left-fold, so results
@@ -13,12 +23,14 @@ are deterministic and reproducible by an oracle that sums in index order.
 
 from __future__ import annotations
 
+import os
 from typing import Sequence
 
 import numpy as np
 import pandas as pd  # noqa: F401  (pandas_udf annotation resolution)
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from ..operators.topk import group_rank, per_group_topk
 from ..session import local_df
 
 
@@ -103,7 +115,9 @@ def brute_force_topk(
     id_col: str = "vec_id",
     round_to: int = 6,
 ) -> DataFrame:
-    """Exact cosine top-k against one query vector.
+    """Exact cosine top-k against one query vector — the score-and-rank
+    core every single-query arm ends in: ``df`` is the candidate frame,
+    already narrowed by the caller's predicate, bucket or probe filter.
 
     One scan + TakeOrderedAndProject (per-partition heap, no full sort).
     Scores rounded so cross-engine float summation agrees; ties break by id
@@ -154,12 +168,13 @@ def hard_negatives_topk(
     banded = scored.where(
         (F.col("score") < dup_threshold) & (F.col(id_col) != F.col(qid_col))
     )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        banded.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return per_group_topk(
+        banded,
+        [qid_col],
+        [F.col("score").desc(), F.col(id_col).asc()],
+        k,
+        rank_col="rank",
+        keep_rank=True,
     )
 
 
@@ -214,21 +229,14 @@ def lsh_topk(
     Recall is probabilistic — the point is the plan shape: partition-prunable
     candidate filter, then the same top-k.
     """
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_planes)
-    q = lit_array(query_vec)
+    planes = _hyperplanes(len(query_vec), n_planes)
     # Query-side bucket computed driver-side (the vector is already on the
     # driver): no per-row interpreted re-fold of a constant expression.
     q_bucket = lsh_bucket_py(query_vec, planes)
-    scored = (
-        df.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes))
-        .where(F.col("_bucket") == F.lit(q_bucket))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), round_to).alias("score"),
-        )
+    candidates = df.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes)).where(
+        F.col("_bucket") == F.lit(q_bucket)
     )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    return brute_force_topk(candidates, query_vec, k, vec_col, id_col, round_to)
 
 
 def exact_cosine_pairs_topk(
@@ -442,17 +450,46 @@ def ivf_topk(
     centroids are nearest the query.  Pass a prebuilt (assigned, centroids)
     index to skip the build — the deployment shape, where the index is
     computed once at ingest."""
-    import math
-
     if assigned is None or centroids is None:
         assigned, centroids = ivf_assignments(df, n_centroids, vec_col=vec_col, id_col=id_col)
     probe = nearest_centroid_ids(query_vec, centroids, n_probe)
-    q = lit_array(query_vec)
-    scored = assigned.where(F.col("_cid").isin(probe)).select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), q), round_to).alias("score"),
+    return brute_force_topk(
+        assigned.where(F.col("_cid").isin(probe)), query_vec, k, vec_col, id_col, round_to
     )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+
+
+def _centroid_df(spark: SparkSession, centroids: Sequence[Sequence[float]]) -> DataFrame:
+    """The centroid table ``(cid, centroid)``, cid = list position — the
+    persisted ``centroids/`` layout and the batch arms' broadcast side."""
+    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
+    return local_df(spark, rows, "cid int, centroid array<double>")
+
+
+def _probe_ranks(
+    queries: DataFrame,
+    centroids: Sequence[Sequence[float]],
+    query_id_col: str,
+    query_vec_col: str,
+) -> DataFrame:
+    """Every inverted list ranked per query: ``(query_id, _qv, _cid,
+    _prank)``, by the cosine and cid tie-break of
+    :func:`nearest_centroid_ids`, so the batch and single-query arms probe
+    the same lists.  Queries × the broadcast centroid table, unfiltered:
+    :func:`ivf_topk_batch` keeps ``_prank <= n_probe`` and
+    :func:`ivf_recall_by_probe` reads every probe budget off the one rank."""
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(query_vec_col).cast("array<double>").alias("_qv"),
+    )
+    scored = q.join(F.broadcast(_centroid_df(queries.sparkSession, centroids))).select(
+        "query_id",
+        "_qv",
+        "cid",
+        cosine(F.col("_qv"), F.col("centroid")).alias("_cs"),
+    )
+    return group_rank(
+        scored, ["query_id"], [F.col("_cs").desc(), F.col("cid").asc()], "_prank"
+    ).select("query_id", "_qv", F.col("cid").alias("_cid"), "_prank")
 
 
 def ivf_topk_batch(
@@ -483,46 +520,18 @@ def ivf_topk_batch(
     ``assigned`` is the quantizer output (``vec_col``, ``id_col``,
     ``_cid``) — pass the persisted index's vectors table to skip any
     build."""
-    from pyspark.sql import Window
-
-    spark = queries.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    cent_df = local_df(spark, cent_rows, "cid int, centroid array<double>")
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).cast("array<double>").alias("_qv"),
+    probes = (
+        _probe_ranks(queries, centroids, query_id_col, query_vec_col)
+        .where(F.col("_prank") <= n_probe)
+        .drop("_prank")
     )
-    ranked = (
-        q.join(F.broadcast(cent_df))
-        .select(
-            "query_id",
-            "_qv",
-            "cid",
-            cosine(F.col("_qv"), F.col("centroid")).alias("_cs"),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("_cs").desc(), F.col("cid").asc()
-                )
-            ),
-        )
-        .where(F.col("_rn") <= n_probe)
-        .select("query_id", "_qv", F.col("cid").alias("_cid"))
-    )
-    scored = assigned.join(F.broadcast(ranked), on="_cid").select(
+    scored = assigned.join(F.broadcast(probes), on="_cid").select(
         "query_id",
         F.col(id_col),
         F.round(cosine(F.col(vec_col), F.col("_qv")), round_to).alias("score"),
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .where(F.col("_rk") <= k)
-        .drop("_rk")
+    return per_group_topk(
+        scored, ["query_id"], [F.col("score").desc(), F.col(id_col).asc()], k, rank_col="_rk"
     )
 
 
@@ -560,47 +569,16 @@ def ivf_recall_by_probe(
     size, not the corpus.  Truth = per-query window top-k; the report
     folds truth × probe-budget literals (|sample|·k·|levels| rows).
     """
-    from pyspark.sql import Window
-
-    spark = queries.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    cent_df = local_df(spark, cent_rows, "cid int, centroid array<double>")
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).cast("array<double>").alias("_qv"),
-    )
-    ranked = (
-        q.join(F.broadcast(cent_df))
-        .select(
-            "query_id",
-            "_qv",
-            "cid",
-            cosine(F.col("_qv"), F.col("centroid")).alias("_cs"),
-        )
-        .withColumn(
-            "_prank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("_cs").desc(), F.col("cid").asc()
-                )
-            ),
-        )
-        .select("query_id", "_qv", F.col("cid").alias("_cid"), "_prank")
-    )
+    ranked = _probe_ranks(queries, centroids, query_id_col, query_vec_col)
     scored = assigned.join(F.broadcast(ranked), on="_cid").select(
         "query_id",
         F.col(id_col),
         "_prank",
         F.round(cosine(F.col(vec_col), F.col("_qv")), round_to).alias("score"),
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    truth = (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .where(F.col("_rk") <= k)
-        .select("query_id", "_prank")
-    )
+    truth = per_group_topk(
+        scored, ["query_id"], [F.col("score").desc(), F.col(id_col).asc()], k, rank_col="_rk"
+    ).select("query_id", "_prank")
     levels = F.explode(
         F.array(*[F.lit(int(p)) for p in probe_levels])
     ).alias("n_probe")
@@ -652,8 +630,6 @@ def knn_join_bucketed(
     ``left`` is a bounded probe batch (the serving shape), pass
     ``broadcast_left=True`` to build the small side instead — a
     batch-sized broadcast equi-join, no corpus shuffle at all."""
-    from pyspark.sql import Window
-
     if dim is None:
         dim = len(left.select(vec_col).first()[0])
     planes = _hyperplanes(dim, n_planes)
@@ -674,12 +650,9 @@ def knn_join_bucketed(
         .where(F.col("left_id") != F.col("right_id"))
         .withColumn("score", F.round(cosine(F.col("_lvec"), F.col("_rvec")), 6))
     )
-    w = Window.partitionBy("left_id").orderBy(F.col("score").desc(), F.col("right_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("left_id", "right_id", "score")
-    )
+    return per_group_topk(
+        scored, ["left_id"], [F.col("score").desc(), F.col("right_id")], k, rank_col="_rn"
+    ).select("left_id", "right_id", "score")
 
 
 def embed_neardup_pairs(
@@ -768,7 +741,7 @@ def semdedup(
         spark = df.sparkSession if df is not None else SparkSession.getActiveSession()
         if spark is None:
             raise ValueError("index_path without df needs an active SparkSession")
-        assigned = spark.read.parquet(f"{index_path}/vectors")
+        assigned = read_ivf_vectors(spark, index_path)
     if assigned is None:
         if df is None:
             raise ValueError(
@@ -817,11 +790,31 @@ def write_ivf_index(
     driver-size artifact (n_centroids × dim), stored alongside."""
     assigned, centroids = ivf_assignments(df, n_centroids, vec_col=vec_col, id_col=id_col)
     assigned.write.mode("overwrite").partitionBy("_cid").parquet(f"{path}/vectors")
-    spark = df.sparkSession
-    cent_rows = [(i, list(map(float, c))) for i, c in enumerate(centroids)]
-    local_df(spark, cent_rows, "cid int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _centroid_df(df.sparkSession, centroids).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/centroids"
+    )
+
+
+def read_ivf_vectors(spark: SparkSession, path: str) -> DataFrame:
+    """The index's vectors table (``id_col``, ``vec_col``, ``_cid``): a lazy
+    read, partition-prunable on ``_cid``."""
+    return spark.read.parquet(f"{path}/vectors")
+
+
+def read_ivf_centroids(spark: SparkSession, path: str) -> list[list[float]]:
+    """The index's centroids, ordered by cid — one collect of the
+    n_centroids-row table."""
+    by_cid = {
+        r["cid"]: list(r["centroid"])
+        for r in spark.read.parquet(f"{path}/centroids").collect()
+    }
+    return [by_cid[i] for i in range(len(by_cid))]
+
+
+def ivf_index_written(path: str) -> bool:
+    """True once a :func:`write_ivf_index` vectors write has committed
+    (its ``_SUCCESS`` marker) — a filesystem check, no Spark job."""
+    return os.path.exists(os.path.join(path, "vectors", "_SUCCESS"))
 
 
 def append_to_ivf_index(
@@ -844,11 +837,7 @@ def append_to_ivf_index(
     ``new_df`` must carry the same columns the index was built from
     (``id_col``, ``vec_col``); uniqueness of ids across batches is the
     caller's contract, as with any append-only ingest."""
-    cent = {
-        r["cid"]: list(r["centroid"])
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
-    centroids = [cent[i] for i in range(len(cent))]
+    centroids = read_ivf_centroids(spark, path)
     new_df.withColumn("_cid", assign_to_centroids(centroids, vec_col)).write.mode(
         "append"
     ).partitionBy("_cid").parquet(f"{path}/vectors")
@@ -868,21 +857,18 @@ def ivf_topk_indexed(
     ``n_probe`` nearest centroids driver-side (tiny read), then scan only
     those ``_cid=`` partitions.  Identical results to the in-memory
     :func:`ivf_topk` on the same index."""
-    import math
-
-    cent = {
-        r["cid"]: list(r["centroid"])
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
-    centroids = [cent[i] for i in range(len(cent))]
-    probe = nearest_centroid_ids(query_vec, centroids, n_probe)
-    vectors = spark.read.parquet(f"{path}/vectors")
-    q = lit_array(query_vec)
-    scored = vectors.where(F.col("_cid").isin(probe)).select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), q), round_to).alias("score"),
+    centroids = read_ivf_centroids(spark, path)
+    return ivf_topk(
+        None,
+        query_vec,
+        k,
+        n_probe=n_probe,
+        vec_col=vec_col,
+        id_col=id_col,
+        round_to=round_to,
+        assigned=read_ivf_vectors(spark, path),
+        centroids=centroids,
     )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
 
 
 # --------------------------------------------------------------------------
@@ -1156,8 +1142,6 @@ def label_centroid_outliers(
     compiles to a map-side WindowGroupLimit, so the last exchange carries
     at most k rows per label per partition.
     """
-    from pyspark.sql import Window
-
     base = emb.where(F.col(label_col).isNotNull()).select(
         F.col(id_col).alias("_vid"),
         F.col(label_col).alias("_lbl"),
@@ -1185,17 +1169,17 @@ def label_centroid_outliers(
     cos = F.round(
         F.col("_sxc") / (F.sqrt(F.col("_sxx")) * F.sqrt(F.col("_scc"))), 6
     )
-    w = Window.partitionBy(label_col).orderBy(
-        F.col("cos_centroid").asc(), F.col(id_col).asc()
-    )
-    return (
+    return per_group_topk(
         per_vec.select(
             F.col("_lbl").alias(label_col),
             F.col("_vid").alias(id_col),
             cos.alias("cos_centroid"),
-        )
-        .withColumn("outlier_rank", F.row_number().over(w))
-        .where(F.col("outlier_rank") <= k)
+        ),
+        [label_col],
+        [F.col("cos_centroid").asc(), F.col(id_col).asc()],
+        k,
+        rank_col="outlier_rank",
+        keep_rank=True,
     )
 
 
@@ -1221,20 +1205,13 @@ def lsh_multiprobe_topk(
     filter over the bucket column — at ingest the bucket is persisted and
     the IN list partition-prunes, exactly like the IVF ``_cid`` probes.
     """
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_planes)
-    q = lit_array(query_vec)
+    planes = _hyperplanes(len(query_vec), n_planes)
     q_bucket = lsh_bucket_py(query_vec, planes)
     probes = [q_bucket] + [q_bucket ^ (1 << i) for i in range(n_planes)]
-    scored = (
-        df.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes))
-        .where(F.col("_bucket").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), round_to).alias("score"),
-        )
+    candidates = df.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes)).where(
+        F.col("_bucket").isin(probes)
     )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    return brute_force_topk(candidates, query_vec, k, vec_col, id_col, round_to)
 
 
 def filtered_brute_topk(
@@ -1254,16 +1231,7 @@ def filtered_brute_topk(
     TakeOrderedAndProject.  The IVF-probed arm composes the same
     predicate into the pruned-list scan; this baseline is what it
     verifies against."""
-    q = lit_array(query_vec)
-    return (
-        df.where(predicate)
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), round_to).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return brute_force_topk(df.where(predicate), query_vec, k, vec_col, id_col, round_to)
 
 
 def _sq_dist_expr(center: list, vec_col: str = "v") -> str:
@@ -1382,8 +1350,6 @@ def rrf_fuse(
             9,
         ).alias("rrf"),
     )
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.col("rrf").desc(), F.col("id").asc())
     return (
         fused.withColumn("rank", F.row_number().over(w).cast("int"))

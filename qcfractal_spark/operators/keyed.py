@@ -173,9 +173,19 @@ def insert_mixed_classify(
                 existing_idx.append(orig_idx)
 
     if obj_items:
+        from pyspark.sql.types import LongType, StructField, StructType
+
         keys = list(search_cols)
-        batch = spark.createDataFrame(
-            [{"_input_idx": i, **v} for i, v in obj_items]
+        # The batch takes the table's own schema: inferring it from the
+        # values fails when a column is None in every object.
+        fields = table.schema.fields
+        batch = local_df(
+            spark,
+            [(i, *(v.get(f.name) for f in fields)) for i, v in obj_items],
+            StructType(
+                [StructField("_input_idx", LongType())]
+                + [StructField(f.name, f.dataType) for f in fields]
+            ),
         )
         _, classified = insert_dedup_classify(table, batch, keys)
         from pyspark.sql import Window

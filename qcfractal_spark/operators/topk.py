@@ -23,6 +23,19 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def group_rank(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    order_cols: Sequence[Column],
+    rank_col: str = "_rank",
+) -> DataFrame:
+    """``df`` plus ``rank_col``: each row's 1-based ``row_number`` within its
+    group under ``order_cols`` — the unfiltered rank, for callers that read
+    several cut-offs off one ranking."""
+    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
+    return df.withColumn(rank_col, F.row_number().over(w))
+
+
 def per_group_topk(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -31,8 +44,10 @@ def per_group_topk(
     rank_col: str = "_rank",
     keep_rank: bool = False,
 ) -> DataFrame:
-    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    out = df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
+    """The first ``k`` rows of each group under ``order_cols``.  A filter
+    right over the rank compiles to a map-side WindowGroupLimit, so the
+    shuffle carries at most ``k`` rows per group per partition."""
+    out = group_rank(df, group_cols, order_cols, rank_col).where(F.col(rank_col) <= k)
     return out if keep_rank else out.drop(rank_col)
 
 

@@ -1682,10 +1682,16 @@ def q_dd_minhash_lsh(spark, sf_dir):
     return dd.minhash_lsh_candidates(sigs)
 
 
+def _query_vec(emb) -> list[float]:
+    """The ``vec_id = 0`` embedding that every single-query ``sim_`` arm
+    probes with (the oracles' ``q`` CTE)."""
+    return [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
+
+
 def q_sim_topk(spark, sf_dir):
     """Brute-force cosine top-10 against the vec_id=0 query vector."""
     emb = _t(spark, sf_dir, "embeddings", fan=True)
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _query_vec(emb)
     return sim.brute_force_topk(emb, qvec, k=10)
 
 
@@ -1708,7 +1714,7 @@ def q_sim_lsh_topk(spark, sf_dir):
     """Hyperplane-LSH bucketed approximate top-10 (scale path; exact-hash
     check — recall is probabilistic by design)."""
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _query_vec(emb)
     return sim.lsh_topk(emb, qvec, k=10)
 
 
@@ -1724,7 +1730,7 @@ def q_sim_ivf_topk(spark, sf_dir):
     quantizer never re-runs at query time.  Identical results to the
     in-query build (asserted in tests/test_functions.py)."""
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _query_vec(emb)
     return sim.ivf_topk_indexed(
         spark, _ivf_index_dir(spark, sf_dir), qvec, k=10, n_probe=4
     )
@@ -5112,10 +5118,7 @@ def q_sim_pq_topk(spark, sf_dir):
     Small demo geometry (m=2, ksub=8) so the oracle replay stays tractable;
     the operators take m/ksub as parameters."""
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = [
-        float(x)
-        for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
-    ]
+    qvec = _query_vec(emb)
     books = sim.pq_train(emb, m=2, ksub=8, n_iter=1)
     codes = sim.pq_codes(emb, books).localCheckpoint(eager=True)
     return sim.pq_adc_topk(codes, books, qvec, k=10)
@@ -5263,18 +5266,10 @@ def q_sim_ivfpq_topk(spark, sf_dir):
     vectors.  Same demo geometry as the component queries (16 lists /
     probe 4; m=2, ksub=8) so the composed oracle replays both builds."""
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = [
-        float(x)
-        for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
-    ]
+    qvec = _query_vec(emb)
     path = _ivf_index_dir(spark, sf_dir)
-    cent = {
-        r["cid"]: list(r["centroid"])
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
-    centroids = [cent[i] for i in range(len(cent))]
-    probe = sim.nearest_centroid_ids(qvec, centroids, n_probe=4)
-    survivors = spark.read.parquet(f"{path}/vectors").where(F.col("_cid").isin(probe))
+    probe = sim.nearest_centroid_ids(qvec, sim.read_ivf_centroids(spark, path), n_probe=4)
+    survivors = sim.read_ivf_vectors(spark, path).where(F.col("_cid").isin(probe))
     books = sim.pq_train(emb, m=2, ksub=8, n_iter=1)
     codes = sim.pq_codes(survivors, books)
     return sim.pq_adc_topk(codes, books, qvec, k=10)
@@ -5317,12 +5312,8 @@ def q_sim_ivf_batch_topk(spark, sf_dir):
     dd_semdedup)."""
     emb = _t(spark, sf_dir, "embeddings")
     path = _ivf_index_dir(spark, sf_dir)
-    cent = {
-        r["cid"]: list(r["centroid"])
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
-    centroids = [cent[i] for i in range(len(cent))]
-    assigned = spark.read.parquet(f"{path}/vectors")
+    centroids = sim.read_ivf_centroids(spark, path)
+    assigned = sim.read_ivf_vectors(spark, path)
     queries = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -5424,7 +5415,7 @@ def q_sim_index_stats(spark, sf_dir):
     (cid + id columns only, list-pruned footers) + a 16-group combinable
     agg + a 1-row total broadcast."""
     path = _ivf_index_dir(spark, sf_dir)
-    vecs = spark.read.parquet(f"{path}/vectors").select("vec_id", "_cid")
+    vecs = sim.read_ivf_vectors(spark, path).select("vec_id", "_cid")
     per = vecs.groupBy(F.col("_cid").cast("int").alias("cid")).agg(
         F.count(F.lit(1)).alias("n_vecs")
     )
@@ -5740,7 +5731,7 @@ def _ivf_index_dir(spark, sf_dir: str) -> str:
     k = max(16, n_vecs // 125)
     marker = f"{st.st_size}:{st.st_mtime_ns}:k{k}"
     marker_path = _os.path.join(path, "source_marker")
-    valid = _os.path.exists(_os.path.join(path, "vectors", "_SUCCESS"))
+    valid = sim.ivf_index_written(path)
     if valid:
         try:
             with open(marker_path) as fh:
@@ -5875,7 +5866,7 @@ def q_sim_hybrid_rrf(spark, sf_dir):
         .select(F.col("doc_id").alias("id"), "rank")
     )
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _query_vec(emb)
     vec20 = sim.brute_force_topk(emb.where(F.col("vec_id") != 0), qvec, k=20)
     wv = Window.orderBy(F.col("score").desc(), F.col("vec_id").asc())
     va = (
@@ -9418,7 +9409,7 @@ def q_sim_multiprobe_topk(spark, sf_dir):
     that needs no extra tables.  Probe set computed driver-side, lands as
     an IN filter over the (ingest-persistable) bucket column."""
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _query_vec(emb)
     return sim.lsh_multiprobe_topk(emb, qvec, k=10)
 
 
@@ -9459,7 +9450,7 @@ def q_sim_filtered_topk(spark, sf_dir):
     serves.  The label predicate reaches the parquet scan as a pushed
     filter (plan-audited), so distance math runs only over survivors."""
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _query_vec(emb)
     return sim.filtered_brute_topk(emb, qvec, F.col("label") == 3, k=10)
 
 
@@ -9494,12 +9485,8 @@ def q_sim_ivf_recall_eval(spark, sf_dir):
     oracle replays the identical k-means build via the shared
     _ivf_build_parts CTEs."""
     path = _ivf_index_dir(spark, sf_dir)
-    cent = {
-        r["cid"]: list(r["centroid"])
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
-    centroids = [cent[i] for i in range(len(cent))]
-    vectors = spark.read.parquet(f"{path}/vectors")
+    centroids = sim.read_ivf_centroids(spark, path)
+    vectors = sim.read_ivf_vectors(spark, path)
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.where(
         (F.col("vec_id") % 50 == 3) & (F.col("vec_id") < 2000)

@@ -387,15 +387,15 @@ def stream_ann_serve(
     (see ``merge_rollup_batch``) when exactly-once is required.
 
     Returns the StreamingQuery handle."""
-    from ..functions.similarity import ivf_topk_batch
+    from ..functions.similarity import (
+        ivf_topk_batch,
+        read_ivf_centroids,
+        read_ivf_vectors,
+    )
 
     spark = query_stream.sparkSession
-    cent = {
-        r["cid"]: list(r["centroid"])
-        for r in spark.read.parquet(f"{index_path}/centroids").collect()
-    }
-    centroids = [cent[i] for i in range(len(cent))]
-    assigned = spark.read.parquet(f"{index_path}/vectors")
+    centroids = read_ivf_centroids(spark, index_path)
+    assigned = read_ivf_vectors(spark, index_path)
 
     def _serve(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.head(1):

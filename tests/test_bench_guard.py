@@ -1,9 +1,18 @@
 """The bench regression guard must catch real slowdowns and ignore noise —
-pure-logic tests over bench.find_regressions (no Spark)."""
+pure-logic tests over bench.find_regressions and bench.pick_baseline (no
+Spark)."""
 
 from __future__ import annotations
 
-from bench import find_regressions, is_regressed
+import json
+
+from bench import find_regressions, is_regressed, pick_baseline
+
+
+def _record(dir_, name, sf, cpus, queries=None):
+    """A wrapped bench record: the JSON line sits inside ``tail``."""
+    line = json.dumps({"metric": "m", "value": 1.0, "queries": queries or {"q": 1.0}, "sf": sf})
+    (dir_ / name).write_text(json.dumps({"n": 1, "rc": 0, "cpus": cpus, "sf": sf, "tail": line}))
 
 
 def test_real_regression_is_flagged_after_confirmation():
@@ -49,3 +58,39 @@ def test_confirmation_failure_keeps_original_sample():
     times = {"q": 5.0}
     out = find_regressions(times, {"q": 1.0}, rerun=boom)
     assert out == {"q": {"now": 5.0, "baseline": 1.0}}
+
+
+def test_baseline_matches_core_count_not_just_sf(tmp_path):
+    # the newest same-sf record ran on 32 cores; a 4-core run must not
+    # compare against it, but against the older 4-core record
+    _record(tmp_path, "BENCH_r03.json", 0.1, 4, {"q": 0.5})
+    _record(tmp_path, "BENCH_r16.json", 0.1, 32)
+    name, rec = pick_baseline(str(tmp_path), 0.1, 4)
+    assert name == "BENCH_r03.json"
+    assert rec["queries"] == {"q": 0.5}
+    assert pick_baseline(str(tmp_path), 0.1, 32)[0] == "BENCH_r16.json"
+
+
+def test_baseline_considers_core_suffixed_records(tmp_path):
+    _record(tmp_path, "BENCH_r15_c8.json", 0.1, 8)
+    _record(tmp_path, "BENCH_r16.json", 0.1, 32)
+    _record(tmp_path, "BENCH_r16_c8.json", 0.1, 8)
+    assert pick_baseline(str(tmp_path), 0.1, 8)[0] == "BENCH_r16_c8.json"
+
+
+def test_baseline_newest_round_by_number(tmp_path):
+    # round 100 sorts before round 99 as text; the pick is numeric
+    _record(tmp_path, "BENCH_r99.json", 0.1, 4)
+    _record(tmp_path, "BENCH_r100.json", 0.1, 4)
+    assert pick_baseline(str(tmp_path), 0.1, 4)[0] == "BENCH_r100.json"
+
+
+def test_no_matching_baseline_means_no_guard(tmp_path):
+    _record(tmp_path, "BENCH_r16.json", 0.1, 32)
+    _record(tmp_path, "BENCH_r17.json", 1.0, 4)  # right cpus, wrong sf
+    (tmp_path / "BENCH_r18.json").write_text("{not json")
+    (tmp_path / "BENCH_r19.json").write_text(
+        json.dumps({"n": 19, "rc": 1, "cpus": 4, "sf": 0.1, "tail": "Traceback ..."})
+    )
+    (tmp_path / "BENCH_sf1_r20.json").write_text("{}")  # not a ledger name
+    assert pick_baseline(str(tmp_path), 0.1, 4) is None

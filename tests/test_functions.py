@@ -516,7 +516,7 @@ def test_semdedup_consumes_persisted_index(spark, tmp_path):
     assert key(indexed) == key(inline)
 
     # precomputed-assignment arm hits the same path
-    assigned = spark.read.parquet(f"{path}/vectors")
+    assigned = sim.read_ivf_vectors(spark, path)
     via_df = sim.semdedup(None, threshold=0.25, assigned=assigned)
     assert key(via_df) == key(inline)
 
@@ -550,13 +550,10 @@ def test_ivf_persisted_index_prunes_partitions_and_matches(spark, tmp_path):
     ]
     assert got == expected
 
-    vectors = spark.read.parquet(f"{path}/vectors")
+    vectors = sim.read_ivf_vectors(spark, path)
     total = pruned_files(vectors)
     # recompute the probe list the same way the indexed probe does
-    cent = {
-        r["cid"]: list(r["centroid"])
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
+    cent = sim.read_ivf_centroids(spark, path)
     probe = sorted(
         range(len(cent)),
         key=lambda i: -sum(a * b for a, b in zip(cent[i], qvec))
@@ -1029,14 +1026,12 @@ def test_ivf_index_append_without_retrain(spark, tmp_path):
     sim.write_ivf_index(spark.createDataFrame(base, schema), path, n_centroids=4)
     sim.append_to_ivf_index(spark, spark.createDataFrame(newb, schema), path)
 
-    vectors = spark.read.parquet(f"{path}/vectors")
+    vectors = sim.read_ivf_vectors(spark, path)
     got = {r["vec_id"]: r["_cid"] for r in vectors.collect()}
     assert set(got) == {i for i, _ in base} | {i for i, _ in newb}
 
     # appended assignments == argmax cosine against the STORED centroids
-    cents = {r["cid"]: np.array(r["centroid"])
-             for r in spark.read.parquet(f"{path}/centroids").collect()}
-    cmat = np.stack([cents[i] for i in range(len(cents))])
+    cmat = np.array(sim.read_ivf_centroids(spark, path))
     cn = cmat / np.linalg.norm(cmat, axis=1)[:, None]
     for vid, vec in newb:
         assert got[vid] == int(np.argmax(cn @ np.array(vec)))

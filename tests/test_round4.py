@@ -233,6 +233,33 @@ def test_insert_mixed_present_row_with_null_column_is_existing(spark):
     assert errors == []
 
 
+def test_insert_mixed_objects_with_all_null_search_values(spark, monkeypatch):
+    """Objects whose search column is None in every item: the batch takes
+    the table's schema (no type inference from all-None values), lands as
+    an Arrow LocalTableScan, and NULL keys match NULL-safely."""
+    from qcfractal_spark.operators import keyed
+
+    batches = []
+    classify = keyed.insert_dedup_classify
+
+    def spy(table, batch, keys):
+        batches.append(batch)
+        return classify(table, batch, keys)
+
+    monkeypatch.setattr(keyed, "insert_dedup_classify", spy)
+    items = [{"id": 10, "name": None}, {"id": 11, "name": None}]
+
+    with_null = spark.createDataFrame([(1, "a"), (2, None)], "id long, name string")
+    got = keyed.insert_mixed_classify(spark, with_null, items, search_cols=("name",))
+    assert got == ([], [0, 1], [])  # both match the table's NULL-named row
+    plan = batches[0]._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+    no_null = spark.createDataFrame([(1, "a")], "id long, name string")
+    got = keyed.insert_mixed_classify(spark, no_null, items, search_cols=("name",))
+    assert got == ([0], [1], [])  # the second is an in-batch duplicate
+
+
 def test_salted_join_rejects_outer_how(spark):
     import pytest
 

@@ -495,3 +495,46 @@ def test_queue_auto_compacts_finished_past_threshold(spark):
     nxt = q.claim("m1", limit=20)
     assert {r["id"] for r in nxt}.isdisjoint(seen)
     assert len(nxt) == 12
+
+
+def test_stream_ann_serve_matches_batch(spark, tmp_path):
+    """stream_ann_serve over a persisted sf0.001 index: 8 query vectors
+    streamed from a parquet dir (availableNow) land in the sink as exactly
+    the rows ivf_topk_batch returns for the same queries and index."""
+    from conftest import SF_SMOKE
+    from qcfractal_spark.catalog import load_table
+    from qcfractal_spark.functions import similarity as sim
+    from qcfractal_spark.streaming.ingest import stream_ann_serve
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    index = str(tmp_path / "ivf")
+    sim.write_ivf_index(emb, index, n_centroids=16)
+    queries = emb.where(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    qdir, sink = str(tmp_path / "queries"), str(tmp_path / "sink")
+    queries.write.parquet(qdir)
+
+    handle = stream_ann_serve(
+        spark.readStream.schema(queries.schema).parquet(qdir),
+        index,
+        sink,
+        str(tmp_path / "ckpt"),
+        k=10,
+        n_probe=4,
+    )
+    assert handle.awaitTermination(180), "availableNow stream did not finish"
+    assert handle.exception() is None
+
+    cols = ["query_id", "vec_id", "score"]
+    got = sorted(tuple(r) for r in spark.read.parquet(sink).select(*cols).collect())
+    batch = sim.ivf_topk_batch(
+        queries,
+        sim.read_ivf_vectors(spark, index),
+        sim.read_ivf_centroids(spark, index),
+        k=10,
+        n_probe=4,
+    )
+    expected = sorted(tuple(r) for r in batch.select(*cols).collect())
+    assert len(expected) == 80
+    assert got == expected

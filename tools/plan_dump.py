@@ -8,20 +8,46 @@ captured is controlled by the environment the tool runs under (e.g.
 optimization round).  Queries whose construction is eager (checkpointed
 signatures, scratch-table builds) run those jobs as a side effect; the dump
 captures the plan of the RETURNED DataFrame, which is what the bench times.
+
+Every plan is normalized before it is written (:func:`normalize`), so two
+dumps of the same code compare with a plain ``diff -r``: expression ids
+(``#123``), ``plan_id=NNN``, lambda variable counters (``x_12``) and the
+pid suffix of per-process scratch paths all become fixed tokens.  Two plans
+stay nondeterministic even then: ``tx_domain_stats`` orders the two COUNT
+DISTINCT groups of its ``Expand`` by expression-id hash, and
+``s11_schema_evolution`` embeds a random parquet file name.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from qcfractal_spark.queries import REGISTRY
-from qcfractal_spark.session import build_session
+# (pattern, replacement), applied in order: lambda variables first, while
+# their ``#id`` still marks them as attribute names.
+_NORMALIZE = [
+    (re.compile(r"\b([A-Za-z]+)_\d+(?=#\d)"), r"\1_N"),
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\bplan_id=\d+"), "plan_id=N"),
+    (re.compile(r"(qcfractal_spark_\w+?_[0-9a-f]{12})_\d+"), r"\1_PID"),
+]
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with its per-build counters and per-process paths replaced
+    by fixed tokens."""
+    for pattern, repl in _NORMALIZE:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
+    from qcfractal_spark.queries import REGISTRY
+    from qcfractal_spark.session import build_session
+
     outdir, suffix = sys.argv[1], sys.argv[2]
     rest = sys.argv[3:]
     sf_dir = "/root/testdata/sf0.1"
@@ -40,7 +66,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — record, keep dumping
             plan = f"ERROR building {name}: {type(exc).__name__}: {exc}\n"
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(plan)
+            f.write(normalize(plan))
         print(f"dumped {name}_{suffix}", flush=True)
 
 
