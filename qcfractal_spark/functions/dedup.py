@@ -512,7 +512,6 @@ def incremental_lsh_candidates(
     new_signatures: DataFrame,
     bands: int = 4,
     rows_per_band: int = 4,
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs of an ingest batch: batch×corpus pairs via
     a probe join against the persisted band index, plus batch×batch pairs
@@ -520,16 +519,12 @@ def incremental_lsh_candidates(
     text and signatures are never recomputed.
 
     Output orientation: ``id_a`` = the already-indexed (or smaller batch)
-    id, ``id_b`` = the new id.  With ``broadcast_probe`` (default) the
-    batch side is broadcast — the common ingest shape (daily increment ≪
-    corpus), leaving the index scan shuffle-free; pass False for a
-    backfill-sized batch that would not fit a broadcast, degrading to a
-    shuffled band join."""
+    id, ``id_b`` = the new id.  The batch side is broadcast — the ingest
+    shape (daily increment ≪ corpus), leaving the index scan
+    shuffle-free."""
     index = spark.read.parquet(index_path).select("id", "band_idx", "band_key")
     probe = _banded(new_signatures, bands, rows_per_band)
-    probe_b = probe.withColumnRenamed("id", "id_b")
-    if broadcast_probe:
-        probe_b = F.broadcast(probe_b)
+    probe_b = F.broadcast(probe.withColumnRenamed("id", "id_b"))
     cross = (
         index.join(
             probe_b,
@@ -938,7 +933,6 @@ def cross_corpus_lsh_pairs(
     right_sigs: DataFrame,
     bands: int = 4,
     rows_per_band: int = 4,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """LSH band collisions BETWEEN two corpora — (id_a from left, id_b from
     right) pairs sharing ≥ 1 band, with no within-corpus pairs generated at
@@ -949,12 +943,11 @@ def cross_corpus_lsh_pairs(
     item with small edits shares MinHash bands but not 13-grams.  The right
     side (benchmark/eval suite) is broadcast by construction — orders of
     magnitude smaller than the corpus — so the corpus-side band projection
-    never shuffles; pass ``broadcast_right=False`` for corpus-vs-corpus
-    sweeps where both sides are fact-sized."""
+    never shuffles."""
     lb = _banded(left_sigs, bands, rows_per_band)
-    rb = _banded(right_sigs, bands, rows_per_band).withColumnRenamed("id", "id_b")
-    if broadcast_right:
-        rb = F.broadcast(rb)
+    rb = F.broadcast(
+        _banded(right_sigs, bands, rows_per_band).withColumnRenamed("id", "id_b")
+    )
     return (
         lb.join(rb, on=["band_idx", "band_key"])
         .select(F.col("id").alias("id_a"), "id_b")
@@ -1056,7 +1049,6 @@ def incremental_cdc_duplicates(
     k: int = 16,
     mod: int = 64,
     min_len: int = 24,
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """Duplicated-substring spans of an ingest batch: every CDC chunk of
     ``new_docs`` whose content already exists in the indexed corpus or in
@@ -1064,18 +1056,16 @@ def incremental_cdc_duplicates(
     :func:`cdc_duplicate_spans` (same any-offset guarantee; the corpus is
     never re-chunked, only its fingerprint column is read).
 
-    With ``broadcast_probe`` (default) the batch chunk table is broadcast
-    — the ingest shape (daily increment ≪ corpus), leaving the index scan
-    shuffle-free; pass False for a backfill-sized batch.  Returns
+    The batch chunk table is broadcast — the ingest shape (daily
+    increment ≪ corpus), leaving the index scan shuffle-free.  Returns
     (id, start, length, chunk_fp) rows for the batch docs only.
     """
     probe = cdc_chunks(new_docs, text_col, id_col, k, mod, min_len).localCheckpoint(
         eager=False
     )
     index_fp = spark.read.parquet(index_path).select("chunk_fp")
-    probe_b = F.broadcast(probe) if broadcast_probe else probe
     vs_corpus = (
-        index_fp.join(probe_b, on="chunk_fp")
+        index_fp.join(F.broadcast(probe), on="chunk_fp")
         .select("id", "start", "length", "chunk_fp")
     )
     a, b = probe.alias("a"), probe.alias("b")

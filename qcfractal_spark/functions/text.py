@@ -471,6 +471,50 @@ def heavy_hitters_mg(
     return merged.orderBy(F.col("est_count").desc(), F.col("token").asc()).limit(k)
 
 
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, toks) for every non-NULL text — the one tokenize scan of
+    the bigram LMs."""
+    return docs.where(F.col("text").isNotNull()).select(
+        "doc_id", tokens(F.col("text")).alias("toks")
+    )
+
+
+def _bigram_rows(tok: DataFrame) -> DataFrame:
+    """(doc_id, a, b): one row per adjacent token pair of each document."""
+    return tok.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(slice(toks, 1, greatest(size(toks) - 1, 0)),"
+                " (x, i) -> struct(x AS a, toks[i + 1] AS b))"
+            )
+        ).alias("p"),
+    ).select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+
+
+def _mean_nll(scored: DataFrame, p) -> DataFrame:
+    """The bigram LMs' per-doc fold over ``scored`` (one row per doc
+    bigram type with its ``tf``): each transition's -log2(p) is rounded
+    to 9 dp and decimal-cast BEFORE the tf-weighted sum, then the sum is
+    divided by the doc's bigram count and rounded to 6 dp.  Returns
+    (doc_id, n_bigrams, mean_nll)."""
+    nll = F.round(-F.log2(p), 9).cast("decimal(28,9)")
+    return (
+        scored.groupBy("doc_id")
+        .agg(
+            F.sum("tf").alias("n_bigrams"),
+            F.sum(F.col("tf").cast("decimal(8,0)") * nll).alias("_nll_sum"),
+        )
+        .select(
+            "doc_id",
+            "n_bigrams",
+            F.round(
+                F.col("_nll_sum").cast("double") / F.col("n_bigrams"), 6
+            ).alias("mean_nll"),
+        )
+    )
+
+
 def bigram_lm_scores(docs: DataFrame, lam: float = 0.75) -> DataFrame:
     """Interpolated-backoff bigram LM perplexity scoring (VERDICT r8
     item 5) — the CCNet-style quality filter upgraded from the unigram
@@ -498,45 +542,23 @@ def bigram_lm_scores(docs: DataFrame, lam: float = 0.75) -> DataFrame:
 
     Returns (doc_id, n_bigrams, mean_nll).
     """
-    tok = docs.where(F.col("text").isNotNull()).select(
-        "doc_id", tokens(F.col("text")).alias("toks")
-    ).localCheckpoint(eager=False)
+    tok = _doc_tokens(docs).localCheckpoint(eager=False)
     uni = tok.select(F.explode("toks").alias("t"))
     cf = uni.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
     tot = uni.agg(F.count(F.lit(1)).alias("total"))
-    bg = tok.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(toks, 1, greatest(size(toks) - 1, 0)),"
-                " (x, i) -> struct(x AS a, toks[i + 1] AS b))"
-            )
-        ).alias("p"),
-    ).select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    bg = _bigram_rows(tok)
     btf = bg.groupBy("doc_id", "a", "b").agg(F.count(F.lit(1)).alias("tf"))
     bc = bg.groupBy("a", "b").agg(F.count(F.lit(1)).alias("cab"))
     cc = bg.groupBy("a").agg(F.count(F.lit(1)).alias("ca"))
     p = F.lit(lam) * (F.col("cab").cast("double") / F.col("ca")) + F.lit(
         1.0 - lam
     ) * (F.col("c").cast("double") / F.col("total"))
-    nll = F.round(-F.log2(p), 9).cast("decimal(28,9)")
-    return (
+    return _mean_nll(
         btf.join(bc, ["a", "b"])
         .join(cc, ["a"])
         .join(cf.select(F.col("t").alias("b"), "c"), ["b"])
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_bigrams"),
-            F.sum(F.col("tf").cast("decimal(8,0)") * nll).alias("_nll_sum"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            F.round(
-                F.col("_nll_sum").cast("double") / F.col("n_bigrams"), 6
-            ).alias("mean_nll"),
-        )
+        .crossJoin(F.broadcast(tot)),
+        p,
     )
 
 
@@ -572,18 +594,7 @@ def kn_lm_scores(docs: DataFrame, discount: float = 0.75) -> DataFrame:
 
     Returns (doc_id, n_bigrams, mean_nll).
     """
-    tok = docs.where(F.col("text").isNotNull()).select(
-        "doc_id", tokens(F.col("text")).alias("toks")
-    )
-    bg = tok.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(toks, 1, greatest(size(toks) - 1, 0)),"
-                " (x, i) -> struct(x AS a, toks[i + 1] AS b))"
-            )
-        ).alias("p"),
-    ).select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    bg = _bigram_rows(_doc_tokens(docs))
     btf = bg.groupBy("doc_id", "a", "b").agg(F.count(F.lit(1)).alias("tf"))
     btf = btf.localCheckpoint(eager=False)  # btf feeds every count relation
     bc = btf.groupBy("a", "b").agg(F.sum("tf").alias("cab"))
@@ -596,24 +607,12 @@ def kn_lm_scores(docs: DataFrame, discount: float = 0.75) -> DataFrame:
     p = (F.col("cab").cast("double") - F.lit(d)) / F.col("ca") + (
         F.lit(d) / F.col("ca")
     ) * F.col("n1a") * (F.col("n1b").cast("double") / F.col("ntypes"))
-    nll = F.round(-F.log2(p), 9).cast("decimal(28,9)")
-    return (
+    return _mean_nll(
         btf.join(bc, ["a", "b"])
         .join(ctx, ["a"])
         .join(nb, ["b"])
-        .crossJoin(F.broadcast(nt))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_bigrams"),
-            F.sum(F.col("tf").cast("decimal(8,0)") * nll).alias("_nll_sum"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            F.round(
-                F.col("_nll_sum").cast("double") / F.col("n_bigrams"), 6
-            ).alias("mean_nll"),
-        )
+        .crossJoin(F.broadcast(nt)),
+        p,
     )
 
 
@@ -648,18 +647,7 @@ def kn_mod_lm_scores(docs: DataFrame) -> DataFrame:
 
     Returns (doc_id, n_bigrams, mean_nll).
     """
-    tok = docs.where(F.col("text").isNotNull()).select(
-        "doc_id", tokens(F.col("text")).alias("toks")
-    )
-    bg = tok.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(toks, 1, greatest(size(toks) - 1, 0)),"
-                " (x, i) -> struct(x AS a, toks[i + 1] AS b))"
-            )
-        ).alias("p"),
-    ).select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    bg = _bigram_rows(_doc_tokens(docs))
     btf = bg.groupBy("doc_id", "a", "b").agg(F.count(F.lit(1)).alias("tf"))
     btf = btf.localCheckpoint(eager=False)
     bc = btf.groupBy("a", "b").agg(F.sum("tf").alias("cab"))
@@ -686,21 +674,7 @@ def kn_mod_lm_scores(docs: DataFrame) -> DataFrame:
     # Shared-association expressions: the SAME strings feed the oracle
     # (dialect-neutral CASE/CAST/arithmetic), so the two arms cannot
     # drift — the html.py shared-constant discipline.
-    nll = F.round(-F.log2(F.expr(kn_mod_p_sql())), 9).cast("decimal(28,9)")
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_bigrams"),
-            F.sum(F.col("tf").cast("decimal(8,0)") * nll).alias("_nll_sum"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            F.round(
-                F.col("_nll_sum").cast("double") / F.col("n_bigrams"), 6
-            ).alias("mean_nll"),
-        )
-    )
+    return _mean_nll(scored, F.expr(kn_mod_p_sql()))
 
 
 def kn_mod_p_sql() -> str:

@@ -5715,9 +5715,6 @@ def _ivf_index_dir(spark, sf_dir: str) -> str:
 
     import pyarrow.parquet as _pq
 
-    path = _scratch_dir(sf_dir, "ivf_index")
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    st = _os.stat(src)
     # k-means k scales with the corpus (the SemDeDup/IVF deployment rule —
     # functions/similarity.py:625): fixed k means clusters grow ∝ N and the
     # within-cluster pair join grows ∝ N² (measured: dd_semdedup exponent
@@ -5727,23 +5724,18 @@ def _ivf_index_dir(spark, sf_dir: str) -> str:
     # still yields EXACTLY 16, so gated outputs and the n_centroids=16
     # oracle twins are unchanged.  k joins the rebuild marker so a corpus
     # size change re-clusters.
-    n_vecs = _pq.read_metadata(src).num_rows
+    n_vecs = _pq.read_metadata(_os.path.join(sf_dir, "embeddings.parquet")).num_rows
     k = max(16, n_vecs // 125)
-    marker = f"{st.st_size}:{st.st_mtime_ns}:k{k}"
-    marker_path = _os.path.join(path, "source_marker")
-    valid = sim.ivf_index_written(path)
-    if valid:
-        try:
-            with open(marker_path) as fh:
-                valid = fh.read() == marker
-        except OSError:
-            valid = False
-    if not valid:
-        sim.write_ivf_index(_t(spark, sf_dir, "embeddings"), path, n_centroids=k)
-        _os.makedirs(path, exist_ok=True)
-        with open(marker_path, "w") as fh:
-            fh.write(marker)
-    return path
+    return _derived_artifact(
+        sf_dir,
+        "ivf_index",
+        "embeddings",
+        [f"k{k}"],
+        lambda path: sim.write_ivf_index(
+            _t(spark, sf_dir, "embeddings"), path, n_centroids=k
+        ),
+        complete=sim.ivf_index_written,
+    )
 
 
 def _semdedup_oracle_sql(threshold: float = 0.25, n_centroids: int = 16,
@@ -6458,14 +6450,8 @@ def _train_shards_dir(spark, sf_dir: str) -> str:
     contract: (size, mtime) of the source table plus the hash mode
     (FAST_HASH flips shard/pos/split derivations), so a regenerated
     table or a mode flip always re-exports."""
-    import os as _os
-
     from .sources.export import export_training_shards
 
-    path = _scratch_dir(sf_dir, "train_shards")
-    src = _os.path.join(sf_dir, "documents.parquet")
-    st = _os.stat(src)
-    fast = 1 if _os.environ.get("SPARK_GRAFT_FAST_HASH") == "1" else 0
     # PSL identity (r10 ADVICE): pipe_prepare's URL-dedup keys depend on
     # the PSL rule source, so a swapped $SPARK_GRAFT_PSL_FILE must
     # invalidate the artifact.  A digest of the loaded rules covers both
@@ -6477,20 +6463,13 @@ def _train_shards_dir(spark, sf_dir: str) -> str:
     psl_digest = _hashlib.md5(
         repr(sorted(load_psl_rules())).encode()
     ).hexdigest()[:12]
-    marker = f"{st.st_size}:{st.st_mtime_ns}:h{fast}:p{psl_digest}"
-    marker_path = _os.path.join(path, "source_marker")
-    valid = _os.path.exists(_os.path.join(path, "_SUCCESS"))
-    if valid:
-        try:
-            with open(marker_path) as fh:
-                valid = fh.read() == marker
-        except OSError:
-            valid = False
-    if not valid:
-        export_training_shards(q_pipe_prepare(spark, sf_dir), path)
-        with open(marker_path, "w") as fh:
-            fh.write(marker)
-    return path
+    return _derived_artifact(
+        sf_dir,
+        "train_shards",
+        "documents",
+        [_hash_mode_token(), f"p{psl_digest}"],
+        lambda path: export_training_shards(q_pipe_prepare(spark, sf_dir), path),
+    )
 
 
 def q_pipe_export(spark, sf_dir):
@@ -7060,6 +7039,56 @@ def _scratch_dir(sf_dir: str, tag: str) -> str:
     return os.path.join(
         scratch_base(), f"qcfractal_spark_{tag}_{h}_{os.getpid()}"
     )
+
+
+def _hash_mode_token() -> str:
+    """``h1`` under SPARK_GRAFT_FAST_HASH=1, else ``h0``: the hash mode an
+    artifact was built under, for the markers of artifacts whose term,
+    bucket or shard derivation it changes."""
+    import os
+
+    return f"h{1 if os.environ.get('SPARK_GRAFT_FAST_HASH') == '1' else 0}"
+
+
+def _derived_artifact(
+    sf_dir: str,
+    tag: str,
+    table: str,
+    tokens: list[str],
+    build: Callable[[str], object],
+    complete: Callable[[str], bool] | None = None,
+) -> str:
+    """Per-sf_dir persisted artifact derived from ``table``, at
+    ``_scratch_dir(sf_dir, tag)`` — the one staleness contract of the
+    ingest-time artifacts (IVF index, text indexes, training shards,
+    cluster labels).  The ``source_marker`` file records
+    ``size:mtime_ns[:token...]`` of the source parquet plus the caller's
+    build-parameter ``tokens``; the artifact is reused iff ``complete``
+    (default: ``path/_SUCCESS`` exists) holds and the marker matches, and
+    ``build(path)`` rebuilds it otherwise — so a regenerated testdata
+    dir, even one with identical row counts, never serves stale data."""
+    import os
+
+    path = _scratch_dir(sf_dir, tag)
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    marker = ":".join([str(st.st_size), str(st.st_mtime_ns), *tokens])
+    marker_path = os.path.join(path, "source_marker")
+    if complete is None:
+        valid = os.path.exists(os.path.join(path, "_SUCCESS"))
+    else:
+        valid = complete(path)
+    if valid:
+        try:
+            with open(marker_path) as fh:
+                valid = fh.read() == marker
+        except OSError:
+            valid = False
+    if not valid:
+        build(path)
+        os.makedirs(path, exist_ok=True)
+        with open(marker_path, "w") as fh:
+            fh.write(marker)
+    return path
 
 
 _SCRATCH_REAPED = False
@@ -8461,29 +8490,16 @@ def _text_index_dir(spark, sf_dir: str) -> str:
     term→bucket derivation, so an index built under one mode probed
     under the other would silently return empty/partial posting lists
     (ADVICE r9) — a mode or bucket flip now forces a rebuild."""
-    import os as _os
-
     from .functions.text import write_text_index
 
-    path = _scratch_dir(sf_dir, "text_index")
-    src = _os.path.join(sf_dir, "documents.parquet")
-    st = _os.stat(src)
-    fast = 1 if _os.environ.get("SPARK_GRAFT_FAST_HASH") == "1" else 0
-    n_buckets = 64  # write_text_index default; probes derive buckets the same way
-    marker = f"{st.st_size}:{st.st_mtime_ns}:h{fast}:b{n_buckets}"
-    marker_path = _os.path.join(path, "source_marker")
-    valid = _os.path.exists(_os.path.join(path, "_SUCCESS"))
-    if valid:
-        try:
-            with open(marker_path) as fh:
-                valid = fh.read() == marker
-        except OSError:
-            valid = False
-    if not valid:
-        write_text_index(_t(spark, sf_dir, "documents"), path)
-        with open(marker_path, "w") as fh:
-            fh.write(marker)
-    return path
+    return _derived_artifact(
+        sf_dir,
+        "text_index",
+        "documents",
+        # 64 = write_text_index's default; probes derive buckets the same way
+        [_hash_mode_token(), "b64"],
+        lambda path: write_text_index(_t(spark, sf_dir, "documents"), path),
+    )
 
 
 def q_tx_phrase_idx(spark, sf_dir):
@@ -8530,7 +8546,6 @@ def q_tx_phrase_idx_incr(spark, sf_dir):
     gate pins (the dd_substring_incremental / dd_incremental_labels
     contract applied to the text index, completing the ingest-artifact
     triad's maintenance story)."""
-    import os as _os
     import shutil as _shutil
 
     from .functions.text import (
@@ -8539,27 +8554,15 @@ def q_tx_phrase_idx_incr(spark, sf_dir):
         write_text_index,
     )
 
-    docs = _t(spark, sf_dir, "documents")
-    path = _scratch_dir(sf_dir, "text_index_incr")
-    src = _os.path.join(sf_dir, "documents.parquet")
-    st = _os.stat(src)
-    fast = 1 if _os.environ.get("SPARK_GRAFT_FAST_HASH") == "1" else 0
-    n_buckets = 64
-    marker = f"{st.st_size}:{st.st_mtime_ns}:h{fast}:b{n_buckets}"
-    marker_path = _os.path.join(path, "source_marker")
-    valid = _os.path.exists(_os.path.join(path, "_SUCCESS"))
-    if valid:
-        try:
-            with open(marker_path) as fh:
-                valid = fh.read() == marker
-        except OSError:
-            valid = False
-    if not valid:
+    def build(path):
+        docs = _t(spark, sf_dir, "documents")
         _shutil.rmtree(path, ignore_errors=True)
         write_text_index(docs.where(F.col("doc_id") % 10 != 0), path)
         append_text_index(docs.where(F.col("doc_id") % 10 == 0), path)
-        with open(marker_path, "w") as fh:
-            fh.write(marker)
+
+    path = _derived_artifact(
+        sf_dir, "text_index_incr", "documents", [_hash_mode_token(), "b64"], build
+    )
     return phrase_hits_indexed(spark, path, ["group", "slow", "spark"])
 
 
@@ -8711,26 +8714,18 @@ def _cluster_labels_dir(spark, sf_dir: str) -> str:
     physics."""
     import os as _os
 
-    path = _scratch_dir(sf_dir, "cluster_labels")
-    src = _os.path.join(sf_dir, "documents.parquet")
-    st = _os.stat(src)
-    marker = f"{st.st_size}:{st.st_mtime_ns}"
-    marker_path = _os.path.join(path, "source_marker")
-    valid = _os.path.exists(_os.path.join(path, "labels", "_SUCCESS"))
-    if valid:
-        try:
-            with open(marker_path) as fh:
-                valid = fh.read() == marker
-        except OSError:
-            valid = False
-    if not valid:
-        _cluster_labeled(spark, sf_dir).write.mode("overwrite").parquet(
-            f"{path}/labels"
-        )
-        _os.makedirs(path, exist_ok=True)
-        with open(marker_path, "w") as fh:
-            fh.write(marker)
-    return path
+    return _derived_artifact(
+        sf_dir,
+        "cluster_labels",
+        "documents",
+        [],
+        lambda path: _cluster_labeled(spark, sf_dir)
+        .write.mode("overwrite")
+        .parquet(f"{path}/labels"),
+        complete=lambda path: _os.path.exists(
+            _os.path.join(path, "labels", "_SUCCESS")
+        ),
+    )
 
 
 def _cluster_labels(spark, sf_dir):

@@ -155,30 +155,17 @@ def export_training_shards(survivors: DataFrame, path: str, **kw) -> str:
     pointerless moment), which ``sources/table.py`` provides when the
     export needs to be a mutable table rather than a swap-published
     artifact."""
-    from .layout import _hadoop_fs
+    from .layout import swap_publish
 
     rows = training_shard_rows(survivors, **kw)
     spark = survivors.sparkSession
     recover_export(spark, path)
-    fs, hpath = _hadoop_fs(spark, path)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    parent = hpath.getParent()
-    if parent is None:
-        raise IOError(f"export_training_shards: cannot export to a filesystem root: {path}")
-    leaf = hpath.getName()
-    tmp = jpath(parent, f".export_tmp_{leaf}")
-    old = jpath(parent, f".export_old_{leaf}")
-    fs.delete(tmp, True)
-    rows.write.mode("overwrite").partitionBy("shard").parquet(tmp.toString())
-    fs.delete(old, True)
-    had_prev = fs.exists(hpath)
-    if had_prev and not fs.rename(hpath, old):
-        raise IOError(f"export_training_shards: rename {path} -> {old} failed")
-    if not fs.rename(tmp, hpath):
-        if had_prev:
-            fs.rename(old, hpath)  # roll back: readers keep the original
-        raise IOError(f"export_training_shards: rename {tmp} -> {path} failed")
-    fs.delete(old, True)
+    swap_publish(
+        spark,
+        path,
+        "export",
+        lambda tmp: rows.write.mode("overwrite").partitionBy("shard").parquet(tmp),
+    )
     return path
 
 

@@ -12,7 +12,7 @@ tests (and operators) can assert pruning instead of hoping for it.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -201,32 +201,12 @@ def compact_small_files(
             "n_out": n_out,
         }
     df = spark.read.parquet(path)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    # Scratch dirs live as DOT-prefixed siblings (inside the same
-    # parent), so hive partition discovery never sees them.  The old
-    # naming (``root/k=v.compact_tmp``) was hive-parseable and a
-    # full-table reader racing the rewrite window would double-count the
-    # leaf with a spoofed partition value (ADVICE r9).  Dot, not
-    # underscore: Spark's hidden-path rule (HadoopFSUtils.
-    # shouldFilterOutPathName) exempts "_"-prefixed names that contain
-    # "=", so ``_compact_tmp_k=1`` would still be discovered — "."
-    # prefixes are excluded unconditionally.
-    parent = hpath.getParent()
-    if parent is None:
-        raise IOError(f"compact_small_files: cannot compact a filesystem root: {path}")
-    leaf_name = hpath.getName()
-    tmp = jpath(parent, f".compact_tmp_{leaf_name}")
-    old = jpath(parent, f".compact_old_{leaf_name}")
-    fs.delete(tmp, True)
-    df.repartition(n_out).write.mode("overwrite").parquet(tmp.toString())
-    fs.delete(old, True)
-    if not fs.rename(hpath, old):
-        raise IOError(f"compact_small_files: rename {path} -> {old} failed")
-    if not fs.rename(tmp, hpath):
-        # roll back the pointer swap so readers keep the original data
-        fs.rename(old, hpath)
-        raise IOError(f"compact_small_files: rename {tmp} -> {path} failed")
-    fs.delete(old, True)
+    swap_publish(
+        spark,
+        path,
+        "compact",
+        lambda tmp: df.repartition(n_out).write.mode("overwrite").parquet(tmp),
+    )
     after = _data_files(hpath)
     return {
         "files_before": len(files),
@@ -234,6 +214,49 @@ def compact_small_files(
         "bytes": total,
         "n_out": n_out,
     }
+
+
+def swap_publish(
+    spark: SparkSession, path: str, prefix: str, write: Callable[[str], None]
+) -> None:
+    """Publish a rewrite of the directory ``path`` by a two-rename swap —
+    the local stand-in for a table format's metastore pointer swap, shared
+    by :func:`compact_small_files` and ``export.export_training_shards``.
+
+    ``write(tmp)`` fills the sibling ``.<prefix>_tmp_<leaf>``; the current
+    ``path`` (if any) renames aside to ``.<prefix>_old_<leaf>``, tmp
+    renames in, and a rename-in that returns false rolls the old back so
+    readers keep the original.  The old sibling is deleted last.
+
+    Scratch dirs live as DOT-prefixed siblings (inside the same parent),
+    so hive partition discovery never sees them.  The old naming
+    (``root/k=v.compact_tmp``) was hive-parseable and a full-table reader
+    racing the rewrite window would double-count the leaf with a spoofed
+    partition value (ADVICE r9).  Dot, not underscore: Spark's
+    hidden-path rule (HadoopFSUtils.shouldFilterOutPathName) exempts
+    "_"-prefixed names that contain "=", so ``_compact_tmp_k=1`` would
+    still be discovered — "." prefixes are excluded unconditionally.  The
+    prefixes are what the crash-leftover sweeps look for
+    (:func:`_sweep_compact_scratch`, ``export.recover_export``)."""
+    fs, hpath = _hadoop_fs(spark, path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    parent = hpath.getParent()
+    if parent is None:
+        raise IOError(f"swap_publish: cannot publish to a filesystem root: {path}")
+    leaf = hpath.getName()
+    tmp = jpath(parent, f".{prefix}_tmp_{leaf}")
+    old = jpath(parent, f".{prefix}_old_{leaf}")
+    fs.delete(tmp, True)
+    write(tmp.toString())
+    fs.delete(old, True)
+    had_prev = fs.exists(hpath)
+    if had_prev and not fs.rename(hpath, old):
+        raise IOError(f"swap_publish: rename {path} -> {old} failed")
+    if not fs.rename(tmp, hpath):
+        if had_prev:
+            fs.rename(old, hpath)  # roll back: readers keep the original
+        raise IOError(f"swap_publish: rename {tmp} -> {path} failed")
+    fs.delete(old, True)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):

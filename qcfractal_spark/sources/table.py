@@ -30,28 +30,10 @@ This is Delta's commit protocol shrunk to a filesystem: the _delta_log
 put-if-absent JSON commit becomes a claim-by-rename, and time-travel
 depth stays 1 (current + previous), matching ``change_feed``.
 
-Two claim strategies (``commit_strategy=``), because atomic rename is a
-POSIX/HDFS/ABFS property that S3 does not have (VERDICT r11 item 1 —
-the caveat this paragraph used to merely document now has a working
-arm):
-
-* ``"rename"`` (default): the claim above — stage, then
-  ``os.rename(stage, v{N})``.  Right on any filesystem with atomic
-  directory rename.
-* ``"manifest"`` (S3-safe): stage dirs keep their unique names FOREVER
-  and are never renamed; the claim is an EXCLUSIVE CREATE
-  (put-if-absent) of a tiny manifest ``_commits/v{N}.json`` whose body
-  names the stage dir — on S3 this is one conditional PUT with
-  ``If-None-Match: *``, exactly Delta's S3A LogStore commit.
-  ``current_version()`` derives from the manifests; readers resolve a
-  version to its stage dir through the manifest, so data visibility
-  never depends on a rename.  Manifests are never deleted (pruning
-  empties the old stage's data but keeps the manifest + commit meta),
-  so a version number can never be re-claimed — the rename arm's ABA
-  tombstones, for free.
-
-Everything else (unique staging, retry loop, reconciliation, pruning)
-is shared between the strategies.
+The claim relies on atomic directory rename, a POSIX/HDFS/ABFS property
+that S3 does not have.  On S3 a deployment needs a put-if-absent claim
+(a conditional PUT of a commit object, Delta's S3 LogStore) or a table
+format; neither is implemented here.
 
 At 100 TB the rewrite would be partition-scoped (rewrite only partitions
 containing matched keys — the same physical plan Delta executes); the API
@@ -60,7 +42,6 @@ below takes an optional ``partition_by`` so writes are partition-pruned.
 
 from __future__ import annotations
 
-import errno
 import json
 import os
 import re
@@ -89,109 +70,66 @@ class MutableTable:
         spark: SparkSession,
         path: str,
         partition_by: Sequence[str] | None = None,
-        commit_strategy: str = "rename",
     ):
-        if commit_strategy not in ("rename", "manifest"):
-            raise ValueError(
-                f"commit_strategy must be 'rename' or 'manifest', got {commit_strategy!r}"
-            )
         self.spark = spark
         self.path = path
         self.partition_by = list(partition_by or [])
-        self.commit_strategy = commit_strategy
         os.makedirs(path, exist_ok=True)
-        if commit_strategy == "manifest":
-            os.makedirs(os.path.join(path, "_commits"), exist_ok=True)
 
     # -- version bookkeeping ------------------------------------------------
 
-    def _manifest_path(self, v: int) -> str:
-        return os.path.join(self.path, "_commits", f"v{v:06d}.json")
-
-    def _read_manifest(self, v: int) -> dict:
-        with open(self._manifest_path(v)) as fh:
-            return json.load(fh)
-
-    def _manifest_versions(self) -> list[int]:
-        """Committed version numbers in the manifest arm — the ONE
-        ``_commits`` listing/parse loop (current_version, history and
-        the vacuum sweep all consume it; three hand-rolled copies is how
-        the 7-digit regex bug survived r10)."""
-        try:
-            entries = os.listdir(os.path.join(self.path, "_commits"))
-        except FileNotFoundError:
-            return []
-        out = []
-        for e in entries:
-            m = re.fullmatch(r"v(\d{6,})\.json", e)
-            if m:
-                out.append(int(m.group(1)))
-        return out
-
-    def _committed_stages(self) -> set[str]:
-        """Stage-dir basenames named by ANY manifest (manifest arm) —
-        these hold live committed data and are never sweepable."""
-        out: set[str] = set()
-        for v in self._manifest_versions():
-            try:
-                out.add(self._read_manifest(v)["stage"])
-            except (OSError, json.JSONDecodeError, KeyError):
-                continue
-        return out
-
-    def current_version(self) -> int | None:
-        """Max committed version — the CAS truth.  Rename arm: a
-        ``v%06d`` dir only ever appears via the atomic rename of a
-        fully-written stage, so presence implies completeness (crashed
-        writers leave only dot-prefixed stage dirs, swept by
-        :meth:`vacuum_stages`).  Manifest arm: max ``_commits/v*.json``
-        — a manifest only ever appears via the atomic link of a
-        fully-written body, so presence implies completeness there too."""
-        if self.commit_strategy == "manifest":
-            vs = self._manifest_versions()
-            return max(vs) if vs else None
-        best = None
+    def _versions(self) -> list[int]:
+        """Every committed version number — the one parse of the
+        ``v%06d`` directory names (current_version and history both use
+        it).  Six or more digits: %06d zero-pads small versions but grows
+        past six digits at v1000000 — a {6} anchor would make every
+        version from one million on invisible, livelocking all later
+        commits on a permanently re-claimed v1000000 (r11 ADVICE)."""
         try:
             entries = os.listdir(self.path)
         except FileNotFoundError:
-            return None
-        for e in entries:
-            # \d{6,}: %06d zero-pads small versions but grows past six
-            # digits at v1000000 — a {6} anchor would make every version
-            # from one million on invisible, livelocking all later commits
-            # on a permanently re-claimed v1000000 (r11 ADVICE).
-            if re.fullmatch(r"v\d{6,}", e):
-                v = int(e[1:])
-                if best is None or v > best:
-                    best = v
-        return best
+            return []
+        return [int(e[1:]) for e in entries if re.fullmatch(r"v\d{6,}", e)]
+
+    def current_version(self) -> int | None:
+        """Max committed version — the CAS truth.  A ``v%06d`` dir only
+        ever appears via the atomic rename of a fully-written stage, so
+        presence implies completeness (crashed writers leave only
+        dot-prefixed stage dirs, swept by :meth:`vacuum_stages`)."""
+        versions = self._versions()
+        return max(versions) if versions else None
 
     def current_meta(self) -> dict:
         """Caller-supplied metadata recorded atomically WITH the commit
         (written inside the staging dir BEFORE the claim-rename) — e.g.
         the streaming epoch id that produced the version, which is what
         makes foreachBatch merges idempotent under at-least-once replay."""
-        return self._meta_at(self.current_version())
+        return self._commit_record(self.current_version()).get("meta", {})
 
-    def _meta_at(self, v: int | None) -> dict:
+    def _commit_record(self, v: int | None) -> dict:
+        """The commit record ``_meta.json`` of version ``v`` (``version``,
+        ``ts``, ``meta``, ``schema_ops``, ``schema_json``) — the one
+        reader of that file; ``{}`` for no version or a missing or
+        unreadable record."""
         if v is None:
             return {}
         try:
-            with open(os.path.join(self._resolve_dir(v), "_meta.json")) as fh:
-                return json.load(fh).get("meta", {})
+            with open(os.path.join(self._version_dir(v), "_meta.json")) as fh:
+                return json.load(fh)
         except (FileNotFoundError, json.JSONDecodeError):
             return {}
 
+    def _carried_meta(self, meta: dict | None) -> Callable[[int | None], dict]:
+        """Commit meta for a mutation that derives from its base: the base
+        commit's meta keys carried forward, ``meta`` overriding key by key
+        (resolved per CAS retry against the snapshot actually read)."""
+        return lambda base: {
+            **self._commit_record(base).get("meta", {}),
+            **(meta or {}),
+        }
+
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.path, f"v{v:06d}")
-
-    def _resolve_dir(self, v: int) -> str:
-        """Data directory of version ``v``: the ``v%06d`` dir (rename
-        arm) or the stage dir the version's manifest names (manifest
-        arm — stages are never renamed, the manifest is the pointer)."""
-        if self.commit_strategy == "manifest":
-            return os.path.join(self.path, self._read_manifest(v)["stage"])
-        return self._version_dir(v)
 
     def _new_stage(self) -> str:
         """Unique dot-prefixed staging dir: invisible to both readers
@@ -215,13 +153,28 @@ class MutableTable:
         alembic-migration analog, VERDICT r10 item 3) — carried forward by
         every commit so read-time reconciliation survives any mix of
         hardlinked old-schema files and rewritten new-schema files."""
-        if v is None:
-            return []
-        try:
-            with open(os.path.join(self._resolve_dir(v), "_meta.json")) as fh:
-                return json.load(fh).get("schema_ops", [])
-        except (FileNotFoundError, json.JSONDecodeError):
-            return []
+        return self._commit_record(v).get("schema_ops", [])
+
+    def _link_stage(self, base: int | None, keep: Callable[[str], bool]) -> str:
+        """New stage holding hardlinks of the base version's top-level
+        entries that ``keep`` selects (directories are linked file by
+        file) — refcounted, no data copy.  The one hardlink-staging step
+        of the append, partition-scoped and metadata-only commits."""
+        stage = self._new_stage()
+        os.makedirs(stage, exist_ok=True)
+        if base is None:
+            return stage
+        base_dir = self._version_dir(base)
+        for entry in os.listdir(base_dir):
+            if not keep(entry):
+                continue
+            src = os.path.join(base_dir, entry)
+            dst = os.path.join(stage, entry)
+            if os.path.isdir(src):
+                shutil.copytree(src, dst, copy_function=os.link)
+            else:
+                os.link(src, dst)
+        return stage
 
     def _data_basenames(self, v: int) -> list[str]:
         """Basenames of every parquet data file in version ``v`` —
@@ -231,7 +184,7 @@ class MutableTable:
         preserved by the hardlink commits, so they identify a file across
         versions without content hashing."""
         names: list[str] = []
-        for _root, _dirs, files in os.walk(self._resolve_dir(v)):
+        for _root, _dirs, files in os.walk(self._version_dir(v)):
             for f in files:
                 if f.endswith(".parquet"):
                     names.append(f)
@@ -258,27 +211,14 @@ class MutableTable:
         ``current_version() != v`` check is gone: it could fire on the
         BENIGN race where a concurrent writer observed our fresh v and
         committed v+1 before we re-checked, making us rmtree a version
-        that writer had already built on (r11 ADVICE, medium).
-
-        Manifest arm (``commit_strategy="manifest"``, the S3-safe claim):
-        no rename at all — the claim is the atomic LINK of a
-        fully-written temp manifest onto ``_commits/v{N}.json`` naming
-        the stage dir (link(2) fails if the target exists, so a manifest
-        is VISIBLE iff its body is COMPLETE; an exclusive-create-then-
-        write pair would leave a crash window where a claimed-but-empty
-        manifest poisons every read of the table and stalls the prune
-        sweep).  On S3 the analog is one conditional PUT of the full
-        object — atomic by the storage contract.  Losers get
-        :exc:`FileExistsError` from the kernel and surface the same
-        :class:`CommitConflictError`.  Manifests persist forever, so
-        stale re-claims of pruned numbers are impossible by
-        construction."""
+        that writer had already built on (r11 ADVICE, medium)."""
         v = 0 if base is None else base + 1
-        ops = self._schema_ops(base) if schema_ops is None else schema_ops
+        prior = self._commit_record(base)
+        ops = prior.get("schema_ops", []) if schema_ops is None else schema_ops
         # relation schema as of this commit: what the staging write saw,
         # or carried forward from the base for hardlink-only commits —
         # the empty-table read fallback (r15)
-        schema_json = getattr(self, "_staged_schema", None) or self._schema_json_at(base)
+        schema_json = getattr(self, "_staged_schema", None) or prior.get("schema_json")
         self._staged_schema = None
         with open(os.path.join(stage, "_meta.json"), "w") as fh:
             json.dump(
@@ -296,90 +236,13 @@ class MutableTable:
             raise CommitConflictError(
                 f"table {self.path}: version advanced past v{v - 1} before publish"
             )
-        if self.commit_strategy == "manifest":
-            # vacuum guard: a live writer's stage must never age past the
-            # sweep threshold between staging and claim — stamp the stage
-            # NOW so its age is measured from just before the claim (the
-            # sweep additionally re-checks the committed set per
-            # candidate; see vacuum_stages).
-            try:
-                os.utime(stage)
-            except OSError:
-                pass
-            body = json.dumps(
-                {"version": v, "ts": time.time(), "stage": os.path.basename(stage)}
-            )
-            # write the FULL body to a hidden temp, fsync, then link onto
-            # the version name — claimed iff complete, no partial window
-            tmp = os.path.join(
-                self.path, "_commits", f".m_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                fh.write(body)
-                fh.flush()
-                os.fsync(fh.fileno())
-            try:
-                os.link(tmp, self._manifest_path(v))
-            except FileExistsError as exc:
-                shutil.rmtree(stage, ignore_errors=True)
-                raise CommitConflictError(
-                    f"table {self.path}: v{v} was claimed by another writer"
-                ) from exc
-            except OSError as exc:
-                # filesystem without hard links (some network/FUSE
-                # mounts): fall back to exclusive-create of the FINAL
-                # name (r12 ADVICE — link(2) raised a bare OSError here,
-                # a portability regression vs the pre-r12 O_EXCL claim).
-                # The 'x' open is still an atomic put-if-absent claim;
-                # the regression vs link(2) is the claimed-but-partial
-                # crash window between the open and the fsync'd write —
-                # microseconds, and only on link-less filesystems, which
-                # is exactly the degraded mode the pre-r12 code was in
-                # everywhere.
-                if exc.errno not in (
-                    errno.EPERM,
-                    errno.ENOTSUP,
-                    errno.EOPNOTSUPP,
-                    errno.EXDEV,
-                ):
-                    shutil.rmtree(stage, ignore_errors=True)
-                    raise
-                try:
-                    with open(self._manifest_path(v), "x") as fh:
-                        fh.write(body)
-                        fh.flush()
-                        os.fsync(fh.fileno())
-                except FileExistsError as exc2:
-                    shutil.rmtree(stage, ignore_errors=True)
-                    raise CommitConflictError(
-                        f"table {self.path}: v{v} was claimed by another writer"
-                    ) from exc2
-                except BaseException:
-                    # a failure mid-write (e.g. ENOSPC) after the
-                    # exclusive create succeeded would leave a PARTIAL
-                    # v{N}.json claiming the version slot forever —
-                    # unparseable manifest, broken history()/time-travel
-                    # (r13 ADVICE).  Withdraw the claim before
-                    # re-raising so the slot stays contestable.
-                    try:
-                        os.unlink(self._manifest_path(v))
-                    except OSError:
-                        pass
-                    shutil.rmtree(stage, ignore_errors=True)
-                    raise
-            finally:
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-        else:
-            try:
-                os.rename(stage, self._version_dir(v))
-            except OSError as exc:
-                shutil.rmtree(stage, ignore_errors=True)
-                raise CommitConflictError(
-                    f"table {self.path}: v{v} was claimed by another writer"
-                ) from exc
+        try:
+            os.rename(stage, self._version_dir(v))
+        except OSError as exc:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise CommitConflictError(
+                f"table {self.path}: v{v} was claimed by another writer"
+            ) from exc
         # keep data for current + previous only (time-travel depth 1);
         # older versions tombstone in place.  Descending sweep from v-2
         # stops at the first already-pruned version (dense history ⇒
@@ -403,12 +266,9 @@ class MutableTable:
         still swept on that path), which is the publish sweep's stop
         signal.  Tombstones cost one
         directory entry per historical commit — the same growth as a
-        Delta log; at very large commit counts the manifest/log would be
+        Delta log; at very large commit counts the log would be
         checkpointed, out of scope here."""
-        try:
-            vdir = self._resolve_dir(v)
-        except (FileNotFoundError, json.JSONDecodeError, KeyError):
-            return False
+        vdir = self._version_dir(v)
         marker = os.path.join(vdir, "_pruned")
         if not os.path.isdir(vdir):
             return False
@@ -481,59 +341,20 @@ class MutableTable:
     def vacuum_stages(self, min_age_sec: float = 3600.0) -> int:
         """Sweep crashed writers' leftover staging dirs (the
         compact_small_files crash-leftover contract).  Age-gated so a
-        LIVE concurrent writer's stage is never yanked from under it.
-
-        Manifest arm: committed versions LIVE in their stage dirs, so
-        only stages no manifest references are sweepable — and because a
-        stage can BECOME committed after this sweep lists the committed
-        set (a CAS-retrying writer claiming late), the set is re-read
-        ONCE more after the age-eligible candidates are collected,
-        immediately before the deletion batch (r12 ADVICE: the earlier
-        per-candidate recheck re-parsed every manifest per candidate —
-        O(candidates × manifests) file I/O on long-history tables; one
-        batch recheck closes the same race at O(manifests)).  The writer
-        side cooperates: ``_publish`` re-stamps the stage's mtime just
-        before its claim, so a stage that is both older than
-        ``min_age_sec`` AND uncommitted at the recheck has no live
-        writer unless a single claim attempt itself outlasts the
-        threshold (the residual window is the utime→claim gap,
-        microseconds against a 1 h default — identical under either
-        recheck granularity).  Crash-leftover temp manifests
-        (``_commits/.m_*`` — written but never linked) are swept under
-        the same age gate."""
-        committed: set[str] = (
-            self._committed_stages() if self.commit_strategy == "manifest" else set()
-        )
+        LIVE concurrent writer's stage is never yanked from under it."""
         n = 0
         now = time.time()
-        candidates: list[str] = []
         for e in os.listdir(self.path):
-            if e.startswith(".stage_") and e not in committed:
-                try:
-                    if now - os.path.getmtime(os.path.join(self.path, e)) >= min_age_sec:
-                        candidates.append(e)
-                except OSError:
-                    continue
-        if candidates and self.commit_strategy == "manifest":
-            committed = self._committed_stages()  # one recheck for the batch
-        for e in candidates:
-            if e in committed:
-                continue  # claimed since the snapshot: live data
-            shutil.rmtree(os.path.join(self.path, e), ignore_errors=True)
-            n += 1
-        if self.commit_strategy == "manifest":
-            cdir = os.path.join(self.path, "_commits")
+            if not e.startswith(".stage_"):
+                continue
+            p = os.path.join(self.path, e)
             try:
-                for e in os.listdir(cdir):
-                    if e.startswith(".m_"):
-                        p = os.path.join(cdir, e)
-                        try:
-                            if now - os.path.getmtime(p) >= min_age_sec:
-                                os.remove(p)
-                        except OSError:
-                            continue
-            except FileNotFoundError:
-                pass
+                if now - os.path.getmtime(p) < min_age_sec:
+                    continue
+            except OSError:
+                continue
+            shutil.rmtree(p, ignore_errors=True)
+            n += 1
         return n
 
     def history(self) -> list[dict]:
@@ -546,37 +367,19 @@ class MutableTable:
         not the directory name — lexicographic order misplaces the first
         7-digit version (r11 ADVICE)."""
         out = []
-        if self.commit_strategy == "manifest":
-            versions = self._manifest_versions()
-        else:
-            versions = [
-                int(e[1:])
-                for e in os.listdir(self.path)
-                if re.fullmatch(r"v\d{6,}", e)
-            ]
-        for ver in sorted(versions, reverse=True):
-            try:
-                d = self._resolve_dir(ver)
-            except (FileNotFoundError, json.JSONDecodeError, KeyError):
-                d = self._version_dir(ver)
-            entry = {
-                "version": ver,
-                "ts": None,
-                "meta": {},
-                "schema_ops": [],
-                "pruned": os.path.exists(os.path.join(d, "_pruned")),
-            }
-            try:
-                with open(os.path.join(d, "_meta.json")) as fh:
-                    j = json.load(fh)
-                entry.update(
-                    ts=j.get("ts"),
-                    meta=j.get("meta", {}),
-                    schema_ops=j.get("schema_ops", []),
-                )
-            except (FileNotFoundError, json.JSONDecodeError):
-                pass
-            out.append(entry)
+        for ver in sorted(self._versions(), reverse=True):
+            rec = self._commit_record(ver)
+            out.append(
+                {
+                    "version": ver,
+                    "ts": rec.get("ts"),
+                    "meta": rec.get("meta", {}),
+                    "schema_ops": rec.get("schema_ops", []),
+                    "pruned": os.path.exists(
+                        os.path.join(self._version_dir(ver), "_pruned")
+                    ),
+                }
+            )
         return out
 
     def _commit(self, df: DataFrame, meta: dict | None = None) -> int:
@@ -596,18 +399,12 @@ class MutableTable:
         survivor set is empty are simply not written (partition drop)."""
         assert len(self.partition_by) == 1
         pcol = self.partition_by[0]
-        stage = self._new_stage()
-        os.makedirs(stage, exist_ok=True)
         touched_strs = {str(t) for t in touched_values}
-        base_dir = self._resolve_dir(base)
-        for entry in os.listdir(base_dir):
-            if entry.startswith(f"{pcol}="):
-                if entry.split("=", 1)[1] not in touched_strs:
-                    shutil.copytree(
-                        os.path.join(base_dir, entry),
-                        os.path.join(stage, entry),
-                        copy_function=os.link,  # refcounted, no data copy
-                    )
+        stage = self._link_stage(
+            base,
+            lambda e: e.startswith(f"{pcol}=")
+            and e.split("=", 1)[1] not in touched_strs,
+        )
         if touched_strs:
             touched_survivors.write.mode("append").partitionBy(pcol).parquet(stage)
         self._staged_schema = touched_survivors.schema.json()
@@ -626,23 +423,21 @@ class MutableTable:
         v = self.current_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"table {self.path} has no committed version")
-        if os.path.exists(os.path.join(self._resolve_dir(v), "_pruned")):
+        vdir = self._version_dir(v)
+        if os.path.exists(os.path.join(vdir, "_pruned")):
             raise FileNotFoundError(
                 f"table {self.path}: v{v} has been pruned (time-travel depth 1)"
             )
         ops = self._schema_ops(v) if _ops is None else _ops
         try:
             if not ops:
-                return self.spark.read.parquet(self._resolve_dir(v))
-            df = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(self._resolve_dir(v))
-            )
+                return self.spark.read.parquet(vdir)
+            df = self.spark.read.option("mergeSchema", "true").parquet(vdir)
         except AnalysisException:
             # zero data files (an EMPTY partitioned relation writes no
             # parquet at all, so there is nothing to infer from) — fall
             # back to the schema recorded at commit time (r15)
-            sj = self._schema_json_at(v)
+            sj = self._commit_record(v).get("schema_json")
             if sj is None:
                 raise
             from pyspark.sql.types import StructType
@@ -654,17 +449,6 @@ class MutableTable:
             # cumulative ops keeps an empty EVOLVED table consistent
             return self._reconcile(empty, ops) if ops else empty
         return self._reconcile(df, ops) if ops else df
-
-    def _schema_json_at(self, v: int | None) -> str | None:
-        """The relation schema recorded by the commit (``schema_json`` in
-        ``_meta.json``) — the empty-table read fallback."""
-        if v is None:
-            return None
-        try:
-            with open(os.path.join(self._resolve_dir(v), "_meta.json")) as fh:
-                return json.load(fh).get("schema_json")
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
 
     @staticmethod
     def _reconcile(df: DataFrame, ops: list[dict]) -> DataFrame:
@@ -813,19 +597,7 @@ class MutableTable:
                 )  # base ops already applied by read
                 return self._stage_df(df), None
             # metadata-only: hardlink every data entry of the base version
-            stage = self._new_stage()
-            os.makedirs(stage, exist_ok=True)
-            base_dir = self._resolve_dir(base)
-            for entry in os.listdir(base_dir):
-                if entry == "_meta.json":
-                    continue
-                src = os.path.join(base_dir, entry)
-                dst = os.path.join(stage, entry)
-                if os.path.isdir(src):
-                    shutil.copytree(src, dst, copy_function=os.link)
-                else:
-                    os.link(src, dst)
-            return stage, None
+            return self._link_stage(base, lambda e: e != "_meta.json"), None
 
         def enriched_ops(base):
             # add-with-default ops record the base version's data-file
@@ -879,10 +651,7 @@ class MutableTable:
         def build(base):
             return self._stage_df(fn(self.read())), None
 
-        def merged_meta(base):
-            return {**self._meta_at(base), **(meta or {})}
-
-        return self._mutate(build, meta=merged_meta)
+        return self._mutate(build, meta=self._carried_meta(meta))
 
     def append(self, batch: DataFrame, meta: dict | None = None) -> int:
         """TRUE append commit (r15): the new version hardlinks every data
@@ -912,28 +681,14 @@ class MutableTable:
                     )
             return self._stage_append(base, batch), None
 
-        def merged_meta(base):
-            return {**self._meta_at(base), **(meta or {})}
-
-        return self._mutate(build, meta=merged_meta)
+        return self._mutate(build, meta=self._carried_meta(meta))
 
     def _stage_append(self, base: int | None, batch: DataFrame) -> str:
         """Append staging: hardlink the base version's data files, write
         only ``batch``'s files beside them."""
-        stage = self._new_stage()
-        os.makedirs(stage, exist_ok=True)
-        if base is not None:
-            base_dir = self._resolve_dir(base)
-            for entry in os.listdir(base_dir):
-                src = os.path.join(base_dir, entry)
-                if entry.endswith(".parquet"):
-                    os.link(src, os.path.join(stage, entry))
-                elif os.path.isdir(src) and "=" in entry:
-                    shutil.copytree(
-                        src,
-                        os.path.join(stage, entry),
-                        copy_function=os.link,  # refcounted, no data copy
-                    )
+        stage = self._link_stage(
+            base, lambda e: e.endswith(".parquet") or "=" in e
+        )
         writer = batch.write.mode("append")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
@@ -980,10 +735,7 @@ class MutableTable:
             stage = self._stage_partition_scoped(base, fn(scoped), touched)
             return stage, None
 
-        def merged_meta(base):
-            return {**self._meta_at(base), **(meta or {})}
-
-        return self._mutate(build, meta=merged_meta)
+        return self._mutate(build, meta=self._carried_meta(meta))
 
     def compact(
         self,

@@ -12,7 +12,7 @@ from qcfractal_spark.sources.table import MutableTable
 
 
 def _data_inodes(t, version):
-    base = t._resolve_dir(version)
+    base = t._version_dir(version)
     out = {}
     for root, _, files in os.walk(base):
         for f in files:
@@ -72,7 +72,7 @@ def test_concurrent_appends_lose_no_batch(spark, tmp_path):
     tests pin, here for raw append)."""
     import threading
 
-    t = MutableTable(spark, str(tmp_path / "c"), commit_strategy="manifest")
+    t = MutableTable(spark, str(tmp_path / "c"))
     t.overwrite(spark.createDataFrame([(0, "seed")], "id long, v string"))
     errs = []
 

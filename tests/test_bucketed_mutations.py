@@ -24,7 +24,7 @@ def _ptable(spark, tmp_path):
 
 
 def _part_inodes(t, version):
-    base = t._resolve_dir(version)
+    base = t._version_dir(version)
     out = {}
     for entry in sorted(os.listdir(base)):
         if entry.startswith("b="):
@@ -136,7 +136,7 @@ def test_bucketed_cancel_touches_only_id_buckets(spark, tmp_path):
     bkt = RecordStatusTable(spark, str(tmp_path / "b2"), n_buckets=8)
     bkt.init(_records(spark))
     v0 = bkt.records.current_version()
-    base = bkt.records._resolve_dir(v0)
+    base = bkt.records._version_dir(v0)
     inodes0 = {
         e: sorted(
             os.stat(os.path.join(base, e, f)).st_ino
@@ -149,7 +149,7 @@ def test_bucketed_cancel_touches_only_id_buckets(spark, tmp_path):
     # ids 8 and 16 both live in bucket 0: exactly one bucket rewritten
     bkt.cancel([8, 16])
     v1 = bkt.records.current_version()
-    cur = bkt.records._resolve_dir(v1)
+    cur = bkt.records._version_dir(v1)
     inodes1 = {
         e: sorted(
             os.stat(os.path.join(cur, e, f)).st_ino

@@ -4,7 +4,6 @@ version swap atomicity)."""
 
 from __future__ import annotations
 
-import json
 import os
 import tempfile
 from datetime import datetime
@@ -477,6 +476,7 @@ def test_threaded_writers_no_lost_update(spark, tmp_path):
     assert errors == []
     rows = {r["id"]: r["v"] for r in seed.read().collect()}
     assert rows == {0: "seed", 1: "w1", 2: "w2", 3: "w3", 4: "w4"}
+    assert seed.current_version() == 4  # dense serial order, no lost update
 
 
 def test_vacuum_stages_sweeps_only_old(spark, tmp_path):
@@ -541,169 +541,6 @@ def test_seven_digit_versions_are_visible(spark, tmp_path):
     assert [e["version"] for e in t.history()] == [1000000, 999999]
 
 
-# -- S3-safe manifest claim strategy (VERDICT r11 item 1) ---------------------
-
-
-def test_manifest_claim_two_writers_race_one_wins_renameless(spark, tmp_path):
-    """The manifest strategy's claim is an exclusive create (put-if-absent
-    — S3's conditional PUT), NOT a rename: with os.rename forbidden
-    entirely (the rename-less mock FS), two writers racing the same base
-    version produce exactly one winner and one CommitConflictError, and
-    the winner's data is what reads back."""
-    import threading
-
-    from qcfractal_spark.sources import table as table_mod
-    from qcfractal_spark.sources.table import CommitConflictError
-
-    t = MutableTable(spark, str(tmp_path / "mrace"), commit_strategy="manifest")
-    t.overwrite(spark.createDataFrame([(0, "seed")], "id long, v string"))
-    base = t.current_version()
-    stages = [
-        t._stage_df(spark.createDataFrame([(i, f"w{i}")], "id long, v string"))
-        for i in (1, 2)
-    ]
-
-    def no_rename(*a, **k):
-        raise AssertionError("os.rename must not be used by the manifest claim")
-
-    results: list = [None, None]
-    barrier = threading.Barrier(2)
-
-    def run(i):
-        barrier.wait()
-        try:
-            results[i] = ("ok", t._publish(stages[i], base))
-        except CommitConflictError as e:
-            results[i] = ("conflict", e)
-
-    orig = table_mod.os.rename
-    table_mod.os.rename = no_rename
-    try:
-        threads = [threading.Thread(target=run, args=(i,)) for i in (0, 1)]
-        for th in threads:
-            th.start()
-        for th in threads:
-            th.join()
-    finally:
-        table_mod.os.rename = orig
-
-    outcomes = sorted(r[0] for r in results)
-    assert outcomes == ["conflict", "ok"], results
-    winner = [i for i in (0, 1) if results[i][0] == "ok"][0]
-    assert {r["v"] for r in t.read().collect()} == {f"w{winner + 1}"}
-    # the loser's stage was cleaned up; the winner's stage IS the data dir
-    assert t.current_version() == base + 1
-
-
-def test_manifest_threaded_mutations_no_lost_update(spark, tmp_path):
-    """Four concurrent insert_dedup writers on a manifest-strategy table:
-    the CAS retry loop serializes them — all rows survive, versions are
-    dense, and no v%06d directory is ever created."""
-    import os
-    import threading
-
-    t = MutableTable(spark, str(tmp_path / "mthread"), commit_strategy="manifest")
-    t.overwrite(spark.createDataFrame([(0, "seed")], "id long, v string"))
-    errs: list = []
-    barrier = threading.Barrier(4)
-
-    def writer(i):
-        w = MutableTable(spark, t.path, commit_strategy="manifest")
-        barrier.wait()
-        try:
-            w.insert_dedup(
-                spark.createDataFrame([(i + 1, f"w{i}")], "id long, v string"),
-                ["id"],
-            )
-        except Exception as e:  # noqa: BLE001
-            errs.append(e)
-
-    threads = [threading.Thread(target=writer, args=(i,)) for i in range(4)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert errs == []
-    assert {r["id"] for r in t.read().collect()} == {0, 1, 2, 3, 4}
-    assert t.current_version() == 4  # dense serial order, no lost update
-    assert not any(
-        e.startswith("v") and e[1:].isdigit() for e in os.listdir(t.path)
-    )
-
-
-def test_manifest_time_travel_prune_and_vacuum(spark, tmp_path):
-    """Manifest arm keeps the full commit history in _commits (Delta-log
-    growth), prunes data to depth 1, never re-claims a version number,
-    and vacuum never sweeps a committed stage dir."""
-    t = MutableTable(spark, str(tmp_path / "mttl"), commit_strategy="manifest")
-    for i in range(4):
-        t.overwrite(spark.createDataFrame([(i,)], "id long"))
-    assert [e["version"] for e in t.history()] == [3, 2, 1, 0]
-    assert [e["pruned"] for e in t.history()] == [False, False, True, True]
-    assert {r["id"] for r in t.read(version=2).collect()} == {2}
-    with pytest.raises(FileNotFoundError):
-        t.read(version=0)
-    assert t.vacuum_stages(min_age_sec=0.0) == 0  # committed stages kept
-    assert {r["id"] for r in t.read().collect()} == {3}
-
-
-def test_manifest_claim_is_visible_iff_complete(spark, tmp_path):
-    """The manifest claim is an atomic link of a FULLY-WRITTEN body —
-    there is no window where a claimed-but-partial manifest exists, and
-    a crash before the link (a leftover .m_ temp) is invisible to
-    current_version()/read() and swept by vacuum."""
-    t = MutableTable(spark, str(tmp_path / "mcl"), commit_strategy="manifest")
-    t.overwrite(spark.createDataFrame([(1,)], "id long"))
-    cdir = os.path.join(t.path, "_commits")
-    # every visible manifest parses and names an existing stage
-    for e in os.listdir(cdir):
-        if e.startswith("v"):
-            with open(os.path.join(cdir, e)) as fh:
-                m = json.load(fh)
-            assert os.path.isdir(os.path.join(t.path, m["stage"]))
-    # simulate a writer that crashed between temp-write and link
-    orphan = os.path.join(cdir, ".m_dead_writer")
-    with open(orphan, "w") as fh:
-        fh.write('{"version": 99, "stage": ".stage_gone"}')
-    assert t.current_version() == 0  # temp is not a commit
-    assert {r["id"] for r in t.read().collect()} == {1}
-    os.utime(orphan, (0, 0))  # age it past any threshold
-    t.vacuum_stages(min_age_sec=1.0)
-    assert not os.path.exists(orphan)  # crash leftovers are swept
-
-
-def test_vacuum_rechecks_commit_status_before_delete(spark, tmp_path):
-    """A stage that becomes COMMITTED between the vacuum's committed-set
-    snapshot and the deletion must survive: the sweep re-reads the
-    committed set immediately before each rmtree (without the recheck, a
-    slow CAS-retrying writer's claim could land after the snapshot and
-    the sweep would destroy the live data of a committed version)."""
-    t = MutableTable(spark, str(tmp_path / "mvr"), commit_strategy="manifest")
-    t.overwrite(spark.createDataFrame([(1,)], "id long"))
-    live_stage = os.path.basename(t._resolve_dir(t.current_version()))
-    # backdate the committed stage so the age gate alone would delete it
-    os.utime(os.path.join(t.path, live_stage), (0, 0))
-
-    # simulate the late-claim race: the snapshot call sees an EMPTY
-    # committed set, the per-candidate recheck sees the truth
-    calls = {"n": 0}
-    orig = MutableTable._committed_stages
-
-    def racy(self):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            return set()  # the stale snapshot
-        return orig(self)
-
-    MutableTable._committed_stages = racy
-    try:
-        t.vacuum_stages(min_age_sec=1.0)
-    finally:
-        MutableTable._committed_stages = orig
-    assert calls["n"] >= 2  # the recheck actually ran
-    assert {r["id"] for r in t.read().collect()} == {1}  # data survived
-
-
 def test_prune_crash_window_keeps_documented_error(spark, tmp_path):
     """_prune writes the tombstone marker BEFORE deleting data, so a
     crash mid-delete presents the documented 'has been pruned'
@@ -714,7 +551,7 @@ def test_prune_crash_window_keeps_documented_error(spark, tmp_path):
     for i in range(2):
         t.overwrite(spark.createDataFrame([(i,)], "id long"))
     # simulate a prune that crashed after the marker, before the delete:
-    vdir = t._resolve_dir(0)
+    vdir = t._version_dir(0)
     with open(os.path.join(vdir, "_pruned"), "w"):
         pass
     assert any(e not in ("_meta.json", "_pruned") for e in os.listdir(vdir))
@@ -724,105 +561,3 @@ def test_prune_crash_window_keeps_documented_error(spark, tmp_path):
     assert t._prune(0) is False
     assert sorted(os.listdir(vdir)) == ["_meta.json", "_pruned"]
     assert [e["pruned"] for e in t.history()] == [False, True]
-
-
-def test_manifest_claim_falls_back_without_hardlinks(spark, tmp_path):
-    """r12 ADVICE: on filesystems without hard links (some network/FUSE
-    mounts) link(2) raises EPERM/ENOTSUP — the manifest claim must fall
-    back to the exclusive-create ('x') put-if-absent instead of
-    surfacing a bare OSError, and the fallback claim must still lose
-    cleanly (CommitConflictError) when the version is already taken."""
-    import errno as _errno
-
-    from qcfractal_spark.sources import table as table_mod
-    from qcfractal_spark.sources.table import CommitConflictError
-
-    t = MutableTable(spark, str(tmp_path / "mnolink"), commit_strategy="manifest")
-
-    def no_link(*a, **k):
-        raise OSError(_errno.EPERM, "Operation not permitted")
-
-    orig = table_mod.os.link
-    table_mod.os.link = no_link
-    try:
-        t.overwrite(spark.createDataFrame([(1, "a")], "id long, v string"))
-        t.overwrite(spark.createDataFrame([(2, "b")], "id long, v string"))
-        assert t.current_version() == 1
-        assert {r["v"] for r in t.read().collect()} == {"b"}
-        # no crash-leftover temp manifests accumulate under the fallback
-        leftovers = [
-            e
-            for e in os.listdir(os.path.join(t.path, "_commits"))
-            if e.startswith(".m_")
-        ]
-        assert leftovers == []
-        # a stale claim of an already-taken version still conflicts
-        stage = t._stage_df(spark.createDataFrame([(3, "c")], "id long, v string"))
-        with pytest.raises(CommitConflictError):
-            t._publish(stage, base=0)  # v1 already claimed
-        assert {r["v"] for r in t.read().collect()} == {"b"}
-    finally:
-        table_mod.os.link = orig
-
-    # an UNRELATED OSError from link(2) must still surface, not be
-    # silently downgraded to the fallback
-    def eio_link(*a, **k):
-        raise OSError(_errno.EIO, "I/O error")
-
-    table_mod.os.link = eio_link
-    try:
-        with pytest.raises(OSError) as ei:
-            t.overwrite(spark.createDataFrame([(4, "d")], "id long, v string"))
-        assert ei.value.errno == _errno.EIO
-    finally:
-        table_mod.os.link = orig
-
-
-def test_fallback_write_failure_does_not_poison_version_slot(spark, tmp_path):
-    """r13 ADVICE: in the link-less fallback, a write failure AFTER the
-    exclusive create succeeded (e.g. ENOSPC mid-write) used to leave a
-    partial v{N}.json permanently claiming the slot with an unparseable
-    manifest.  The failed claim must be withdrawn: the error surfaces,
-    history() still parses, and the SAME version number is retaken by
-    the next commit."""
-    import errno as _errno
-
-    from qcfractal_spark.sources import table as table_mod
-
-    t = MutableTable(spark, str(tmp_path / "mnospc"), commit_strategy="manifest")
-    t.overwrite(spark.createDataFrame([(1, "a")], "id long, v string"))
-    assert t.current_version() == 0
-
-    def no_link(*a, **k):
-        raise OSError(_errno.EPERM, "Operation not permitted")
-
-    real_fsync = table_mod.os.fsync
-    calls = {"n": 0}
-
-    def enospc_on_fallback_fsync(fd):
-        # call #1 is the tmp-file write of the primary path; call #2 is
-        # the fallback manifest write — fail there, mid-claim
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError(_errno.ENOSPC, "No space left on device")
-        return real_fsync(fd)
-
-    orig_link = table_mod.os.link
-    table_mod.os.link = no_link
-    table_mod.os.fsync = enospc_on_fallback_fsync
-    try:
-        with pytest.raises(OSError) as ei:
-            t.overwrite(spark.createDataFrame([(2, "b")], "id long, v string"))
-        assert ei.value.errno == _errno.ENOSPC
-    finally:
-        table_mod.os.fsync = real_fsync
-        table_mod.os.link = orig_link
-
-    # the slot was withdrawn: no partial manifest, history parses, and
-    # v1 is claimed by the NEXT commit instead of being poisoned
-    assert not os.path.exists(t._manifest_path(1))
-    assert t.current_version() == 0
-    assert [h["version"] for h in t.history()] == [0]
-    t.overwrite(spark.createDataFrame([(3, "c")], "id long, v string"))
-    assert t.current_version() == 1
-    assert {r["v"] for r in t.read().collect()} == {"c"}

@@ -155,6 +155,31 @@ def test_drop_column_is_metadata_only(spark, tmp_path):
         t.evolve([{"op": "drop", "name": "n"}])  # already dropped
 
 
+def test_metadata_only_evolve_links_every_partition_file(spark, tmp_path):
+    """A metadata-only evolve on a partitioned table hardlinks every data
+    file of every partition directory: the recursive inode sets of the
+    base and the new version are equal (no file copied, none dropped)."""
+
+    def inodes(vdir):
+        return {
+            os.stat(p).st_ino
+            for p in glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
+        }
+
+    t = MutableTable(spark, str(tmp_path / "pevo"), partition_by=["b"])
+    t.overwrite(
+        spark.createDataFrame(
+            [(i, f"v{i}", i % 3) for i in range(12)], "id long, v string, b int"
+        )
+    )
+    before = inodes(t._version_dir(0))
+    assert len(before) >= 3  # one file per partition at least
+    t.evolve([{"op": "add", "name": "tier", "dtype": "string", "default": "std"}])
+    assert inodes(t._version_dir(1)) == before
+    assert {r["tier"] for r in t.read().collect()} == {"std"}
+    assert t.read().count() == 12
+
+
 def test_history_reports_versions_and_ops(spark, tmp_path):
     t = _seed(spark, tmp_path, "hist")
     t.evolve([{"op": "add", "name": "tier", "dtype": "string", "default": "std"}])

@@ -72,7 +72,7 @@ def _records_df(spark, sf_dir):
 
 
 def _bucket_inodes(table):
-    base = table._resolve_dir(table.current_version())
+    base = table._version_dir(table.current_version())
     out = {}
     for e in os.listdir(base):
         if e.startswith("_bucket="):
